@@ -147,18 +147,13 @@ def timed_build(spark, specs, name: str, sf_dir: str) -> float:
     """ONE full-plan timed execution — the single timing core shared by
     bench.py (in-session numbers) and scripts/pin_standalone.py
     (standalone pins), so the two contexts BASELINE.md declares
-    methodologically comparable cannot drift apart (same materialization,
-    same spill-reuse reset). Resetting spill reuse first means every
-    sample executes its keyed-spill producer stage: without it, passes
-    2+ of a spill-backed query would serve pass 1's parquet dir and a
-    producer-stage regression would masquerade as a pass-1 contention
-    outlier.
+    methodologically comparable cannot drift apart (same materialization).
+    Every build writes its spills and scratch artifacts to fresh paths, so
+    every sample executes its producer stages: passes 2+ of a spill-backed
+    query time the same work as pass 1.
     """
     import time as _time
 
-    from xgboost_ray_spark.operators.dedup import reset_spill_reuse
-
-    reset_spill_reuse()
     t0 = _time.perf_counter()
     df = specs[name].build(spark, sf_dir)
     # Force full execution without driver materialization overhead.

@@ -53,7 +53,6 @@ def main() -> None:
         dedup.fan_out = fn
         text.fan_out = fn
         for name in names:
-            dedup.reset_spill_reuse()
             df = specs[name].build(spark, sf_dir)
             plan = df._sc._jvm.PythonSQLUtils.explainString(
                 df._jdf.queryExecution(), "formatted"

@@ -27,7 +27,6 @@ def main() -> None:
     names = sys.argv[2:] or HEADLINE
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-    from xgboost_ray_spark.operators.dedup import reset_spill_reuse
     from xgboost_ray_spark.registry import all_queries
     from xgboost_ray_spark.session import get_spark
 
@@ -40,7 +39,6 @@ def main() -> None:
     )
     os.makedirs(out_dir, exist_ok=True)
     for name in names:
-        reset_spill_reuse()
         spark.sparkContext.setJobDescription(f"capture:{name}")
         df = specs[name].build(spark, sf_dir)
         plan = df._sc._jvm.PythonSQLUtils.explainString(

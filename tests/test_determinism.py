@@ -115,13 +115,8 @@ def test_result_invariant_under_config_perturbation(spark, name):
     spec = all_queries()[name]
 
     def run():
-        # Force keyed-spill producers to re-execute under the CURRENT
-        # session config: with reuse active, a perturbed rebuild would
-        # read the baseline config's spilled bytes and the sweep would
-        # never exercise the producer subtree under perturbation.
-        from xgboost_ray_spark.operators.dedup import reset_spill_reuse
-
-        reset_spill_reuse()
+        # Every build re-runs its spill producers (fresh scratch paths), so
+        # each perturbed rebuild exercises the producer subtree too.
         return normalize_frame(spec.build(spark, SF_SMOKE).toPandas())
 
     baseline = run()

@@ -960,7 +960,7 @@ def test_prefix_filter_doc_size_rides_ranking_window(spark):
     plan = df._jdf.queryExecution().executedPlan().toString()
     final = plan.split("== Initial Plan ==")[0]  # the adaptive final plan
     n_spill_scans = len(
-        re.findall(r"Scan parquet[^\n]*spill_ppjoin_shingles", final)
+        re.findall(r"Scan parquet[^\n]*/ppjoin_shingles_\d", final)
     )
     assert n_spill_scans <= 3, (
         f"shingle spill scanned {n_spill_scans}x — the doc-size count "
@@ -983,7 +983,7 @@ def test_prefix_filter_join_reads_materialized_pref_and_toks(spark):
     df = _build(spark, "s26l_prefix_filter_join")
     plan = formatted_plan(df)
     scans = {
-        tag: len(re.findall(rf"spill_ppjoin_{tag}_", plan))
+        tag: len(re.findall(rf"/ppjoin_{tag}_\d", plan))
         for tag in ("shingles", "pref", "toks", "dfreq")
     }
     assert scans["shingles"] == 0, (

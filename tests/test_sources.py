@@ -233,27 +233,29 @@ def test_compaction_reduces_file_count_without_shuffle(spark):
     import os
 
     from tests.conftest import SF_SMOKE
-    from xgboost_ray_spark.operators.dedup import scratch_once
     from xgboost_ray_spark.operators.relational import (
         COMPACT_SMALL_FILES,
         COMPACT_TARGET_FILES,
     )
     from xgboost_ray_spark.registry import all_queries
 
-    all_queries()["s01e_compaction"].build(spark, SF_SMOKE).collect()
-    # The builder's scratch dirs live under the keyed write-once contract
-    # (spill_<tag>_<md5(key)[:12]>), so the test derives the SAME paths
-    # via scratch_once with the builder's exact layout key — a stale
-    # unkeyed glob here passed for months on a leftover pre-r7 artifact
-    # and broke the day that dir was swept.
-    layout_key = (
-        f"{os.path.abspath(SF_SMOKE)}"
-        f"|files={COMPACT_SMALL_FILES}->{COMPACT_TARGET_FILES}"
+    df = all_queries()["s01e_compaction"].build(spark, SF_SMOKE)
+    df.collect()
+    # Artifact paths come from the built frame, never from a derived key:
+    # the compacted dir is what the frame reads, and the fragmented copy
+    # is its docs_fragmented_* sibling in the same scratch root.
+    comp_dirs = {os.path.dirname(f.removeprefix("file:")) for f in df.inputFiles()}
+    assert len(comp_dirs) == 1
+    comp_dir = comp_dirs.pop()
+    assert os.path.basename(comp_dir).startswith("docs_compacted_")
+    frag_dirs = glob.glob(
+        os.path.join(os.path.dirname(comp_dir), "docs_fragmented_*")
     )
-    frag_dir, frag_fresh = scratch_once("docs_fragmented", layout_key)
-    comp_dir, comp_fresh = scratch_once("docs_compacted", layout_key)
-    assert not frag_fresh and not comp_fresh, (
-        "the build above must have written these exact keyed paths"
+    # The fragmented copy written by THIS build: the newest sibling made
+    # before the compacted dir.
+    seq = lambda d: int(d.rsplit("_", 1)[1])  # noqa: E731
+    frag_dir = max(
+        (d for d in frag_dirs if seq(d) < seq(comp_dir)), key=seq
     )
     frag = glob.glob(os.path.join(frag_dir, "part-*.parquet"))
     comp = glob.glob(os.path.join(comp_dir, "part-*.parquet"))

@@ -9,8 +9,12 @@ parquet row-group skips, not driver-side filtering.
 
 from __future__ import annotations
 
+import atexit
+import itertools
 import os
-import time
+import shutil
+import tempfile
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -37,129 +41,72 @@ SCRATCH_DIR = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch"
 )
 
-# Epoch for scratch garbage collection: anything under SCRATCH_DIR whose
-# mtime predates this process belongs to a finished session and can go.
-_SESSION_EPOCH = time.time()
+_SCRATCH_LOCK = threading.Lock()
+_SCRATCH_ROOT: str | None = None
+_SCRATCH_SEQ = itertools.count()
 _SCRATCH_SWEPT = False
 
-# Grace window for the sweep: a dir younger than this is NOT garbage even
-# if it predates this process, because the session that wrote it may still
-# be running beside us — a subprocess that builds a registered query
-# (tests/test_foreign_cwd.py, a driver run, pin_standalone.py) starts
-# seconds after its parent wrote spills, and epoch-only GC deleted the
-# parent's dirs out from under its live readers. Stale dirs the sweep
-# exists for are hours-to-days old, so an hour of grace costs nothing and
-# closes the concurrent-process race (plus the TOCTOU between spill()'s
-# isdir reuse check and the consumer's read). The grace window alone
-# still reaped a LONG-lived concurrent session's early spills (older
-# than the window but still live), so spill() also stamps each dir with
-# an ``.owner_pid`` marker and the sweep skips dirs whose owner process
-# is still running — liveness, not age, is the real criterion; mtime +
-# grace remains the fallback for dirs without a marker.
-SWEEP_GRACE_SEC = 3600.0
+
+def scratch_path(tag: str) -> str:
+    """A path no build has used before: ``<root>/<tag>_<n>``.
+
+    Every scratch artifact (spills, layout round trips) is written once
+    to a fresh path and never overwritten, so a frame built earlier keeps
+    reading the files it listed however many later builds run. The root
+    is one ``spill_<pid>_*`` dir per process under ``SCRATCH_DIR``,
+    removed at exit; :func:`sweep_scratch` removes the roots of processes
+    that died without exiting cleanly. Safe to call from several threads:
+    the counter is shared and the root is made once under a lock.
+    """
+    global _SCRATCH_ROOT
+    with _SCRATCH_LOCK:
+        if _SCRATCH_ROOT is None:
+            os.makedirs(SCRATCH_DIR, exist_ok=True)
+            _SCRATCH_ROOT = tempfile.mkdtemp(
+                prefix=f"spill_{os.getpid()}_", dir=SCRATCH_DIR
+            )
+            atexit.register(shutil.rmtree, _SCRATCH_ROOT, ignore_errors=True)
+        return os.path.join(_SCRATCH_ROOT, f"{tag}_{next(_SCRATCH_SEQ)}")
 
 
-def _proc_start_ticks(pid: int) -> int | None:
-    """Process start time in clock ticks since boot (``/proc/<pid>/stat``
-    field 22) — the kernel's per-boot process identity alongside the pid,
-    so a recycled pid is distinguishable from the original owner. None
-    where /proc is absent (non-Linux) or unreadable."""
-    try:
-        with open(f"/proc/{pid}/stat", "rb") as fh:
-            data = fh.read()
-        # comm (field 2) may contain spaces/parens; fields resume after
-        # the LAST ')'. rest[0] is state (field 3), so field 22 is
-        # rest[19].
-        rest = data[data.rindex(b")") + 2:].split()
-        return int(rest[19])
-    except (OSError, ValueError, IndexError):
-        return None
-
-
-def _spill_owner_alive(path: str) -> bool:
-    """True if the ``.owner_pid`` marker inside a spill dir names a
-    process that is still running (written by ``dedup.spill``). A dead,
-    missing, or unreadable marker returns False — the mtime rules then
-    decide.
-
-    Markers carry ``pid start_ticks`` so a recycled pid does not
-    masquerade as the owner: without the start-time check, a pid recycled
-    to a long-lived daemon would keep the dead session's garbage alive
-    for as long as that daemon runs, not "one extra sweep". Pid-only
-    markers (pre-r7 layouts, non-Linux writers) fall back to bare
-    ``os.kill(pid, 0)`` liveness."""
-    try:
-        with open(os.path.join(path, ".owner_pid")) as fh:
-            parts = fh.read().split()
-        pid = int(parts[0])
-        recorded_ticks = int(parts[1]) if len(parts) > 1 else None
-    except (OSError, ValueError, IndexError):
-        return False
-    if pid <= 0:
-        return False
-    if recorded_ticks is not None:
-        current = _proc_start_ticks(pid)
-        if current is not None:
-            # Same pid + same per-boot start time == same process. A
-            # mismatch means the owner died and the pid was recycled.
-            return current == recorded_ticks
+def _pid_alive(pid: int) -> bool:
     try:
         os.kill(pid, 0)
     except ProcessLookupError:
         return False
     except PermissionError:
         return True  # exists, owned by another user
-    except OSError:
-        return False
     return True
 
 
 def sweep_scratch() -> int:
-    """Garbage-collect spill directories left behind by earlier sessions.
+    """Remove every ``spill_*`` entry under ``SCRATCH_DIR`` except the
+    roots of live processes; returns how many went.
 
-    ``spill()`` materializes multiply-consumed intermediates under
-    ``SCRATCH_DIR/spill_*``; keys are stable within a session (input path +
-    operator params), so a session's footprint is bounded — but nothing in
-    a session can know when a *previous* session's lazily-evaluated readers
-    are gone. This sweep runs once per process (from
-    ``registry.prepare_session``) and removes every ``spill_*`` entry
-    whose owner process (``.owner_pid`` marker) is no longer running AND
-    whose mtime predates this process AND is older than
-    ``SWEEP_GRACE_SEC``. The liveness check is the real criterion — a
-    long-lived concurrent session's early spills are older than any
-    fixed grace window but must survive a freshly started subprocess's
-    sweep; mtime + grace is the fallback for marker-less dirs (pre-r7
-    layouts, failed marker writes), where a young dir may still belong
-    to a concurrently running session (a test/driver/pin subprocess
-    starts seconds after its parent spilled — epoch-only GC broke the
-    parent's live readers mid-suite).
+    A ``spill_<pid>_*`` root whose pid is running belongs to a live
+    session (this one, or a concurrent test/driver process) and stays.
+    Everything else is garbage: roots of processes that were killed
+    before their exit hook ran, and dirs of the old keyed layout
+    (``spill_<tag>_<digest>``). Runs once per process, from
+    ``registry.prepare_session``.
     """
     global _SCRATCH_SWEPT
     if _SCRATCH_SWEPT:
         return 0
     _SCRATCH_SWEPT = True
-    import shutil
-
-    removed = 0
     try:
         entries = os.listdir(SCRATCH_DIR)
     except FileNotFoundError:
         return 0
+    removed = 0
     for name in entries:
         if not name.startswith("spill_"):
             continue
-        path = os.path.join(SCRATCH_DIR, name)
-        try:
-            mtime = os.path.getmtime(path)
-            if (
-                mtime < _SESSION_EPOCH
-                and time.time() - mtime > SWEEP_GRACE_SEC
-                and not _spill_owner_alive(path)
-            ):
-                shutil.rmtree(path, ignore_errors=True)
-                removed += 1
-        except OSError:
+        owner = name.split("_")[1]
+        if owner.isdigit() and _pid_alive(int(owner)):
             continue
+        shutil.rmtree(os.path.join(SCRATCH_DIR, name), ignore_errors=True)
+        removed += 1
     return removed
 
 

@@ -22,246 +22,34 @@ the 100TB path.
 
 from __future__ import annotations
 
-import hashlib
 import itertools
-import os
 from fractions import Fraction as _Fraction
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from xgboost_ray_spark.catalog import SCRATCH_DIR, load_table
+from xgboost_ray_spark.catalog import load_table, scratch_path
 from xgboost_ray_spark.registry import register
 
 
-def spill(df: DataFrame, tag: str, key: str | None = None) -> DataFrame:
+def spill(df: DataFrame, tag: str) -> DataFrame:
     """Materialize a multiply-consumed frame to scratch parquet and read it
     back. Contrast ``persist()``: Spark's CacheManager shares cache entries
     by canonical plan across repeated builds of the same query, so a
     persisted intermediate stays in executor memory for the session with
     no way for a harness to evict it per run. The spill is a plain parquet
-    dir: each consumer reads a plain scan, a keyed path is written once
-    per process and REUSED by later builds (see below), and harnesses that
-    need rebuilds to re-execute the producer subtree — bench timing,
-    the config-perturbation determinism sweep — call
-    :func:`reset_spill_reuse` before each build to force a rewrite.
+    dir, so each consumer reads a plain scan and the planner sees the
+    file's real size.
 
-    The path must differ across *different inputs* (interleaved builds over
-    two sf dirs must not overwrite a spill another lazily-evaluated result
-    still reads) but stay *stable across rebuilds of the same query*, or
-    bench loops and determinism sweeps grow scratch without bound. Pass
-    ``key`` = input path + operator params (registered builders do); the
-    fallback for arbitrary frames hashes the analyzed plan, which is unique
-    per input but ALSO per build (expression IDs differ), so keyless spills
-    are bounded only by :func:`catalog.sweep_scratch`'s cross-session GC.
-
-    A path spilled earlier in THIS process is reused, not rewritten: the
-    key determines the content, and two operators sharing a (tag, key) —
-    e.g. the s26d/s26g shingle frame — would otherwise overwrite a parquet
-    dir whose old part-file listing a previously built frame's reader has
-    already captured, breaking that frame with FILE_NOT_EXIST on collect.
-    Reuse also saves the redundant write in bench rebuild loops. Stale
-    dirs from PRIOR processes are still rewritten (never in
-    ``_SPILLED_PATHS``), so an operator-code change can't serve old bytes.
-
-    Reuse requires the dir to still EXIST: a concurrent process on the
-    same checkout may run :func:`catalog.sweep_scratch`, whose cross-
-    session GC once treated every dir predating that process as garbage —
-    this very suite did it (tests/test_foreign_cwd.py's subprocess builds
-    a registered query, and its sweep removed the parent pytest process's
-    spills). The sweep now (a) keeps dirs younger than
-    ``catalog.SWEEP_GRACE_SEC`` and (b) keeps ANY dir whose ``.owner_pid``
-    marker names a still-running process, so a concurrent process no
-    longer deletes a live session's spills regardless of that session's
-    age; the existence check remains as self-heal for anything else that
-    removes the dir.
-
-    Contract: the INPUT named by ``key`` is immutable for the life of
-    this process. Reuse serves the bytes of the first build, so a harness
-    that rewrites source files in place mid-process (e.g. regenerating an
-    sf dir) must call :func:`reset_spill_reuse` afterwards. We deliberately
-    do NOT fold an input fingerprint (file listing / max mtime) into the
-    key: at production scale that is a full object-store listing per
-    build, on the driver, of a 100 TB prefix — the cure would cost more
-    than the disease, and Spark's own relation cache makes the same
-    immutability assumption.
+    Every call writes to a fresh :func:`catalog.scratch_path`, so every
+    build re-runs its producer and no dir is ever overwritten under a
+    frame that already listed its files. The write uses the default
+    error-if-exists mode: a path collision fails loudly.
     """
-    key_src = (
-        key
-        if key is not None
-        else df._jdf.queryExecution().analyzed().toString()
-    )
-    path, fresh = scratch_once(tag, key_src)
-    if fresh:
-        df.write.mode("overwrite").parquet(path)
-        # Record keyless paths too: a keyless digest hashes the analyzed
-        # plan, which is MEMOIZED on the Dataset — spilling the same
-        # DataFrame object twice hashes to the same path, and without the
-        # record the second call would take this overwrite branch and
-        # delete the part files the first result's reader already listed.
-        # Growth is one short string per build (same order as the scratch
-        # dirs themselves), so a long session's set stays proportional to
-        # work done, not unbounded relative to it.
-        mark_scratch_written(path)
+    path = scratch_path(tag)
+    df.write.parquet(path)
     return df.sparkSession.read.parquet(path)
 
-
-def scratch_once(tag: str, key: str) -> tuple[str, bool]:
-    """Keyed scratch path + whether this process must (re)write it.
-
-    The non-parquet twin of :func:`spill` for operators that materialize
-    scratch artifacts Spark's DataFrame writer alone can't express (CSV /
-    ORC / JSONL round trips, Hive-partitioned layouts, z-order rewrites,
-    raw ``.bin`` payload dirs): the caller owns the write, this function
-    owns the path contract. Returns ``(path, fresh)``; when ``fresh`` the
-    caller writes the artifact at ``path`` and then calls
-    :func:`mark_scratch_written` — AFTER the write completes, so a build
-    that dies mid-write is rewritten, never reused. When not ``fresh``
-    the path was fully written earlier in THIS process under the same
-    (tag, key) — proven by the in-memory record AND the on-disk
-    ``COMPLETE_MARKER`` the finished write stamped (verify-on-read) —
-    and must be reused as-is: rewriting it would invalidate the file
-    listing a previously built, still-lazy frame captured (the
-    FILE_NOT_EXIST failure spill() documents).
-
-    The same rules as spill() apply: ``key`` must name the inputs and
-    layout parameters (interleaved builds over two sf dirs must not share
-    a path), the input named by ``key`` is immutable for the life of the
-    process, ``reset_spill_reuse()`` forces the next build to rewrite,
-    and the ``spill_`` path prefix keeps the artifact under
-    ``catalog.sweep_scratch``'s cross-session GC.
-
-    **Single-writer contract (explicit):** freshness is process-local
-    (``_SPILLED_PATHS`` + ``isdir``), so two *concurrent* processes on
-    the same checkout each see ``fresh=True`` for the same (tag, key)
-    and race their overwrite writes under each other's lazy readers.
-    One live engine session per checkout/scratch dir is the supported
-    mode — the same assumption Spark's relation cache and warehouse dir
-    make. The ``.owner_pid`` liveness marker protects a live session's
-    dirs from a concurrent process's *sweep* (GC), not from a concurrent
-    *writer*; sequential cross-process reuse is safe (a later process
-    rewrites, never trusts, a prior process's bytes). An atomic
-    tmp+rename would not close the gap either: POSIX cannot atomically
-    replace a non-empty directory, so the swap leaves a no-dir window
-    under exactly the live readers this contract exists to protect.
-    """
-    digest = hashlib.md5(key.encode()).hexdigest()[:12]
-    path = os.path.join(SCRATCH_DIR, f"spill_{tag}_{digest}")
-    fresh = (
-        path not in _SPILLED_PATHS
-        or not os.path.isdir(path)
-        # Verify-on-read: reuse trusts only a dir whose completion marker
-        # survived. ``_SPILLED_PATHS`` proves OUR write finished, but the
-        # bytes can be tampered with afterwards by something external to
-        # the contract (a foreign process's sweep mis-judging liveness, a
-        # manual partial delete) — ``isdir`` alone would then serve a
-        # half-dir to the consumer as silent partial data. A missing
-        # marker downgrades to a rewrite, the same self-heal path as a
-        # missing dir. Deliberate trade-off: a tamper that removed ONLY
-        # the marker (data intact) now triggers a rewrite whose overwrite
-        # can break a still-live reader of the old listing with a loud
-        # FILE_NOT_EXIST — but a marker-missing dir cannot be proven
-        # complete from here, and the alternative (trusting it) turns
-        # every data-file tamper into silent partial RESULTS. Loud beats
-        # silent; the pre-marker behavior had the silent branch.
-        # _MARKERLESS exception: when the marker WRITE itself failed
-        # (ENOSPC/EACCES), the in-memory record stays the only authority
-        # — pre-marker semantics for that dir. Without it, every later
-        # build of the (tag, key) would see "marker missing", rewrite,
-        # and overwrite the part files under earlier builds' live
-        # readers — repeatedly.
-        or (
-            path not in _MARKERLESS
-            and not os.path.isfile(os.path.join(path, COMPLETE_MARKER))
-        )
-    )
-    return path, fresh
-
-
-# Completion marker written inside every spill/scratch dir AFTER its
-# artifact write finishes — the disk twin of the in-memory
-# ``_SPILLED_PATHS`` record. Dot-prefixed so Spark/Hadoop file listings
-# ignore it (same convention as ``.owner_pid``); checked by
-# ``scratch_once``'s reuse leg (verify-on-read, VERDICT r7 #6 candidate).
-COMPLETE_MARKER = ".scratch_complete"
-
-
-def mark_scratch_written(path: str) -> None:
-    """Record a completed :func:`scratch_once` write for in-process reuse
-    (memory + on-disk completion marker) and stamp the ``.owner_pid``
-    liveness marker that protects the dir from a concurrent process's
-    ``sweep_scratch``."""
-    try:
-        with open(os.path.join(path, COMPLETE_MARKER), "w") as fh:
-            fh.write("complete\n")
-        _MARKERLESS.discard(path)
-    except OSError:
-        # Advisory, like .owner_pid — but the failure must be REMEMBERED:
-        # were the reuse leg to treat this dir as incomplete, every later
-        # build would rewrite it and overwrite part files under earlier
-        # builds' live readers. _MARKERLESS keeps pre-marker semantics
-        # (in-memory record is the authority, no verify-on-read
-        # protection) for exactly the dirs whose marker never landed.
-        _MARKERLESS.add(path)
-    _SPILLED_PATHS.add(path)
-    _write_owner_marker(path)
-
-
-def _write_owner_marker(path: str) -> None:
-    """Stamp the spill dir with this process's identity (``.owner_pid``,
-    dot-prefixed so Spark's file listing ignores it). ``sweep_scratch``
-    in a DIFFERENT process skips dirs whose owner is still alive, which
-    closes the residual cross-process race the mtime grace window only
-    narrowed: a session older than the grace window kept live spills
-    that a freshly started subprocess's sweep would otherwise reap.
-
-    The marker is ``pid start_ticks`` (process start time from /proc)
-    where available, so a pid later recycled to an unrelated long-lived
-    process cannot keep this dir alive indefinitely; pid-only is the
-    non-Linux fallback (sweep then uses bare liveness)."""
-    from xgboost_ray_spark.catalog import _proc_start_ticks
-
-    pid = os.getpid()
-    ticks = _proc_start_ticks(pid)
-    content = f"{pid} {ticks}" if ticks is not None else str(pid)
-    try:
-        with open(os.path.join(path, ".owner_pid"), "w") as fh:
-            fh.write(content)
-    except OSError:
-        pass  # marker is advisory; sweep falls back to mtime + grace
-
-
-# Spill dirs already written by this process (keyed AND keyless): same
-# (tag, key) later in the process reads the existing dir instead of
-# rewriting it under a live reader. In-memory on purpose — a dir that
-# exists on disk but was written by another process may predate operator
-# code changes, so only this process's own writes are trusted for reuse.
-_SPILLED_PATHS: set[str] = set()
-
-# Dirs whose COMPLETE_MARKER write failed (OSError) after a successful
-# artifact write: the reuse leg trusts the in-memory record alone for
-# these (pre-marker semantics) instead of rewriting on every build.
-_MARKERLESS: set[str] = set()
-
-
-def reset_spill_reuse() -> None:
-    """Forget this process's spill-reuse record so the NEXT build of a
-    keyed-spill operator rewrites its producer subtree instead of reading
-    the existing dir.
-
-    Measurement and verification harnesses need this: with reuse active, a
-    rebuild's timed cost omits the producer stage (bench min-of-3 would
-    take reuse-path samples and misread a producer regression as a pass-1
-    contention outlier), and the determinism sweep's perturbed rebuilds
-    would consume the BASELINE config's bytes instead of re-executing the
-    producer under shuffle/AQE/codegen perturbation. Callers: bench.py,
-    scripts/pin_standalone.py, tests/test_determinism.py. Only safe when
-    no earlier frame built from the same spill is still awaiting
-    collection — true for those harnesses, which fully materialize each
-    build before the next.
-    """
-    _SPILLED_PATHS.clear()
-    _MARKERLESS.clear()
 
 # observe() names must be unique within a query plan; composing the same
 # operator twice with the default name would raise AnalysisException, so
@@ -602,24 +390,15 @@ def s26k_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     base, delta = docs.filter(~is_delta), docs.filter(is_delta)
 
     # The stored index: band digests of every already-ingested doc. In
-    # production this is appended once per ingest; here both index and
-    # delta go through the spill() write-once contract — keyed per sf
-    # (interleaved builds over two sf dirs must not share a path) AND
-    # reused within the process (an eager per-build overwrite would
-    # invalidate the part-file listing a previously built, still-lazy
-    # s26k result captured — the FILE_NOT_EXIST hazard spill documents).
-    spill_key = f"{os.path.abspath(sf_dir)}|mod={INCR_DELTA_MOD}"
-    index = spill(
-        lsh_bands(minhash_signatures(base)), "lsh_index", key=spill_key
-    )
+    # production this is appended once per ingest; here it is spilled
+    # fresh per build.
+    index = spill(lsh_bands(minhash_signatures(base)), "lsh_index")
 
     # Compute the delta's bands ONCE and materialize them — production
     # appends them to the stored index anyway, and reusing the parquet
     # copy three times below (union, key list, broadcast) avoids
     # re-executing the minhash subtree per use.
-    delta_bands = spill(
-        lsh_bands(minhash_signatures(delta)), "lsh_index_delta", key=spill_key
-    )
+    delta_bands = spill(lsh_bands(minhash_signatures(delta)), "lsh_index_delta")
     all_bands = index.unionByName(delta_bands)
 
     # Buckets containing at least one delta doc: broadcast the delta's
@@ -914,7 +693,6 @@ def ngram_jaccard_pairs(
     docs: DataFrame,
     n: int = JACCARD_NGRAM,
     threshold: float = JACCARD_THRESHOLD,
-    spill_key: str | None = None,
 ) -> DataFrame:
     """Exact word-n-gram Jaccard similarity for docs sharing >= 1 shingle.
 
@@ -933,7 +711,6 @@ def ngram_jaccard_pairs(
     sh = spill(
         fan_out(docs).select("doc_id", F.explode(grams).alias("g")).distinct(),
         "jaccard_shingles",
-        key=spill_key and f"{spill_key}|n={n}|t={threshold}",
     )
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
     a = sh.alias("a")
@@ -1004,7 +781,7 @@ _JACCARD_PAIRS_SQL = f"""
 )
 def s26d_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    return ngram_jaccard_pairs(docs, spill_key=os.path.abspath(sf_dir))
+    return ngram_jaccard_pairs(docs)
 
 
 # ---------------------------------------------------------------------------
@@ -1220,9 +997,7 @@ def dup_clusters(pairs: DataFrame, max_iter: int = CC_MAX_ITER) -> DataFrame:
 )
 def s26g_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    pairs = ngram_jaccard_pairs(
-        docs, spill_key=os.path.abspath(sf_dir)
-    ).select("doc_a", "doc_b")
+    pairs = ngram_jaccard_pairs(docs).select("doc_a", "doc_b")
     return dup_clusters(pairs)
 
 
@@ -1486,7 +1261,6 @@ def prefix_filtered_jaccard_pairs(
     docs: DataFrame,
     n: int = JACCARD_NGRAM,
     threshold: float = JACCARD_THRESHOLD,
-    spill_key: str | None = None,
     encode_verify: bool = True,
 ) -> DataFrame:
     """Exact Jaccard-threshold pairs via PPJoin-style prefix filtering.
@@ -1551,11 +1325,9 @@ def prefix_filtered_jaccard_pairs(
 
     grams = _gram_expr(n)
     num, den = _jaccard_rational(threshold)
-    key = spill_key and f"{spill_key}|n={n}|t={threshold}"
     sh = spill(
         fan_out(docs).select("doc_id", F.explode(grams).alias("g")).distinct(),
         "ppjoin_shingles",
-        key=key,
     )
     if encode_verify:
         verify_src = sh.select("doc_id", F.xxhash64("g").alias("g"))
@@ -1572,10 +1344,7 @@ def prefix_filtered_jaccard_pairs(
     toks_plan = verify_src.groupBy("doc_id").agg(F.collect_set("g").alias("ts"))
     pool = ThreadPoolExecutor(max_workers=3)
     try:
-        fut_toks = pool.submit(
-            spill, toks_plan, "ppjoin_toks",
-            key and f"{key}|enc={bool(encode_verify)}",
-        )
+        fut_toks = pool.submit(spill, toks_plan, "ppjoin_toks")
         # The document-frequency table is consumed THREE times per build (the
         # injectivity audit plus both self-join sides' rankings); before r15
         # each consumer re-ran the groupBy over the shingle spill. Spilling it
@@ -1584,9 +1353,7 @@ def prefix_filtered_jaccard_pairs(
         # parquet's REAL size for the ranked join's broadcast decision (an
         # aggregate's size ESTIMATE is what usually breaks that choice —
         # optimization guide §3.1).
-        dfreq = spill(
-            sh.groupBy("g").agg(F.count("*").alias("df")), "ppjoin_dfreq", key=key
-        )
+        dfreq = spill(sh.groupBy("g").agg(F.count("*").alias("df")), "ppjoin_dfreq")
         # df stays a separate partial-aggregate + join (NOT a count() window
         # over g): a window cannot split a partition key, so a mega-hot
         # shingle would serialize into one task, while the join keeps AQE's
@@ -1625,7 +1392,7 @@ def prefix_filtered_jaccard_pairs(
         # duplicated-subtree plan at bench scale too, not just at corpus
         # scale. Failures propagate through result(); the finally joins every
         # thread, so a leg failure is loud and bounded, never a hang.
-        fut_pref = pool.submit(spill, pref_plan, "ppjoin_pref", key)
+        fut_pref = pool.submit(spill, pref_plan, "ppjoin_pref")
         fut_audit = (
             pool.submit(_audit_gid_injective, dfreq) if encode_verify else None
         )
@@ -1772,6 +1539,4 @@ def prefix_filtered_jaccard_pairs(
 )
 def s26l_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    return prefix_filtered_jaccard_pairs(
-        docs, spill_key=os.path.abspath(sf_dir)
-    )
+    return prefix_filtered_jaccard_pairs(docs)

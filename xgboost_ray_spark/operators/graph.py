@@ -111,10 +111,8 @@ def pagerank(edges: DataFrame, iters: int = PR_ITERS) -> DataFrame:
     # registered with the CacheManager — a later rebuild of the same query
     # therefore re-executes from the source instead of silently matching
     # this build's cache by canonical plan (the spill() rationale in
-    # dedup.py: a plain artifact a harness can control, not session cache;
-    # the determinism sweep and bench force full re-execution per build
-    # via reset_spill_reuse()).  All loop-scoped persists are released
-    # before returning.
+    # dedup.py, where every build also writes its spills afresh).  All
+    # loop-scoped persists are released before returning.
     result = ranks.localCheckpoint(eager=True)
     esrc.unpersist()
     nodes.unpersist()

@@ -19,8 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from xgboost_ray_spark.catalog import load_table
-from xgboost_ray_spark.operators.dedup import mark_scratch_written, scratch_once
+from xgboost_ray_spark.catalog import load_table, scratch_path
 from xgboost_ray_spark.registry import DEC, davg, dsum, register, sql_davg, sql_dsum
 
 
@@ -59,15 +58,12 @@ def s02_csv_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     from xgboost_ray_spark.sources.readers import read_csv
 
     nation = load_table(spark, sf_dir, "nation")
-    # Keyed + write-once (the spill() contract): a constant path would be
-    # overwritten by a build at another sf dir — or rewritten with new
-    # part filenames by a same-sf rebuild — under a previously built,
-    # still-lazy result's captured file listing. Same for every scratch
-    # round-trip entry below.
-    out, fresh = scratch_once("nation_csv", os.path.abspath(sf_dir))
-    if fresh:
-        nation.coalesce(1).write.mode("overwrite").option("header", True).csv(out)
-        mark_scratch_written(out)
+    # Every build writes a fresh scratch path (catalog.scratch_path): a
+    # shared path rewritten by a later build would pull the files out
+    # from under a previously built, still-lazy result. Same for every
+    # scratch round-trip entry below.
+    out = scratch_path("nation_csv")
+    nation.coalesce(1).write.option("header", True).csv(out)
     schema = T.StructType(
         [
             T.StructField("n_nationkey", T.IntegerType()),
@@ -102,10 +98,8 @@ def s01b_orc_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     supp = load_table(spark, sf_dir, "supplier").select(
         "s_suppkey", "s_name", "s_nationkey", "s_acctbal"
     )
-    out, fresh = scratch_once("supplier_orc", os.path.abspath(sf_dir))
-    if fresh:
-        supp.write.mode("overwrite").orc(out)
-        mark_scratch_written(out)
+    out = scratch_path("supplier_orc")
+    supp.write.orc(out)
     return read_orc(spark, out).filter(F.col("s_acctbal") > 0)
 
 
@@ -136,10 +130,8 @@ def s01g_jsonl_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "source", "n_chars"
     )
-    out, fresh = scratch_once("documents_jsonl", os.path.abspath(sf_dir))
-    if fresh:
-        docs.write.mode("overwrite").json(out)
-        mark_scratch_written(out)
+    out = scratch_path("documents_jsonl")
+    docs.write.json(out)
     schema = "doc_id bigint, lang string, source string, n_chars bigint"
     return read_json(spark, out, schema=schema).filter(F.col("n_chars") >= 64)
 
@@ -167,10 +159,8 @@ def s01c_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority"
     )
-    out, fresh = scratch_once("orders_by_priority", os.path.abspath(sf_dir))
-    if fresh:
-        orders.write.mode("overwrite").partitionBy("o_orderpriority").parquet(out)
-        mark_scratch_written(out)
+    out = scratch_path("orders_by_priority")
+    orders.write.partitionBy("o_orderpriority").parquet(out)
     return (
         spark.read.parquet(out)
         .filter(F.col("o_orderpriority") == "1-URGENT")
@@ -212,30 +202,22 @@ def s01i_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFram
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", "o_orderpriority"
     )
-    sf_key = os.path.abspath(sf_dir)
-    fact_path, fact_fresh = scratch_once("orders_dpp_fact", sf_key)
-    dim_path, dim_fresh = scratch_once("priority_dim", sf_key)
-    if fact_fresh:
-        orders.write.mode("overwrite").partitionBy("o_orderpriority").parquet(
-            fact_path
-        )
-        mark_scratch_written(fact_path)
+    fact_path = scratch_path("orders_dpp_fact")
+    dim_path = scratch_path("priority_dim")
+    orders.write.partitionBy("o_orderpriority").parquet(fact_path)
     # The dim: priority -> class, stored as its own table so the 'high'
     # filter cannot constant-fold into a static partition predicate.
-    if dim_fresh:
-        (
-            orders.select("o_orderpriority")
-            .distinct()
-            .withColumn(
-                "pclass",
-                F.when(F.col("o_orderpriority").isin(*DPP_HIGH), "high").otherwise(
-                    "low"
-                ),
-            )
-            .write.mode("overwrite")
-            .parquet(dim_path)
+    (
+        orders.select("o_orderpriority")
+        .distinct()
+        .withColumn(
+            "pclass",
+            F.when(F.col("o_orderpriority").isin(*DPP_HIGH), "high").otherwise(
+                "low"
+            ),
         )
-        mark_scratch_written(dim_path)
+        .write.parquet(dim_path)
+    )
     fact = spark.read.parquet(fact_path)
     dim = spark.read.parquet(dim_path).filter(F.col("pclass") == "high")
     return (
@@ -270,17 +252,11 @@ def s01i_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFram
 )
 def s01d_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    out, fresh = scratch_once("docs_evolving", os.path.abspath(sf_dir))
-    if fresh:
-        old = docs.filter(F.col("doc_id") % 2 == 0).select("doc_id", "n_chars")
-        new = docs.filter(F.col("doc_id") % 2 == 1).select(
-            "doc_id", "n_chars", "lang"
-        )
-        old.write.mode("overwrite").parquet(os.path.join(out, "gen=0"))
-        new.write.mode("overwrite").parquet(os.path.join(out, "gen=1"))
-        # Marked only after BOTH generations land: a build that dies
-        # between the writes is rewritten next build, never half-reused.
-        mark_scratch_written(out)
+    out = scratch_path("docs_evolving")
+    old = docs.filter(F.col("doc_id") % 2 == 0).select("doc_id", "n_chars")
+    new = docs.filter(F.col("doc_id") % 2 == 1).select("doc_id", "n_chars", "lang")
+    old.write.parquet(os.path.join(out, "gen=0"))
+    new.write.parquet(os.path.join(out, "gen=1"))
     return (
         spark.read.option("mergeSchema", "true")
         .parquet(os.path.join(out, "gen=0"), os.path.join(out, "gen=1"))
@@ -315,23 +291,10 @@ def s01e_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars"
     )
-    layout_key = (
-        f"{os.path.abspath(sf_dir)}"
-        f"|files={COMPACT_SMALL_FILES}->{COMPACT_TARGET_FILES}"
-    )
-    frag, frag_fresh = scratch_once("docs_fragmented", layout_key)
-    compact, compact_fresh = scratch_once("docs_compacted", layout_key)
-    if frag_fresh:
-        docs.repartition(COMPACT_SMALL_FILES).write.mode("overwrite").parquet(frag)
-        mark_scratch_written(frag)
-    if compact_fresh:
-        (
-            spark.read.parquet(frag)
-            .coalesce(COMPACT_TARGET_FILES)
-            .write.mode("overwrite")
-            .parquet(compact)
-        )
-        mark_scratch_written(compact)
+    frag = scratch_path("docs_fragmented")
+    compact = scratch_path("docs_compacted")
+    docs.repartition(COMPACT_SMALL_FILES).write.parquet(frag)
+    spark.read.parquet(frag).coalesce(COMPACT_TARGET_FILES).write.parquet(compact)
     return spark.read.parquet(compact)
 
 
@@ -368,14 +331,10 @@ def s01h_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_partkey", "l_suppkey", "l_quantity"
     )
-    out, fresh = scratch_once(
-        "lineitem_zorder",
-        f"{os.path.abspath(sf_dir)}|cols=l_partkey,l_suppkey"
-        f"|files={ZORDER_FILES}",
+    out = scratch_path("lineitem_zorder")
+    write_zordered(
+        li, out, ["l_partkey", "l_suppkey"], ZORDER_FILES, mode="errorifexists"
     )
-    if fresh:
-        write_zordered(li, out, ["l_partkey", "l_suppkey"], ZORDER_FILES)
-        mark_scratch_written(out)
     return spark.read.parquet(out).filter(F.col("l_partkey") < 50)
 
 
@@ -409,33 +368,20 @@ def s01f_binaryfile_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Materialize the payload files (test-scale stand-in for an existing
     # object-store directory; content is the md5 digest bytes of the doc
     # text, the same deterministic payload the multimodal entries use).
-    # Keyed per (sf, doc count) + write-once like every scratch artifact:
-    # the scan is lazy, so a later build at another sf must not rewrite
-    # the files this DataFrame will read at action time, and a same-sf
-    # rebuild reuses the identical payloads instead of re-collecting.
-    blob_dir, fresh = scratch_once(
-        "doc_blobs", f"{os.path.abspath(sf_dir)}|n={BINARY_SCAN_DOCS}"
+    # A fresh scratch path per build, like every scratch artifact: the
+    # scan is lazy, so a later build must not touch the files this
+    # DataFrame will read at action time.
+    blob_dir = scratch_path("doc_blobs")
+    docs = (
+        load_table(spark, sf_dir, "documents")
+        .filter(F.col("doc_id") < BINARY_SCAN_DOCS)
+        .select("doc_id", F.unhex(F.md5("text")).alias("payload"))
+        .collect()
     )
-    if fresh:
-        docs = (
-            load_table(spark, sf_dir, "documents")
-            .filter(F.col("doc_id") < BINARY_SCAN_DOCS)
-            .select("doc_id", F.unhex(F.md5("text")).alias("payload"))
-            .collect()
-        )
-        # Truncate like Spark's mode('overwrite') would: stale .bin files
-        # from an earlier run (e.g. a larger BINARY_SCAN_DOCS) must not
-        # leak extra rows into the scan.
-        import shutil
-
-        shutil.rmtree(blob_dir, ignore_errors=True)
-        os.makedirs(blob_dir, exist_ok=True)
-        for row in docs:
-            with open(
-                os.path.join(blob_dir, f"doc_{row.doc_id:06d}.bin"), "wb"
-            ) as f:
-                f.write(bytes(row.payload))
-        mark_scratch_written(blob_dir)
+    os.makedirs(blob_dir)
+    for row in docs:
+        with open(os.path.join(blob_dir, f"doc_{row.doc_id:06d}.bin"), "wb") as f:
+            f.write(bytes(row.payload))
 
     files = (
         spark.read.format("binaryFile")

@@ -16,6 +16,10 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+# The one runtime-settable conf table (same dict object, so a patch here
+# is what prepare_session applies).
+from xgboost_ray_spark.session import RUNTIME_CONF as _RUNTIME_CONF
+
 
 @dataclass(frozen=True)
 class QuerySpec:
@@ -29,28 +33,6 @@ class QuerySpec:
 QUERIES: dict[str, QuerySpec] = {}
 
 _SHIPPED_APPS: set[str] = set()
-
-# Runtime-settable confs every builder needs regardless of who constructed the
-# SparkSession (the driver harness passes a bare one). Anything requiring a
-# JVM restart (driver memory, UI) stays in session.get_spark; these are the
-# correctness-critical subset that spark.conf.set can apply live.
-_RUNTIME_CONF = {
-    # Older testdata stored TIMESTAMP(NANOS) — unreadable without this.
-    "spark.sql.legacy.parquet.nanosAsLong": "true",
-    # Testdata timestamps are naive (isAdjustedToUTC=false) micros; read them
-    # as UTC instants (TIMESTAMP, not TIMESTAMP_NTZ) so event-time functions
-    # and filter pushdown work straight off the scan. catalog.py's
-    # normalize_timestamps() covers sessions where this cannot be set.
-    "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
-    # Bit-stable timestamps vs the DuckDB oracle on any host timezone.
-    "spark.sql.session.timeZone": "UTC",
-    "spark.sql.execution.arrow.pyspark.enabled": "true",
-    "spark.sql.adaptive.enabled": "true",
-    "spark.sql.adaptive.coalescePartitions.enabled": "true",
-    "spark.sql.adaptive.skewJoin.enabled": "true",
-    "spark.sql.parquet.filterPushdown": "true",
-}
-
 
 # Confs whose absence silently CORRUPTS results (wrong timestamps, oracle
 # divergence) rather than degrading performance — failing to set one of
@@ -232,271 +214,17 @@ def sql_davg(expr: str, alias: str) -> str:
 #   * the other 17 slots ROTATE each round toward entries the driver has
 #     never hashed, retiring the verification backlog (~17/round);
 #   * within the window, entries are roughly cost-ordered (sf0.01 wall time
-#     via scripts/driver_sim.py) so a time-bounded sweep still covers most
-#     families;
-#   * the most expensive entries (s26g ~29s, s08c ~16s) sit after slot 50 —
-#     their families are represented by cheaper siblings, and every entry
-#     stays covered by tests/test_oracle.py and scripts/driver_sim.py.
+#     via scripts/driver_sim.py), heavy entries late, so a time-bounded
+#     sweep still covers most families; s03 leads so the cheapest query
+#     absorbs JVM warmup;
+#   * every entry, in the window or not, stays covered by
+#     tests/test_oracle.py and scripts/driver_sim.py.
 #
-# Rotation log (driver-hashed rounds):
-#   r1-r3 checked 68 distinct entries (see CORRECTNESS_r0*.json).
-#   r4 rotated in 15 never-checked entries plus s26b/s26e re-validation;
-#   CORRECTNESS_r04 came back 50/50 green. Backlog after r4: 73 never
-#   driver-checked.
-#   r5 window freezes catalog growth and rotates in 17
-#   never-checked entries per VERDICT r4 #1/#2: the eight late-r4
-#   operators (s24g s26l s27j s31h s32d s30d s30e s30f — the round's
-#   flagship iterative/ML work), the two risk-bearing advanced streaming
-#   entries (s25g stream-stream join, s25i foreachBatch CDC upsert), and
-#   seven TPC-H/agg variants (s05d s05e s05h s16b s21c s09f s09g).
-#   Rotated out to 51+ (all driver-green r4): s04c s07b s09e s12b s14e
-#   s21b s22c s24c s25 s25d s26b s26e s27b s28g s29g s31f s33b.
-#   Backlog after r5: 56 (CORRECTNESS_r05 came back 50/50 green).
-#   r6 window rotates in 17 never-checked entries per VERDICT
-#   r5 #1/#3: the ANN stack (s27_cosine_topk s27d s27g s27h s27i), the
-#   dedup tail (s26h s26i s26k), the text tail (s28e s28h s28l), the
-#   streaming production tier (s25h file-sink ETL, s25l outlier guard —
-#   VERDICT #3), s13b, s23c, s32b, and s30_gbt_train_predict (rows-only
-#   by design; its golden confusion matrix is pinned in tests/test_ml.py).
-#   NOTE: VERDICT r5 #1 also named s26g/s08c, but both already have
-#   hash-green driver rows (CORRECTNESS_r01+r02) — re-rows would burn two
-#   first-time slots; the s26g bench question is settled by the pinned
-#   standalone comparators + per-sample BENCH reporting instead
-#   (BASELINE.md measurement protocol). All 17 verified green against the
-#   DuckDB oracle at sf0.01 under the bare-session twin on 2026-08-14
-#   before rotation. Rotated out to 51+ (all driver-green r5): s05d s05e
-#   s05h s09f s09g s16b s21c s24g s25g s25i s26l s27j s30d s30e s30f
-#   s31h s32d.
-#   Backlog after r6 (CORRECTNESS_r06 came back 50/50 green): 39, fully
-#   scheduled (2026-08-14):
-#     r7 (17): s25b s25c s25f s25j s25k, s27e s27f, s29f s29h s29i s29j,
-#              s26j, s04b, s06c s06d, s07c s07d — all pass/rows-only in
-#              the 2026-08-14 end-of-r6 bare-session sweep at sf0.01,
-#              15.9 s combined (s25c is rows-only by design, golden
-#              digest pinned in tests/test_streaming.py), so the r7
-#              rotation is pre-verified and cheap.
-#     r8 (17): s01b s01c s01d s01e s01f s01g s01h s01i, s05f s05g,
-#              s14c s14d, s24d s24e s24f, s28i s28j — pre-verified
-#              2026-08-14 (early r7): all 17 pass in a bare-session
-#              foreign-cwd (/tmp) sweep at sf0.01, 12.6 s combined,
-#              including the environment-sensitive S1 layout family
-#              (ORC/JSONL/pruning/DPP/schema-evolution/compaction/
-#              z-order/binaryFile: 0.27-1.02 s each) — VERDICT r6 #3.
-#              RE-verified late r7 (2026-08-14) after the S1 family's
-#              scratch paths moved to the keyed write-once contract
-#              (scratch_once): all 9 S1/S2 layout entries pass the
-#              bare-session foreign-cwd oracle drive at sf0.01 again.
-#              RE-verified 2026-08-15 after s05f/s05g (and non-window
-#              s05c/s05h) dropped forced broadcasts of SF-proportional
-#              sides in favor of s05d's AQE policy: all four pass the
-#              bare-session oracle drive at sf0.01 and sf0.1.
-#              s14c/s14d RE-verified 2026-08-15 after both moved onto the
-#              shared scd2_history builder + SCD2_HIST_CTE oracle (late-r7
-#              review dedup): foreign-cwd oracle drive at sf0.01 plus a
-#              one-off 3-leg perturbation sweep (shuffle=5/AQE-off/
-#              codegen-off), bit-stable.
-#     r9 (5):  s28k, s31d s31e s31g, s32c  — backlog reaches 0.
-#              (Also pass in the same 2026-08-14 sweep, 2.0 s combined.
-#              s31d and s33b changed semantics late in r7 — mixture
-#              budgets retuned so oversampling is actually exercised,
-#              chunking stops at the first tail-covering chunk — and
-#              were re-verified same-day against the updated oracles
-#              from a foreign cwd at sf0.001+sf0.01+sf0.1.)
-#              RE-verified 2026-08-15 (start of r8, VERDICT r7 #3): all
-#              five pass the full-catalog bare-session foreign-cwd (/tmp)
-#              oracle sweep at sf0.01 (s28k 0.48 s, s31d 0.44, s31e 0.30,
-#              s31g 0.41, s32c 0.49) — the post-r7-retune oracles are the
-#              ones the driver will see.
-#   No backlog entry is without a planned round.
-#   r7 window executed the scheduled r7 set verbatim (VERDICT r6 #1);
-#   CORRECTNESS_r07 came back 50/50 green (all 17 first-time rows).
-#   r8 window executed the scheduled r8 set verbatim (VERDICT r7 #1):
-#   the S1 layout family s01b-i, s05f/s05g, s14c/s14d, s24d/e/f,
-#   s28i/s28j — CORRECTNESS_r08 came back 50/50 green (all 17
-#   first-time rows). Rotated out to 51+ (all driver-green r7): s04b
-#   s06c s06d s07c s07d s25b s25c s25f s25j s25k s26j s27e s27f s29f
-#   s29h s29i s29j. Backlog after r8: 5 = the scheduled r9 set.
-#   r9 window (this one) executes the scheduled r9 set verbatim (VERDICT
-#   r8 #1): the final 5 never-driver-checked entries s28k s31d s31e s31g
-#   s32c — backlog reaches 0; every one of the 157 registry entries then
-#   carries a driver row. With only 5 first-timers left, the other 12
-#   rotating slots go to RE-verification, judgment-ranked
-#   (rotate_window.py only reports; this ranking is the reviewed
-#   decision): first the r8 changed-plan entries whose new plans have no
-#   driver row yet — s27j (k-means centroid single-parse SQL), s26l
-#   (PPJoin doc-size window fold), s26b (minhash single-parse
-#   signature/band builders), s05c+s05h (forced-broadcast drop → AQE
-#   policy), s27h+s27i (embedding-stats single-parse), s09 (the flagship,
-#   closing the era-drift story with a fresh driver row) — then the four
-#   oldest driver rows in the catalog (s05 s26 s26c s24b, r1/r2-era,
-#   never re-hashed since). Pre-verification: the 5 first-timers passed
-#   full-catalog foreign-cwd sweeps at start AND end of r8 (logged
-#   above); the whole new window re-swept 2026-08-15 (start of r9,
-#   bare-session /tmp, sf0.01) immediately after this rotation landed:
-#   157/157 clean (153 hash + 4 rows-only-by-design), 118.5 s query
-#   wall. Rotating-slot timings from that sweep: first-timers s28k
-#   0.45 s, s31d 0.52, s31e 0.36, s31g 0.63, s32c 0.65; re-verifies
-#   s26 0.27, s24b 0.39, s31e-family all sub-second, s05 0.68, s05c
-#   0.71, s05h 0.79, s09 0.58, s26c 1.05, s27h 1.17, s26b 1.23, s27i
-#   1.47, s27j 2.06, s26l 2.40 — ~16 s combined for all 17 slots.
-#   Rotated out to 51+ (all driver-green r8): s01b s01c s01d s01e s01f
-#   s01g s01h s01i s05f s05g s14c s14d s24d s24e s24f s28i s28j.
-#   Backlog after r9 (if sweep green): 0 — catalog fully driver-checked.
-#   CORRECTNESS_r09 came back 50/50 green — backlog 0, all 157 entries
-#   carry a driver row (153 hash + 4 rows-only by design).
-#   r10 window (this one): with the backlog at 0, all 17 rotating slots
-#   are RE-verification, stalest-driver-row-first per rotate_window.py's
-#   refill (VERDICT r9 #2), with one judgment override per the
-#   changed-plans-first rule: s27j re-enters because round 10 swaps its
-#   seeding to deterministic farthest-point WITH the CTE-unrolled oracle
-#   (SCALE.md contract; the new trajectory has no driver row), displacing
-#   the 17th-stalest suggestion (s15b, r3-era, next round). The 16
-#   staleness refills: the complete r2-era set s08b s08c s09b s10b s11
-#   s11b s26d s26g s29b s29d (s10b is rows-only by design — HLL sketches
-#   aren't engine-portable; its accuracy-vs-exact pin lives in
-#   tests/test_registry.py) and the oldest r3-era rows s06b s09c s10c
-#   s11d s11e s14b. After r10, no entry's driver row predates r3, and the
-#   remaining r3-era tail (12 entries) fits inside r11's rotation.
-#   Pre-verification (2026-08-15, quiet host, bare-session /tmp sweeps
-#   under this ordering with the final r10 code): sf0.01 — 157/157 clean
-#   (153 hash + 4 rows-only), 130.7 s query wall; sf0.1 — 157/157 clean,
-#   210.2 s. Rotating-slot sf0.01 timings: s10c 0.44, s11 0.73, s11b
-#   0.76, s11d 0.68, s11e 0.29, s06b 0.67, s09b 0.74, s09c 0.50, s10b
-#   0.32, s14b 0.45, s08b 0.78, s26d 2.54, s08c 2.03, s29b 0.82, s29d
-#   0.68, s27j 2.60 (new farthest-point trajectory), s26g 3.48.
-#   CORRECTNESS_r10 came back 50/50 green (49 hash + s10b rows-only by
-#   design), including s27j under the farthest-point trajectory.
-#   r11 window (this one): all 17 rotating slots are RE-verification,
-#   stalest-driver-row-first (VERDICT r10 #1): the COMPLETE r3-era tail
-#   (12: s15b s22b s23b s28b s28c s28d s28f s29c s29e s30b s31b s31c —
-#   s30b is rows-only by design, MLlib LTR ranker isn't SQL-portable;
-#   its golden pin lives in tests/test_registry.py) plus 5 of the 16
-#   r4-era rows. All 16 r4 rows are equally stale (rotate_window.py and
-#   VERDICT r10 name different fives — a tie, not a disagreement); the
-#   reviewed decision adopts the verdict's named set verbatim: s04c s21b
-#   s26e s31f s33b. No changed-plans-first override applies — no query
-#   plan changed in r10→r11 before this rotation. After r11, no entry's
-#   driver row predates r4 and the remaining 11 r4-era rows (s07b s09e
-#   s12b s14e s22c s24c s25 s25d s27b s28g s29g) are the scheduled r12
-#   refill, finishing the staleness sweep exactly as VERDICT r10 #1
-#   contracted. Rotated out to 51+ (all driver-green r10): s06b s08b
-#   s08c s09b s09c s10b s10c s11 s11b s11d s11e s14b s26d s26g s27j
-#   s29b s29d. Pre-verification (2026-08-15, start of r11, bare-session
-#   /tmp sweep at sf0.01 immediately after this rotation landed):
-#   157/157 clean (153 hash + 4 rows-only by design), 150.8 s query
-#   wall. Rotating-slot timings: s15b 0.60, s22b 0.66, s21b 1.64, s33b
-#   0.60, s31b 0.31, s31c 0.53, s31f 0.36, s23b 0.51, s28b 0.49, s28c
-#   0.40, s28d 0.23, s28f 0.30, s04c 0.36, s29c 0.51, s29e 0.49, s30b
-#   5.65 (MLlib LTR, rows-only), s26e 1.88 — ~16 s combined.
-#   CORRECTNESS_r11 came back 50/50 green (49 hash + s30b rows-only by
-#   design) — after r11 no entry's driver row predates r4.
-#   r12 window (this one): the FINAL leg of the two-round staleness
-#   sweep contracted in VERDICT r10 #1 and re-confirmed in VERDICT r11
-#   #1: all 17 rotating slots are RE-verification, stalest driver row
-#   first per rotate_window.py's refill — the complete remaining r4-era
-#   set (11: s07b s09e s12b s14e s22c s24c s25 s25d s27b s28g s29g) plus
-#   the 6 stalest r5-era rows by the tool's deterministic tie-break
-#   (s05d s05e s09f s09g s16b s21c; all 15 r5-era rows are equally stale
-#   — the tool's name-order tie-break is adopted verbatim, no judgment
-#   override). No changed-plans-first override applies — the only r12
-#   product edits before this rotation were the kmeans empty-input
-#   raise-before-seed-job (ADVICE r11; pre-job guard, no plan change)
-#   and the profile() stripper degenerate-line fix (advisory warning
-#   path, no query plan). After r12 the sweep is complete: no entry's
-#   latest driver row predates r5, and the stalest tier is the 8
-#   remaining r5-era rows (s24g s25g s25i s30d s30e s30f s31h s32d) —
-#   the natural r13 refill seed. Rotated out to 51+ (all
-#   driver-green r11): s04c s15b s21b s22b s23b s26e s28b s28c s28d
-#   s28f s29c s29e s30b s31b s31c s31f s33b.
-#   Pre-verification (2026-08-16, start of r12, bare-session /tmp sweeps
-#   at sf0.01 immediately after this rotation landed — TWO back-to-back
-#   full-catalog runs): both 157/157 clean (153 hash + 4 rows-only by
-#   design), 169.9 s then 136.3 s query wall (loadavg 0.89 / 1.48 at
-#   start — a warm, mildly contended host; the r11-era 119-151 s band
-#   brackets the second run). Rotating-slot timings (second run): s22c
-#   1.54, s12b 0.94, s16b 0.91, s28g 1.68, s29g 2.21, s07b 1.25, s09e
-#   0.61, s09f 1.58, s09g 0.64, s14e 0.77, s24c 0.62, s21c 0.59, s05d
-#   1.14, s05e 0.77, s27b 1.15, s25_stream_tumbling 1.12, s25d 4.19 —
-#   ~22 s combined.
-#   r13 window (this one): the FIRST leg of the SECOND staleness pass
-#   (VERDICT r12 #1): all 17 rotating slots are RE-verification, stalest
-#   driver row first per rotate_window.py's refill — the complete
-#   remaining r5-era set (8: s24g s25g s25i s30d s30e s30f s31h s32d,
-#   exactly the refill seed named in the r12 rotation note) plus the 9
-#   stalest r6-era rows by the tool's deterministic tie-break (s13b s23c
-#   s25h s25l s26h s26i s26k s27 s27d). No changed-plans-first override
-#   applies — r12's only product edits were the kmeans pre-job guard
-#   (s27j, not in the refill) and the profile() stripper fix (advisory
-#   warning path, no query plan); nothing in the refill set was touched.
-#   After r13 no entry's latest driver row predates r6. Rotated out to
-#   51+ (all driver-green r12): s05d s05e s07b s09e s09f s09g s12b s14e
-#   s16b s21c s22c s24c s25 s25d s27b s28g s29g.
-#   Pre-verification (2026-08-16, start of r13, bare-session /tmp sweep
-#   at sf0.01 immediately after this rotation landed): see the dated
-#   note in SCALE.md §driver-window rotations.
-#   r14 window (this one): the SECOND leg of the second staleness pass
-#   (VERDICT r13 #2): rotate_window.py's deterministic refill is the 6
-#   remaining r6-era rows (s27g s28e s28h s28l s30 s32b) plus the 11
-#   stalest r7-era rows — but the changed-plans-first override applies
-#   this round: s26l_prefix_filter_join's verify stage adopts the
-#   dictionary-encoded scale path (VERDICT r13 #1, the SCALE.md r14
-#   contract seed), so s26l takes a rotating slot ahead of the refill,
-#   displacing the tool's last-ranked pick (s26j_fuzzy_snm, deferred to
-#   r15 where it becomes the stalest row). Window = 33 canonicals +
-#   s26l + 6 r6-era + 10 r7-era (s04b s06c s06d s07c s07d s25b s25c
-#   s25f s25j s25k). After r14 no entry's latest driver row predates r7
-#   except s26j (r7, deferred). Rotated out to 51+ (all driver-green
-#   r13): s13b s23c s24g s25g s25h s25i s25l s26h s26i s26k s27 s27d
-#   s30d s30e s30f s31h s32d.
-#   Pre-verification: dated note in SCALE.md §driver-window rotations.
-#   r15 window (this one, rotated 2026-08-16): the THIRD leg of the second
-#   staleness pass (VERDICT r14 #1): rotate_window.py's deterministic
-#   refill, adopted verbatim — s26j_fuzzy_snm leads the staleness list
-#   (the r7-era row the r14 s26l override deferred), then the 6 remaining
-#   r7-era rows (s27e s27f s29f s29h s29i s29j) and the 10 stalest r8-era
-#   rows by the tool's tie-break (s01b s01c s01d s01e s01f s01g s01h s01i
-#   s05f s05g). CHANGED-PLANS-FIRST OVERRIDES (applied later the same
-#   round, per the r14 precedent): the s26l suffix-family filter and the
-#   s27j one-pass seeding both adopted under their r15 SCALE.md
-#   contracts, so s26l and s27j swap into rotating slots and the
-#   refill's two last-ranked picks (s05g_tpch_q8, then s05f_tpch_q7)
-#   are displaced — they stay r8-era and join the r16 refill seed.
-#   After r15 no entry's latest driver row predates r8 except the
-#   leftover r8-era tail (s05f s05g s14c s14d s24d s24e s24f s28i s28j
-#   — the r16 refill seed). Rotated out to 51+ (all driver-green r14):
-#   s04b s06c s06d s07c s07d s25b s25c s25f s25j s25k s27g s28e s28h
-#   s28l s30 s32b (s26l and s27j re-entered by the overrides).
-#   Pre-verification: dated note in SCALE.md §driver-window rotations.
-#   r16 window (this one, rotated 2026-08-18): VERDICT r15 #1 — the
-#   changed-plans-first override applied to the WHOLE r15 change set, not
-#   just the two entries the r15 rotation caught: every non-canonical
-#   entry whose executed plan or kernel changed in r15 without a driver
-#   re-hash takes a rotating slot (s26b s26c s26d s26e s26g s26h via the
-#   fan_out conditional/hash-key change, s28e s28g s28l via the same,
-#   s24g explode edge build + lazy persist, s25d numpy sessionizer
-#   kernel). The remaining 6 slots refill from the r8-era staleness tail
-#   per VERDICT r15 #8, stalest-first by the tool's order (s14d s28i
-#   s24f s24d s28j s14c); the seed's 3 last-ranked picks (s24e s05g
-#   s05f) are displaced to the r17 seed, the same precedent as r14/r15.
-#   Rotated out to 51+ (all driver-green r15): s27j s26l s26j s27e s27f
-#   s29f s29h s29i s29j s01b s01c s01d s01e s01f s01g s01h s01i.
-#   Pre-verification: dated note in SCALE.md §driver-window rotations.
 # Entries registered but not listed here (newly added operators) append at
 # the end in registration order, never displacing the curated window.
 # ---------------------------------------------------------------------------
 _DRIVER_ORDER = [
-    # -- slots 1-50: 33 family canonicals + 17 rotating slots (r16 set: -----
-    # -- VERDICT r15 #1's changed-plans-first seats — the 11 non-canonical
-    # -- entries whose executed plan or kernel changed in r15 without a
-    # -- driver re-hash (s26b s26c s26d s26e s26g s26h via fan_out,
-    # -- s28e s28g s28l via fan_out, s24g explode build, s25d numpy
-    # -- kernel; s28 is a pinned canonical and s26j/s26l/s27j were
-    # -- re-hashed green in the r15 window) — plus the 6 stalest r8-era
-    # -- rows of the refill seed (s14d s28i s24f s24d s28j s14c); the
-    # -- seed's 3 last-ranked picks (s24e s05g s05f) are displaced, as
-    # -- in r14/r15. Roughly cost-ordered; heavy re-verifies (dup
-    # -- clusters, stateful sessions, pagerank) sit late; s03 leads so
-    # -- the cheapest query absorbs JVM warmup ------------------------------
+    # -- slots 1-50 -----------------------------------------------------
     "s03_projection", "s28_token_stats", "s15_sort_limit",
     "s22_array_funcs", "s21_conditional", "s20_math_funcs",
     "s19_date_funcs", "s18_string_funcs", "s33_sequence_pack",
@@ -515,8 +243,7 @@ _DRIVER_ORDER = [
     "s26d_ngram_jaccard", "s29_pandas_udf", "s32_profile",
     "s30c_linear_model_train", "s25e_stream_dedup",
     "s26g_dup_clusters", "s25d_stateful_sessions", "s24g_pagerank",
-    # -- slots 51+: driver-green entries rotated out in r16 (all hashed ----
-    # -- green in the r15 window, CORRECTNESS_r15 50/50) --------------------
+    # -- slots 51+: outside the window ---------------------------------
     "s27j_kmeans", "s26l_prefix_filter_join", "s26j_fuzzy_snm",
     "s27e_knn_classify", "s27f_label_centroids",
     "s29j_unicode_normalize", "s29i_map_in_arrow",
@@ -525,8 +252,6 @@ _DRIVER_ORDER = [
     "s01d_schema_evolution", "s01h_zorder_layout",
     "s01f_binaryfile_scan", "s01e_compaction",
     "s01i_dynamic_partition_pruning",
-    # -- driver-green entries rotated out in r15 (s05f/s05g/s24e are the ----
-    # -- r8-era leftover tail — the r17 refill seed) -------------------------
     "s05f_tpch_q7", "s05g_tpch_q8", "s04b_disjunctive_pushdown",
     "s07c_inactive_customers", "s07d_sole_fault_supplier",
     "s06d_outerjoin_histogram", "s06c_cdc_upsert",
@@ -535,41 +260,34 @@ _DRIVER_ORDER = [
     "s25b_stream_sliding", "s25c_stream_watermark_append",
     "s25f_stream_static_join", "s25j_stream_trending",
     "s25k_stream_session_window", "s30_gbt_train_predict",
-    # -- driver-green entries rotated out in r14 -----------------
     "s23c_variant", "s13b_distribution_ranks", "s31h_quantile_bins",
     "s32d_outlier_flags", "s26i_decontaminate",
     "s27_cosine_topk", "s27d_ivf_topk", "s30d_linear_model_score",
     "s30e_cv_ols", "s30f_learning_curve", "s26k_incremental_neardup",
     "s25h_file_sink_etl", "s25l_stream_outlier_guard",
     "s25g_stream_stream_join", "s25i_stream_cdc_upsert",
-    # -- driver-green entries rotated out in r13 -----------------
     "s22c_map_funcs", "s12b_having_join", "s16b_tpch_q15",
     "s29g_udtf_token_runs", "s07b_exists_subquery",
     "s09e_quantile_filter", "s09f_scalar_subquery", "s09g_incremental_agg",
     "s14e_gaps_islands", "s24c_funnel", "s21c_tpch_q12",
     "s05d_tpch_q5", "s05e_tpch_q10", "s27b_lsh_topk",
     "s25_stream_tumbling",
-    # -- driver-green entries rotated out in r12 -----------------
     "s15b_sort_nulls", "s22b_array_hof", "s21b_promo_revenue",
     "s33b_chunk_overlap", "s31b_stratified_sample", "s31c_group_sample",
     "s31f_weighted_sample", "s23b_from_json", "s28b_lang_id",
     "s28c_quality_score", "s28d_fingerprint", "s28f_regex_tokens",
     "s04c_tpch_q6", "s29c_grouped_map", "s29e_frame_sample",
     "s30b_ltr_rank",
-    # -- driver-green entries rotated out in r11 ------------------
     "s10c_distinct_rows", "s11_rollup", "s11b_cube", "s11d_pivot",
     "s11e_unpivot", "s06b_full_outer_join", "s09b_stats_agg",
     "s09c_salted_agg", "s10b_approx_count_distinct", "s14b_range_frame",
     "s08b_asof_join", "s08c_range_join",
     "s29b_multimodal_decode", "s29d_multimodal_resize",
-    # -- driver-green entries rotated out in r10 ------------------
     "s31e_temporal_split", "s31g_negative_pairs", "s31d_domain_mixture",
     "s28k_class_entropy", "s32c_drift_report", "s26_dedup_exact",
     "s05_inner_join", "s24b_sessionization",
     "s27h_embedding_quantize", "s27i_quantized_topk",
     "s05c_tpch_q3", "s09_groupby_agg", "s05h_tpch_q9",
-    # -- driver-green entries rotated out in r9 (only s24e is left of the --
-    # -- r8-era tail here; with s05f/s05g above it seeds the r17 refill) ----
     "s24e_retention_cohorts",
 ]
 

@@ -36,23 +36,35 @@ def effective_cpus() -> int:
     return os.cpu_count() or 4
 
 
-_DEFAULTS = {
-    "spark.sql.adaptive.enabled": "true",
-    "spark.sql.adaptive.coalescePartitions.enabled": "true",
-    "spark.sql.adaptive.skewJoin.enabled": "true",
-    "spark.sql.session.timeZone": "UTC",
-    "spark.sql.execution.arrow.pyspark.enabled": "true",
-    "spark.sql.parquet.filterPushdown": "true",
-    # 128 MB input splits: keeps task count proportional to data, not files.
-    "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),
-    "spark.ui.enabled": "false",
+# Runtime-settable confs every builder needs regardless of who constructed
+# the SparkSession (the driver harness passes a bare one):
+# registry.prepare_session applies them with spark.conf.set, and
+# get_spark starts every session with them.
+RUNTIME_CONF = {
     # Older events fixtures stored TIMESTAMP(NANOS); Spark has no nanos type,
     # so read as long and convert in the catalog (DuckDB truncates ns->us the
     # same way).
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     # Testdata timestamps are naive (isAdjustedToUTC=false) micros; read them
-    # as UTC instants so event-time functions and pushdown work off the scan.
+    # as UTC instants (TIMESTAMP, not TIMESTAMP_NTZ) so event-time functions
+    # and filter pushdown work straight off the scan. catalog.py's
+    # normalize_timestamps() covers sessions where this cannot be set.
     "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
+    # Bit-stable timestamps vs the DuckDB oracle on any host timezone.
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.parquet.filterPushdown": "true",
+}
+
+# Session-only confs (need a JVM start) on top of the runtime table.
+_DEFAULTS = {
+    **RUNTIME_CONF,
+    # 128 MB input splits: keeps task count proportional to data, not files.
+    "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),
+    "spark.ui.enabled": "false",
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
 }
 
