@@ -7,9 +7,7 @@ Round dir from $SPARK_GRAFT_PLANS_ROUND (default r16).
 Writes plans/<round>/<query>_<label>.txt for each headline query (default) or
 the named subset. Iterative operators (s26g, s24g, s27j) and ML training
 (s30) execute their loops at build time and return a localCheckpoint /
-small result frame, so their formatted plan shows the final stage only;
-the per-round plan shape for those is captured separately where an
-optimization targets it (see OPTIMIZATION_r15.md).
+small result frame, so their formatted plan shows the final stage only.
 """
 
 from __future__ import annotations
@@ -27,6 +25,7 @@ def main() -> None:
     names = sys.argv[2:] or HEADLINE
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+    from xgboost_ray_spark.plans.explain import formatted_plan
     from xgboost_ray_spark.registry import all_queries
     from xgboost_ray_spark.session import get_spark
 
@@ -41,9 +40,7 @@ def main() -> None:
     for name in names:
         spark.sparkContext.setJobDescription(f"capture:{name}")
         df = specs[name].build(spark, sf_dir)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
+        plan = formatted_plan(df)
         path = os.path.join(out_dir, f"{name}_{label}.txt")
         with open(path, "w") as f:
             f.write(plan)

@@ -348,6 +348,7 @@ def test_prefix_filter_lossless_on_adversarial_corpora(spark):
         (8, "qq rr ss tt uu"),     # disjoint from everything but the hot word
         (9, "hot " * 3 + "only hot words here"),  # hot shingle stress
         (10, "hot qq rr ss tt"),
+        (11, "hot w9 w10 only"),   # hot word plus doc 3's rare tail
     ]
     rng = random.Random(26)
     vocab = ["a", "b", "c", "d", "e", "f"]
@@ -411,50 +412,6 @@ def test_suffix_family_filter_boundary_pair_survives(spark):
     assert pruned == naive == [(1, 2, 0.5)], (
         f"boundary pair lost or distorted: pruned={pruned} naive={naive}"
     )
-
-
-def test_prefix_filter_encoded_verify_matches_string_verify(spark):
-    """The r14 scale adoption (SCALE.md r14 contract): the verify arrays
-    carry audited xxhash64 shingle ids instead of strings. Intersection
-    and size arithmetic are invariant under any injective relabeling, so
-    the encoded output must equal the r9–r13 string-array output — every
-    pair, every rounded jaccard value — on a corpus with threshold ties,
-    identical docs, sub-shingle-width docs and hot shingles. (The
-    adversarial-losslessness test above already proves the DEFAULT
-    encoded path against the naive kernel; this pins the two verify
-    spellings against each other so a future encoding change that
-    perturbed rounded values, not just membership, is caught by name.)"""
-    from xgboost_ray_spark.operators.dedup import prefix_filtered_jaccard_pairs
-
-    docs = spark.createDataFrame(
-        [
-            (1, "w1 w2 w3 w4"),
-            (2, "w1 w2 w3 w5"),
-            (3, "w1 w2 w9 w10"),
-            (4, "w1 w2 w3 w4"),
-            (5, "zz"),
-            (6, "zz"),
-            (7, "hot " * 3 + "only hot words here"),
-            (8, "hot w9 w10 only"),
-        ],
-        "doc_id long, text string",
-    )
-    for n, t in ((1, 0.6), (2, 0.5), (1, 1.0)):
-        enc = sorted(
-            (r.doc_a, r.doc_b, r.jaccard)
-            for r in prefix_filtered_jaccard_pairs(
-                docs, n=n, threshold=t, encode_verify=True
-            ).collect()
-        )
-        raw = sorted(
-            (r.doc_a, r.doc_b, r.jaccard)
-            for r in prefix_filtered_jaccard_pairs(
-                docs, n=n, threshold=t, encode_verify=False
-            ).collect()
-        )
-        assert enc == raw, f"encoded verify diverged at n={n} t={t}"
-        if t == 0.6:
-            assert (1, 2, 0.6) in enc, "threshold tie must survive encoding"
 
 
 def test_gid_injectivity_audit_raises_on_collision(spark):

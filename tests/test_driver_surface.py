@@ -36,14 +36,10 @@ Every allowlisted site is O(1) or K-sized w.r.t. the corpus:
     collision can never silently corrupt the exact-Jaccard output.
   * relational.py/s01f_binaryfile_scan: bounded fixture write (the demo
     corpus slice materialized once into the scratch layout).
-  * similarity.py/kmeans_assign (x4 static sites, at most 3 live per
-    mode): the M-row (64 x dim ints) hash-ranked seed sample of the
-    default one-pass seeding (since r15), the legacy mode's 1-row
-    min-vec_id seed and 1-row-per-pass farthest-point argmax
-    (TakeOrderedAndProject, K-1 passes, seed_sample=None), and the
-    K*dim integer centroid pullback per Lloyd round — bounded driver
-    state by design (pushed back as plan literals for zero-shuffle
-    assignment/seeding distance maps).
+  * similarity.py/kmeans_assign (x2): the M-row (64 x dim ints)
+    hash-ranked seed sample of the one-pass seeding, and the K*dim
+    integer centroid pullback per Lloyd round — bounded driver state by
+    design (pushed back as plan literals for zero-shuffle assignment).
   * ml/barrier.py/_run_barrier_job: num_workers rows of (rank, model
     bytes) — the trained booster, not data.
 
@@ -75,10 +71,8 @@ ALLOWED: dict[tuple[str, str, str], int] = {
     ("operators/dedup.py", "dup_clusters", "collect"): 1,
     ("operators/dedup.py", "_audit_gid_injective", "collect"): 1,
     ("operators/relational.py", "s01f_binaryfile_scan", "collect"): 1,
-    # M-row seed sample (one-pass mode) + 1-row first-seed select +
-    # 1-row farthest-point argmax per pass (legacy mode) + K*dim
-    # centroid pullback — four audited static sites
-    ("operators/similarity.py", "kmeans_assign", "collect"): 4,
+    # M-row seed sample + K*dim centroid pullback
+    ("operators/similarity.py", "kmeans_assign", "collect"): 2,
     ("ml/barrier.py", "_run_barrier_job", "collect"): 1,
     ("operators/profile.py", "profile", "crossJoin"): 1,
     ("operators/profile.py", "s32b_data_quality", "crossJoin"): 1,

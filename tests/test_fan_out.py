@@ -16,12 +16,7 @@ from pyspark.sql import functions as F
 from tests.conftest import SF_SMOKE
 from xgboost_ray_spark.catalog import load_table
 from xgboost_ray_spark.operators.dedup import fan_out
-
-
-def _physical_plan(df) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
+from xgboost_ray_spark.plans.explain import formatted_plan
 
 
 def test_fan_out_spreads_undersplit_input_by_doc_id_hash(spark):
@@ -30,7 +25,7 @@ def test_fan_out_spreads_undersplit_input_by_doc_id_hash(spark):
     spread = fan_out(docs)
     target = spark.sparkContext.defaultParallelism
     assert spread.rdd.getNumPartitions() == target
-    plan = _physical_plan(spread)
+    plan = formatted_plan(spread)
     # Keyed spread: hash of the unique doc_id, not keyless round-robin
     # (which would add a sortBeforeRepartition pass over the payload).
     assert "hashpartitioning(doc_id" in plan
@@ -58,7 +53,7 @@ def test_fan_out_falls_back_to_round_robin_without_doc_id(spark):
     assert frame.rdd.getNumPartitions() == 1
     spread = fan_out(frame)
     assert spread.rdd.getNumPartitions() == target
-    assert "roundrobin" in _physical_plan(spread).lower()
+    assert "roundrobin" in formatted_plan(spread).lower()
 
 
 def test_fan_out_keyed_spread_loses_no_rows(spark):

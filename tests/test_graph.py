@@ -6,15 +6,23 @@ symmetric fixed points, dangling-free invariants).
 
 from __future__ import annotations
 
+import math
+
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from tests.kmeans_mirror import farthest_point_order, sqdist
 from xgboost_ray_spark.operators.graph import (
     PR_BASE,
     PR_SCALE,
     pagerank,
 )
-from xgboost_ray_spark.operators.similarity import KM_SCALE, kmeans_assign
+from xgboost_ray_spark.operators.similarity import (
+    KM_SCALE,
+    KM_SEED_SAMPLE,
+    kmeans_assign,
+)
 
 
 def test_pagerank_two_node_cycle_is_fixed_point(spark):
@@ -149,29 +157,49 @@ def test_kmeans_assigns_each_point_to_nearest_centroid(spark):
     assert len(blob_a) == 1 and len(blob_b) == 1 and blob_a != blob_b
 
 
-def test_kmeans_onepass_seeding_equals_legacy_when_sample_covers_corpus(spark):
-    """The r15 one-pass seeding's exactness envelope (SCALE.md contract):
-    whenever the hash-ranked sample covers the whole corpus (N <= M), the
-    driver-side greedy sees the same point set as the legacy K-1-pass
-    greedy, seed 1 is the same min-vec_id point, and the tie-break and
-    non-exclusion semantics match — so the ENTIRE output (clusters,
-    distances) must be bit-identical between the two modes. Pinned on an
-    irregular 40-point corpus (clustered + stragglers + a duplicate
-    coordinate pair) where any semantic drift in the greedy would move a
-    seed and the trajectory with it."""
+def test_kmeans_matches_pure_python_mirror(spark):
+    """The whole k-means run — one-pass seeding, Lloyd rounds and the final
+    assignment — must equal a pure-Python mirror of it. The hash-ranked
+    seed sample (KM_SEED_SAMPLE points) covers this 40-point corpus, so
+    the mirror's greedy runs over every point. Pinned on an irregular
+    corpus (clustered + stragglers + a duplicate coordinate pair) where
+    any semantic drift in the greedy, the (dist, k) tie-break or the
+    integer centroid update would move a seed or a point."""
     rows = (
         [(i, [0.31 + 0.003 * (i % 5), 0.29 - 0.002 * i]) for i in range(12)]
         + [(20 + i, [-0.35 + 0.004 * i, -0.3]) for i in range(12)]
         + [(40 + i, [0.4 - 0.05 * i, -0.45 + 0.03 * i]) for i in range(14)]
         + [(60, [0.11, 0.17]), (61, [0.11, 0.17])]  # exact duplicate coords
     )
+    assert len(rows) <= KM_SEED_SAMPLE
     vecs = spark.createDataFrame(rows, ["vec_id", "embedding"]).withColumn(
         "embedding", F.col("embedding").cast("array<float>")
     )
-    one_pass = sorted(
-        map(tuple, kmeans_assign(vecs, k=5, iters=2, seed_sample=64).collect())
-    )
-    legacy = sorted(
-        map(tuple, kmeans_assign(vecs, k=5, iters=2, seed_sample=None).collect())
-    )
-    assert one_pass == legacy
+    got = sorted(map(tuple, kmeans_assign(vecs, k=5, iters=2).collect()))
+
+    # Quantize the float32 values the engine reads: FLOOR((x + 0.5) * SCALE)
+    # in double, like _km_quantize_expr.
+    ids = [vid for vid, _ in rows]
+    qs = [
+        [math.floor((float(np.float32(v)) + 0.5) * KM_SCALE) for v in p]
+        for _, p in rows
+    ]
+    assert ids == sorted(ids)  # the greedy's ties go to the lower vec_id
+    # Non-negative coordinates: floor division equals Spark's truncating div.
+    assert min(min(q) for q in qs) >= 0
+    cents = [(kk, qs[i]) for kk, i in enumerate(farthest_point_order(qs, 5))]
+
+    def assign():
+        return [min((sqdist(q, c), kk) for kk, c in cents) for q in qs]
+
+    for _ in range(2):
+        best = assign()
+        updated = []
+        for kk, c in cents:
+            members = [q for q, (_, bk) in zip(qs, best) if bk == kk]
+            if members:  # an empty cluster keeps its centroid
+                c = [sum(col) // len(members) for col in zip(*members)]
+            updated.append((kk, c))
+        cents = updated
+    want = sorted((vid, kk, d) for vid, (d, kk) in zip(ids, assign()))
+    assert got == want

@@ -581,23 +581,13 @@ def test_farthest_point_seed_order_matches_pure_python(spark, pts):
 
     import math
 
+    from tests.kmeans_mirror import farthest_point_order
+
     coords = [[v / 256 for v in p] for p in pts]
     # FLOOR like both engines; v is a /256 rational in [-0.5, 0.5), so
     # (v + 0.5) * SCALE is exact in float64 and the floor is unambiguous
     qs = [[math.floor((v + 0.5) * KM_SCALE) for v in p] for p in coords]
-
-    def sqd(a, b):
-        return sum((x - y) ** 2 for x, y in zip(a, b))
-
-    order = [0]  # seed 0 = the min-vec_id point
-    while len(order) < len(qs):
-        best = min(
-            (
-                (-min(sqd(q, qs[s]) for s in order), i)
-                for i, q in enumerate(qs)
-            ),
-        )
-        order.append(best[1])
+    order = farthest_point_order(qs, len(qs))
 
     vecs = spark.createDataFrame(
         [(i, p) for i, p in enumerate(coords)], ["vec_id", "embedding"]

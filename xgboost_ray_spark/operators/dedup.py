@@ -1226,20 +1226,19 @@ def _audit_gid_injective(dfreq: DataFrame, id_expr: Column | None = None) -> Non
     :func:`prefix_filtered_jaccard_pairs` is CALLED, before and whether
     or not the returned DataFrame is ever evaluated): ``count(*)`` rows
     of the distinct-shingle frame vs ``count(distinct xxhash64(g))``,
-    and a hard failure on mismatch (never a silent wrong answer; the
-    caller can re-run with a salted order or fall back to string arrays,
-    both of which are corpus-level incident responses, not engine
-    defaults). Eager-at-build is SOUND here, not just convenient: the
+    and a hard failure on mismatch (never a silent wrong answer; a
+    collision is a corpus-level incident, not something the engine
+    papers over). Eager-at-build is SOUND here, not just convenient: the
     audited frame is the ``spill()``-materialized document-frequency
     scratch, itself derived from the frozen shingle spill every later
     evaluation of the returned plan re-reads, so the audited distinct-
     shingle universe is exactly the one the verify arrays draw from — a
     re-evaluation cannot see shingles the audit did not. The trade-off is
     the converse: a builder call whose plan is never executed still pays
-    the audit job. Callers that construct the plan speculatively should
-    pass ``encode_verify=False`` (string arrays need no audit) or delay
-    the builder call until evaluation is certain. The collected result is
-    one 2-int row — audited in tests/test_driver_surface.py.
+    the audit job, so callers that construct the plan speculatively
+    should delay the builder call until evaluation is certain. The
+    collected result is one 2-int row — audited in
+    tests/test_driver_surface.py.
     """
     row = dfreq.agg(
         F.count("*").alias("n_g"),
@@ -1251,9 +1250,7 @@ def _audit_gid_injective(dfreq: DataFrame, id_expr: Column | None = None) -> Non
         raise RuntimeError(
             "PPJoin verify encoding is not injective on this corpus: "
             f"{row['n_g']} distinct shingles -> {row['n_gid']} distinct "
-            "ids. Exact-Jaccard output cannot be guaranteed; re-run with "
-            "string verify arrays (prefix_filtered_jaccard_pairs(..., "
-            "encode_verify=False))."
+            "ids. Exact-Jaccard output cannot be guaranteed."
         )
 
 
@@ -1261,7 +1258,6 @@ def prefix_filtered_jaccard_pairs(
     docs: DataFrame,
     n: int = JACCARD_NGRAM,
     threshold: float = JACCARD_THRESHOLD,
-    encode_verify: bool = True,
 ) -> DataFrame:
     """Exact Jaccard-threshold pairs via PPJoin-style prefix filtering.
 
@@ -1302,22 +1298,20 @@ def prefix_filtered_jaccard_pairs(
     remains the approximate prefilter when a small false-negative rate is
     acceptable.
 
-    The verify arrays are DICTIONARY-ENCODED (``encode_verify=True``, the
-    default since round 14): each shingle string is replaced by its
-    ``xxhash64`` id before ``collect_set``, so the verify shuffle — which
-    ships each doc's array once per candidate it appears in — moves ~8 B
-    ints instead of ~25 B strings.  The sf10 decade probe (SCALE.md) found
-    the string arrays crossing the single-host shuffle-memory ceiling
-    (200.2 s wall for 10.000×-linear measured work); the encoded variant
-    measured 51.4 s on identical output.  Exactness is preserved by
+    The verify arrays are DICTIONARY-ENCODED: each shingle string is
+    replaced by its ``xxhash64`` id before ``collect_set``, so the verify
+    shuffle — which ships each doc's array once per candidate it appears
+    in — moves ~8 B ints instead of ~25 B strings.  The sf10 decade probe
+    (SCALE.md) found string arrays crossing the single-host shuffle-memory
+    ceiling (200.2 s wall for 10.000×-linear measured work); the encoded
+    arrays measured 51.4 s on identical output.  Exactness is preserved by
     construction plus audit: the intersection/size arithmetic is invariant
     under any INJECTIVE relabeling of shingles, and injectivity on the
     actual corpus is proven once per builder call — eagerly, at
     plan-construction time, against the frozen shingle spill every later
     evaluation re-reads — by :func:`_audit_gid_injective` (count-distinct
     audit; hard failure, never a silent collision; see its docstring for
-    the cost/timing contract).  ``encode_verify=False`` restores the
-    r9–r13 string-array verify and skips the audit.
+    the cost/timing contract).
     """
     from pyspark.sql import Window as W
 
@@ -1329,10 +1323,6 @@ def prefix_filtered_jaccard_pairs(
         fan_out(docs).select("doc_id", F.explode(grams).alias("g")).distinct(),
         "ppjoin_shingles",
     )
-    if encode_verify:
-        verify_src = sh.select("doc_id", F.xxhash64("g").alias("g"))
-    else:
-        verify_src = sh
     # Like pref, the token-array table feeds BOTH verify joins (doc_a and
     # doc_b side); spilled once, the collect_set aggregation over the full
     # shingle frame runs once instead of twice, and each join side is a
@@ -1341,7 +1331,11 @@ def prefix_filtered_jaccard_pairs(
     # submitted BEFORE the dfreq spill and overlaps it (guide §2.6): the
     # producer wall drops from sh + dfreq + max(pref, toks, audit) to
     # sh + max(dfreq + max(pref, audit), toks).
-    toks_plan = verify_src.groupBy("doc_id").agg(F.collect_set("g").alias("ts"))
+    toks_plan = (
+        sh.select("doc_id", F.xxhash64("g").alias("g"))
+        .groupBy("doc_id")
+        .agg(F.collect_set("g").alias("ts"))
+    )
     pool = ThreadPoolExecutor(max_workers=3)
     try:
         fut_toks = pool.submit(spill, toks_plan, "ppjoin_toks")
@@ -1393,19 +1387,16 @@ def prefix_filtered_jaccard_pairs(
         # scale. Failures propagate through result(); the finally joins every
         # thread, so a leg failure is loud and bounded, never a hang.
         fut_pref = pool.submit(spill, pref_plan, "ppjoin_pref")
-        fut_audit = (
-            pool.submit(_audit_gid_injective, dfreq) if encode_verify else None
-        )
+        fut_audit = pool.submit(_audit_gid_injective, dfreq)
         pref = fut_pref.result()
         toks = fut_toks.result()
-        if fut_audit is not None:
-            # dfreq is spilled parquet by now, so the audit's count/
-            # count_distinct pair reads the materialized distinct-shingle
-            # rows directly — no re-aggregation of the shingle frame (the
-            # ADVICE r14 cost note: the audit is still eager-at-build, but
-            # its price dropped from a full groupBy pass to one scan of
-            # the df table, overlapped with the other producer legs).
-            fut_audit.result()
+        # dfreq is spilled parquet by now, so the audit's count/
+        # count_distinct pair reads the materialized distinct-shingle rows
+        # directly — no re-aggregation of the shingle frame (the ADVICE r14
+        # cost note: the audit is still eager-at-build, but its price
+        # dropped from a full groupBy pass to one scan of the df table,
+        # overlapped with the other producer legs).
+        fut_audit.result()
     finally:
         pool.shutdown(wait=True)
     # Candidate pruning beyond the prefix theorem (both classic PPJoin

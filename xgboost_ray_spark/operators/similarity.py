@@ -1013,7 +1013,7 @@ def quantized_topk(
 KM_K = 8  # clusters
 KM_ITERS = 2  # (assign, update) rounds before the final assignment
 KM_SCALE = 10_000  # fixed-point factor; [-0.5,0.5] floats -> [0,10000] ints
-# One-pass seeding (since r15; contract in SCALE.md): size of the
+# One-pass seeding (contract in SCALE.md): size of the
 # hash-ranked seed sample (8x oversampling per cluster), and the odd
 # multiplicative-hash constant (Knuth) whose BIGINT arithmetic is exact
 # in both Spark and DuckDB — injective mod 2^32 for distinct ids < 2^32,
@@ -1045,30 +1045,10 @@ def _km_quantize_expr() -> Column:
     )
 
 
-def _km_sqdist_sql(vec_sql: str) -> str:
-    """Integer squared distance between the quantized column ``q`` and
-    ``vec_sql`` — the ONE spelling shared by the seeding distance map
-    and the assignment step. Integer-exactness ACROSS those two sites is
-    the correctness invariant the oracle hash pins; a single builder
-    makes it impossible to edit one and silently break the other."""
-    return (
-        f"aggregate(zip_with(q, {vec_sql}, (a, b) -> (a - b) * (a - b)),"
-        " CAST(0 AS BIGINT), (acc, x) -> acc + x)"
-    )
-
-
-def _km_int_array_sql(vals) -> str:
-    """BIGINT array literal (`L` suffix keeps elements BIGINT) — shared
-    by the seed literals and the centroid literals for the same reason
-    as :func:`_km_sqdist_sql`."""
-    return "array({})".format(", ".join(f"{int(v)}L" for v in vals))
-
-
 def kmeans_assign(
     vectors: DataFrame,
     k: int = KM_K,
     iters: int = KM_ITERS,
-    seed_sample: int | None = KM_SEED_SAMPLE,
 ) -> DataFrame:
     """Exact fixed-point Lloyd's k-means: (vec_id, cluster, dist).
 
@@ -1089,29 +1069,24 @@ def kmeans_assign(
     Fixed-first-K seeding is ordering-fragile: on an 8-blob control with
     blob-sorted ids all K seeds land in one blob and Lloyd converges at
     ~97x the best-of-random inertia, while farthest-point reads 1.00x
-    (measured round 9; contract in SCALE.md). Since round 15 the greedy
-    runs ONE-PASS by default (``seed_sample`` = 64): a single
-    TakeOrderedAndProject scan collects the top-M points by the
-    multiplicative hash ``(vec_id * 2654435761) % 2^32`` (exact BIGINT
-    arithmetic in both Spark and DuckDB, vec_id tie-break), then the
-    greedy refines driver-side over the M-point sample in exact integer
-    Python — seed 1 = the sample's min-vec_id point, each next seed the
-    sample point with max min-squared-distance to the chosen seeds,
-    ties (dist DESC, vec_id ASC), chosen points NOT excluded (an
-    all-zero pass re-picks the lowest id — the starved-cluster
-    semantics the tests pin). That replaces the previous K-1 sequential
-    full-corpus scans with one scan regardless of K — at 100 TB, 7
-    fewer linear passes before Lloyd's begins — while the trajectory
-    stays CTE-unrollable (the oracle samples with the same hash and
-    unrolls the same greedy over 64 rows). ``seed_sample=None`` keeps
-    the r10-r14 exact-on-corpus multi-pass greedy (each of the K-1
-    passes a zero-shuffle distance map + TakeOrderedAndProject argmax),
-    retained for the A/B and for corpora where a sub-1/K-mass cluster
-    must never be missed (a 1/K-mass blob misses the 8K sample with
-    probability ~e^-8; SCALE.md quality gate). k-means|| remains the
-    large-K production path; at small K it saves no passes and its
-    weighted driver-side reduction would break pure-SQL oracle
-    expressibility (round-9 adjudication, SCALE.md).
+    (measured round 9; contract in SCALE.md). The greedy runs ONE-PASS
+    (``KM_SEED_SAMPLE`` = 64): a single TakeOrderedAndProject scan
+    collects the top-M points by the multiplicative hash
+    ``(vec_id * 2654435761) % 2^32`` (exact BIGINT arithmetic in both
+    Spark and DuckDB, vec_id tie-break), then the greedy refines driver-side over
+    the M-point sample in exact integer Python — seed 1 = the sample's
+    min-vec_id point, each next seed the sample point with max
+    min-squared-distance to the chosen seeds, ties (dist DESC, vec_id
+    ASC), chosen points NOT excluded (an all-zero pass re-picks the
+    lowest id — the starved-cluster semantics the tests pin). That is
+    one scan regardless of K instead of K-1 sequential full-corpus scans
+    — at 100 TB, 7 fewer linear passes before Lloyd's begins — while the
+    trajectory stays CTE-unrollable (the oracle samples with the same
+    hash and unrolls the same greedy over 64 rows). A 1/K-mass blob
+    misses the 8K sample with probability ~e^-8 (SCALE.md quality gate).
+    k-means|| remains the large-K production path; at small K it saves
+    no passes and its weighted driver-side reduction would break
+    pure-SQL oracle expressibility (round-9 adjudication, SCALE.md).
     """
     pts = vectors.select("vec_id", _km_quantize_expr().alias("q")).persist()
     # The materializing count doubles as the emptiness probe: raising here
@@ -1122,59 +1097,38 @@ def kmeans_assign(
             "kmeans_assign: empty input — the vectors frame has no rows "
             "to seed from (was it fully filtered upstream?)"
         )
-    if seed_sample is not None:
-        # ONE-PASS seeding (default since r15; contract + A/B in
-        # SCALE.md): one TakeOrderedAndProject scan pulls the top-M
-        # hash-ranked points (M*dim ints of driver state — the same
-        # bounded class as the Lloyd centroid pullback), then the exact
-        # greedy runs over the sample in integer Python.
-        sample_rows = (
-            pts.select(
-                "vec_id",
-                "q",
-                (
-                    (F.col("vec_id").cast("long") * F.lit(KM_SEED_HASH_MULT))
-                    % F.lit(KM_SEED_HASH_MOD)
-                ).alias("h"),
-            )
-            .orderBy("h", "vec_id")
-            .limit(seed_sample)
-            .collect()
+    # ONE-PASS seeding (contract + A/B in SCALE.md): one
+    # TakeOrderedAndProject scan pulls the top-M hash-ranked points (M*dim
+    # ints of driver state — the same bounded class as the Lloyd centroid
+    # pullback), then the exact greedy runs over the sample in integer
+    # Python.
+    sample_rows = (
+        pts.select(
+            "vec_id",
+            "q",
+            (
+                (F.col("vec_id").cast("long") * F.lit(KM_SEED_HASH_MULT))
+                % F.lit(KM_SEED_HASH_MOD)
+            ).alias("h"),
         )
-        # Ascending vec_id so Python max() (which keeps the FIRST
-        # maximal element) realizes the (dist DESC, vec_id ASC)
-        # tie-break for free.
-        samp = sorted((r["vec_id"], list(r["q"])) for r in sample_rows)
+        .orderBy("h", "vec_id")
+        .limit(KM_SEED_SAMPLE)
+        .collect()
+    )
+    # Ascending vec_id so Python max() (which keeps the FIRST maximal
+    # element) realizes the (dist DESC, vec_id ASC) tie-break for free.
+    samp = sorted((r["vec_id"], list(r["q"])) for r in sample_rows)
 
-        def _sq(qa: list[int], qb: list[int]) -> int:
-            return sum((a - b) * (a - b) for a, b in zip(qa, qb))
+    def _sq(qa: list[int], qb: list[int]) -> int:
+        return sum((a - b) * (a - b) for a, b in zip(qa, qb))
 
-        seed_qs: list[list[int]] = [samp[0][1]]
-        mind = [_sq(q, seed_qs[0]) for _, q in samp]
-        for _ in range(1, k):
-            best_i = max(range(len(samp)), key=lambda i: mind[i])
-            best_q = samp[best_i][1]
-            seed_qs.append(best_q)
-            mind = [min(m, _sq(q, best_q)) for m, (_, q) in zip(mind, samp)]
-    else:
-        # Legacy exact-on-corpus greedy (r10-r14): K-1 sequential
-        # zero-shuffle distance maps, one global argmax each.
-        first_rows = pts.orderBy("vec_id").limit(1).collect()
-        seed_qs = [list(first_rows[0]["q"])]
-        for _ in range(1, k):
-            # One SQL-text literal per pass (array of the seeds chosen so
-            # far) — the same single-parse rationale as cent_literal below.
-            arr = ", ".join(_km_int_array_sql(s) for s in seed_qs)
-            min_dist = F.expr(
-                f"array_min(transform(array({arr}), s -> {_km_sqdist_sql('s')}))"
-            )
-            farthest = (
-                pts.select("vec_id", "q", min_dist.alias("min_dist"))
-                .orderBy(F.col("min_dist").desc(), "vec_id")
-                .limit(1)
-                .collect()[0]
-            )
-            seed_qs.append(list(farthest["q"]))
+    seed_qs: list[list[int]] = [samp[0][1]]
+    mind = [_sq(q, seed_qs[0]) for _, q in samp]
+    for _ in range(1, k):
+        best_i = max(range(len(samp)), key=lambda i: mind[i])
+        best_q = samp[best_i][1]
+        seed_qs.append(best_q)
+        mind = [min(m, _sq(q, best_q)) for m, (_, q) in zip(mind, samp)]
     cents: list[tuple[int, list[int]]] = list(enumerate(seed_qs))
 
     def cent_literal() -> Column:
@@ -1186,7 +1140,9 @@ def kmeans_assign(
         # rationale; round-trip count pinned in tests/test_build_cost.py).
         # Integer literals render exactly; `L` suffix keeps them BIGINT.
         arr = ", ".join(
-            f"struct({kk}L AS k, {_km_int_array_sql(c)} AS c)"
+            "struct({}L AS k, array({}) AS c)".format(
+                kk, ", ".join(f"{int(v)}L" for v in c)
+            )
             for kk, c in cents
         )
         return F.expr(f"array({arr})")
@@ -1194,7 +1150,8 @@ def kmeans_assign(
     def assign(frame: DataFrame) -> DataFrame:
         best = F.expr(
             "array_min(transform(cents, s -> struct("
-            f"{_km_sqdist_sql('s.c')} AS d, s.k AS k)))"
+            "aggregate(zip_with(q, s.c, (a, b) -> (a - b) * (a - b)),"
+            " CAST(0 AS BIGINT), (acc, x) -> acc + x) AS d, s.k AS k)))"
         )
         return frame.withColumn("cents", cent_literal()).select(
             "vec_id",
@@ -1264,7 +1221,7 @@ def _kmeans_oracle_sql() -> str:
             FROM embeddings
           )
         )""",
-        # One-pass seeding sample (since r15, SCALE.md contract): the
+        # One-pass seeding sample (SCALE.md contract): the
         # top-M points by the same exact-BIGINT multiplicative hash the
         # Spark scan ranks by, vec_id tie-break.
         f"""smp AS MATERIALIZED (

@@ -8,17 +8,16 @@ hot paths stay inside WholeStageCodegen. These helpers parse
 
 from __future__ import annotations
 
-import io
-from contextlib import redirect_stdout
-
 from pyspark.sql import DataFrame
 
 
 def formatted_plan(df: DataFrame) -> str:
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
+    """The text ``df.explain("formatted")`` prints, returned instead of
+    printed: no process-wide stdout swap, which would also catch output
+    from other threads."""
+    return df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
 
 
 def has_pushed_filters(df: DataFrame) -> bool:
@@ -72,10 +71,10 @@ def has_broadcast_join(df: DataFrame) -> bool:
 
 
 def simple_plan(df: DataFrame) -> str:
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        df.explain()
-    return buf.getvalue()
+    """The text ``df.explain()`` prints (see :func:`formatted_plan`)."""
+    return df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "simple"
+    )
 
 
 def executed_plan(df: DataFrame) -> str:
