@@ -614,6 +614,45 @@ def test_train_rejects_unknown_backend(spark):
         train({}, df, spec, num_boost_round=1, backend="xgboost")
 
 
+@pytest.mark.parametrize("max_restarts", [0, 1])
+def test_mllib_fit_failure_restarts_then_propagates(spark, monkeypatch, max_restarts):
+    """The MLlib backend shares the xgb backend's restart loop: a fit that
+    fails once succeeds on the retry when max_restarts allows one, and
+    with no restarts left the injected error propagates as it is."""
+    from pyspark.ml.classification import GBTClassifier
+
+    real_fit = GBTClassifier._fit
+    calls = []
+
+    def flaky_fit(self, dataset):
+        calls.append(1)
+        if len(calls) == 1:
+            raise RuntimeError("injected fit failure")
+        return real_fit(self, dataset)
+
+    monkeypatch.setattr(GBTClassifier, "_fit", flaky_fit)
+    df = learnable_frame(spark, repeat=4)
+    spec = MatrixSpec(label_cols=("label",), feature_cols=("x1", "x2"))
+
+    def run():
+        return train(
+            {"objective": "binary:logistic", "max_depth": 2},
+            df,
+            spec,
+            num_boost_round=2,
+            gbt_params=GBTParams(num_workers=2, max_restarts=max_restarts),
+            backend="mllib",
+        )
+
+    if max_restarts:
+        assert run().model is not None
+        assert len(calls) == 2
+    else:
+        with pytest.raises(RuntimeError, match="^injected fit failure$"):
+            run()
+        assert len(calls) == 1
+
+
 def test_predict_dispatches_transformless_model_to_barrier(spark, monkeypatch):
     """The xgb backend's TrainResult.model is an xgboost Booster, which
     has no .transform — predict() must route it through predict_barrier

@@ -327,3 +327,49 @@ def test_write_orc_partitioned_roundtrip(spark, tmp_path):
     assert sorted(r.id for r in back.collect()) == list(range(60))
     one = back.filter(F.col("p") == 1)
     assert one.count() == 20
+
+
+def _load_events(spark, sf_dir):
+    from xgboost_ray_spark.catalog import load_table
+
+    return load_table(spark, sf_dir, "events")
+
+
+def _stream_events(spark, sf_dir):
+    from xgboost_ray_spark.streaming.windows import read_events_stream
+
+    return read_events_stream(spark, sf_dir)
+
+
+@pytest.mark.parametrize("reader", [_load_events, _stream_events])
+def test_events_nanos_timestamps_rejected_at_read(spark, tmp_path, reader):
+    """events.ts is stored in micros; a TIMESTAMP(NANOS) file must fail at
+    read, never be cast to a timestamp. Spark rejects it outright, and a
+    session that reads nanos as bigint (legacy nanosAsLong) gets the
+    reader contract's ValueError instead of ts taken as seconds."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.errors import AnalysisException
+
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array([1, 2], pa.int64()),
+                "ts": pa.array(
+                    [1_700_000_000_123_456_789, 1_700_000_001_000_000_000],
+                    pa.timestamp("ns"),
+                ),
+            }
+        ),
+        str(tmp_path / "events.parquet"),
+    )
+    conf = "spark.sql.legacy.parquet.nanosAsLong"
+    spark.conf.unset(conf)
+    with pytest.raises(AnalysisException, match="PARQUET_TYPE_ILLEGAL"):
+        reader(spark, str(tmp_path))
+    spark.conf.set(conf, "true")
+    try:
+        with pytest.raises(ValueError, match="'ts' must be a TIMESTAMP"):
+            reader(spark, str(tmp_path))
+    finally:
+        spark.conf.unset(conf)

@@ -117,76 +117,31 @@ def table_path(sf_dir: str, name: str) -> str:
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; have {TABLES}")
-    if name == "events":
-        # Older testdata generations stored events.ts as TIMESTAMP(NANOS);
-        # externally created sessions (e.g. a harness passing its own
-        # SparkSession) reject that type without this runtime-settable conf.
-        # Set it defensively on every events read — through the guarded
-        # helper, so a restricted session fails loudly instead of corrupting
-        # timestamps. Harmless for micros-typed data — so on a
-        # conf-restricted session, escalate only if THIS table actually
-        # stores nanos (footer probe); micros-typed data reads correctly
-        # without the conf and must not fail on an irrelevant setting.
-        from xgboost_ray_spark.registry import set_runtime_conf
-
-        try:
-            set_runtime_conf(
-                spark, "spark.sql.legacy.parquet.nanosAsLong", "true"
-            )
-        except RuntimeError:
-            if _events_ts_is_nanos(table_path(sf_dir, name)):
-                raise
     df = spark.read.parquet(table_path(sf_dir, name))
     if name == "events":
-        df = _fold_nanos_ts(df)
-    # Single NTZ-cast site: normalize_event_ts's legacy nanos fold above
-    # never produces NTZ, so one normalize_timestamps covers every table.
+        return normalize_event_ts(df)
     return normalize_timestamps(df)
 
 
-def _events_ts_is_nanos(path: str) -> bool:
-    """Footer probe: does the events parquet at ``path`` (file or Spark
-    part-file directory) store ``ts`` as TIMESTAMP(NANOS)? Driver-side
-    pyarrow schema read of one footer — no Spark job. Unreadable/absent
-    footers return True (conservative: keep the loud failure)."""
-    import glob
+def normalize_event_ts(df: DataFrame) -> DataFrame:
+    """The events reader contract: ``ts`` is a UTC TIMESTAMP after
+    :func:`normalize_timestamps`, or the read fails.
 
-    try:
-        import pyarrow.parquet as pq
-
-        files = (
-            sorted(glob.glob(os.path.join(path, "*.parquet")))
-            if os.path.isdir(path)
-            else [path]
-        )
-        if not files:
-            return True
-        field = pq.read_schema(files[0]).field("ts")
-        return str(field.type) == "timestamp[ns]"
-    except Exception:
-        return True
-
-
-def _fold_nanos_ts(df: DataFrame) -> DataFrame:
-    """ns->us fold only (TIMESTAMP(NANOS) read as long under nanosAsLong);
-    integer floor division matches DuckDB's nanos truncation exactly."""
-    from pyspark.sql import functions as F
+    events.parquet stores ``ts`` as naive TIMESTAMP(MICROS). Spark rejects
+    a TIMESTAMP(NANOS) file at read with PARQUET_TYPE_ILLEGAL, unless the
+    session enables the legacy nanos-as-long parquet option: then ``ts``
+    arrives as a bigint, which a timestamp cast would take as seconds, so
+    any non-timestamp ``ts`` raises ``ValueError`` here. Shared by the
+    batch catalog and the streaming reader."""
     from pyspark.sql import types as T
 
-    if isinstance(df.schema["ts"].dataType, T.LongType):
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return df
-
-
-def normalize_event_ts(df: DataFrame) -> DataFrame:
-    """Fold every generation of events.ts storage to a UTC TIMESTAMP.
-
-    The testdata has shipped ts as TIMESTAMP(NANOS) — read as a long under
-    nanosAsLong; converted ns -> us with integer floor division, exactly
-    DuckDB's nanos truncation — and, since the 2026-08-13 regen, as naive
-    TIMESTAMP(MICROS) (the NTZ cast). Public entry point for streaming
-    readers; ``load_table`` composes the same two steps itself."""
-    return normalize_timestamps(_fold_nanos_ts(df))
+    ts_type = df.schema["ts"].dataType
+    if not isinstance(ts_type, (T.TimestampType, T.TimestampNTZType)):
+        raise ValueError(
+            f"events column 'ts' must be a TIMESTAMP, found "
+            f"{ts_type.simpleString()}"
+        )
+    return normalize_timestamps(df)
 
 
 def normalize_timestamps(df: DataFrame) -> DataFrame:

@@ -235,34 +235,18 @@ def train(
     assembled = assembled.persist(StorageLevel.MEMORY_AND_DISK)
     container.after_data_loading(cb_ctx)
     container.before_train(cb_ctx)
+    from xgboost_ray_spark.ml.barrier import run_with_restarts
+    from xgboost_ray_spark.ml.stopping import StopFlag
+
     start = time.perf_counter()
-    attempts = gbt.max_restarts + 1
-    last_err: Exception | None = None
-    model = None
-    stop_flag = None
-    if gbt.stop_flag_path:
-        from xgboost_ray_spark.ml.stopping import StopFlag
-
-        stop_flag = StopFlag(gbt.stop_flag_path)
+    stop_flag = StopFlag(gbt.stop_flag_path) if gbt.stop_flag_path else None
     try:
-        for _ in range(attempts):
-            if stop_flag is not None and stop_flag.should_stop():
-                from xgboost_ray_spark.ml.barrier import TrainingStopped
-
-                raise TrainingStopped(
-                    f"cooperative stop requested (flag: {stop_flag.path})"
-                )
-            try:
-                model = est.fit(assembled)
-                break
-            except Exception as err:  # pragma: no cover - failure-injection path
-                last_err = err
+        # The same restart/stop loop as the xgb backend (train_barrier).
+        model = run_with_restarts(
+            lambda _: est.fit(assembled), gbt.max_restarts, stop_flag=stop_flag
+        )
     finally:
         assembled.unpersist()
-    if model is None:
-        raise RuntimeError(
-            f"training failed after {attempts} attempts"
-        ) from last_err
     elapsed = time.perf_counter() - start
     container.after_train(cb_ctx, result=model)
 

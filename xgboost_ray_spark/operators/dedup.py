@@ -139,19 +139,6 @@ def s26_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # MinHash + LSH banding
 # ---------------------------------------------------------------------------
-def _shingle_expr(text_col: str = "text", n: int = MINHASH_WORDS) -> str:
-    """Word n-gram shingles as a Spark SQL expression (no UDF).
-
-    Word grams over char grams: ~6x fewer explode rows per document at the
-    same near-dup recall — the shuffle row count is the scale cost here.
-    """
-    words = f"split({text_col}, ' ')"
-    return (
-        f"transform(sequence(1, greatest(size({words}) - {n - 1}, 1)),"
-        f" i -> concat_ws(' ', slice({words}, i, {n})))"
-    )
-
-
 # Universal-hash family constants (Broder-style min-wise hashing): one md5
 # per shingle, then k cheap integer families h_i(x) = (a_i*x + b_i) mod P.
 # Derived deterministically at plan-build time; the oracle embeds the same
@@ -186,7 +173,7 @@ def minhash_signatures(docs: DataFrame, k: int = N_HASHES) -> DataFrame:
     # domain (no shuffle) before the explode.
     sh = fan_out(docs).select(
         "doc_id",
-        F.explode(F.array_distinct(F.expr(_shingle_expr()))).alias("sh"),
+        F.explode(F.array_distinct(_gram_expr(MINHASH_WORDS))).alias("sh"),
     )
     x = (
         F.conv(F.substring(F.md5("sh"), 1, 15), 16, 10).cast("bigint")
@@ -680,9 +667,11 @@ def _jaccard_rational(threshold: float) -> tuple[int, int]:
 
 
 def _gram_expr(n: int) -> Column:
-    """Word n-gram shingles of ``text`` — THE shingle definition every
-    Jaccard entry (s26d, s26g, s26l) shares, so their pair sets can never
-    silently diverge."""
+    """Word n-gram shingles of ``text`` as a Spark SQL expression (no UDF)
+    — THE shingle definition: MinHash (s26b, s26k), the Jaccard entries
+    (s26d, s26g, s26l), boilerplate phrases (s26h), decontamination
+    (s26i) and the repetition score (s28g) all use it, so their gram sets
+    can never silently diverge."""
     return F.expr(
         f"transform(sequence(1, greatest(size(split(text, ' ')) - {n - 1}, 1)),"
         f" i -> concat_ws(' ', slice(split(text, ' '), i, {n})))"
@@ -1024,12 +1013,8 @@ def boilerplate_phrases(
     fixed-width shuffle key and keep one example phrase per hash via
     max(); here the phrase itself stays the key for oracle parity.
     """
-    grams = F.expr(
-        f"transform(sequence(1, greatest(size(split(text, ' ')) - {n - 1}, 1)),"
-        f" i -> concat_ws(' ', slice(split(text, ' '), i, {n})))"
-    )
     per_doc = fan_out(docs).select(
-        "doc_id", F.explode(F.array_distinct(grams)).alias("phrase")
+        "doc_id", F.explode(F.array_distinct(_gram_expr(n))).alias("phrase")
     )
     return (
         per_doc.groupBy("phrase")
@@ -1109,12 +1094,10 @@ def s26i_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "documents").select("doc_id", "text"),
         "doc_id",
     )
-    grams = F.expr(
-        f"transform(sequence(1, greatest(size(split(text, ' ')) - {DECON_NGRAM - 1}, 1)),"
-        f" i -> concat_ws(' ', slice(split(text, ' '), i, {DECON_NGRAM})))"
-    )
     sh = fan_out(docs).select(
-        "doc_id", "split", F.explode(F.array_distinct(grams)).alias("g")
+        "doc_id",
+        "split",
+        F.explode(F.array_distinct(_gram_expr(DECON_NGRAM))).alias("g"),
     )
     train = sh.filter(F.col("split") == "train").select(
         F.col("doc_id").alias("train_doc"), "g"

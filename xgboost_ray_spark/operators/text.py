@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from xgboost_ray_spark.catalog import load_table
-from xgboost_ray_spark.operators.dedup import fan_out
+from xgboost_ray_spark.operators.dedup import _gram_expr, fan_out
 from xgboost_ray_spark.registry import register
 
 # Heuristic "stopword" lists over the synthetic corpus vocabulary; a real
@@ -346,10 +346,7 @@ def s28e_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 def s28g_repetition_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     words = F.split("text", " ")
-    g2 = F.expr(
-        "transform(sequence(1, greatest(size(split(text, ' ')) - 1, 1)),"
-        " i -> concat_ws(' ', slice(split(text, ' '), i, 2)))"
-    )
+    g2 = _gram_expr(2)
     per_row = docs.select(
         "doc_id",
         F.size(words).cast("bigint").alias("n_tokens"),

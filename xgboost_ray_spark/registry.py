@@ -34,12 +34,12 @@ QUERIES: dict[str, QuerySpec] = {}
 
 _SHIPPED_APPS: set[str] = set()
 
-# Confs whose absence silently CORRUPTS results (wrong timestamps, oracle
-# divergence) rather than degrading performance — failing to set one of
-# these must be loud, not swallowed.
-_CRITICAL_CONFS = frozenset(
-    {"spark.sql.legacy.parquet.nanosAsLong", "spark.sql.session.timeZone"}
-)
+# Confs whose absence silently CORRUPTS results (timestamps shifted off
+# UTC, oracle divergence) rather than degrading performance — failing to
+# set one of these must be loud, not swallowed. The events timestamp
+# storage needs no conf: catalog.normalize_event_ts rejects a ``ts`` that
+# is not a TIMESTAMP.
+_CRITICAL_CONFS = frozenset({"spark.sql.session.timeZone"})
 
 
 def set_runtime_conf(spark: SparkSession, key: str, value: str) -> None:
@@ -47,8 +47,8 @@ def set_runtime_conf(spark: SparkSession, key: str, value: str) -> None:
 
     A deployment that forbids conf changes is fine for the performance confs
     (AQE, pushdown — the query still returns correct rows), but a session
-    stuck on the wrong timezone or nanos handling would return silently
-    wrong results; that must fail loudly. Already-correct values never fail.
+    stuck on the wrong timezone would return silently wrong results; that
+    must fail loudly. Already-correct values never fail.
     """
     try:
         spark.conf.set(key, value)

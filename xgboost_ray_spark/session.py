@@ -39,12 +39,9 @@ def effective_cpus() -> int:
 # Runtime-settable confs every builder needs regardless of who constructed
 # the SparkSession (the driver harness passes a bare one):
 # registry.prepare_session applies them with spark.conf.set, and
-# get_spark starts every session with them.
+# get_spark starts every session with them. None is needed to read events:
+# its ts is stored in micros, and a nanos file is rejected at read.
 RUNTIME_CONF = {
-    # Older events fixtures stored TIMESTAMP(NANOS); Spark has no nanos type,
-    # so read as long and convert in the catalog (DuckDB truncates ns->us the
-    # same way).
-    "spark.sql.legacy.parquet.nanosAsLong": "true",
     # Testdata timestamps are naive (isAdjustedToUTC=false) micros; read them
     # as UTC instants (TIMESTAMP, not TIMESTAMP_NTZ) so event-time functions
     # and filter pushdown work straight off the scan. catalog.py's

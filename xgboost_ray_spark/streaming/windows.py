@@ -25,7 +25,7 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from xgboost_ray_spark.catalog import table_path
+from xgboost_ray_spark.catalog import normalize_event_ts, table_path
 
 
 def read_table_stream(
@@ -35,21 +35,11 @@ def read_table_stream(
 
     The ONE streaming reader: every file-replay entry goes through here so
     schema-probe and glob strategy cannot fork between entries. For
-    events, the raw file stores TIMESTAMP(NANOS) (read as long under
-    nanosAsLong — set defensively below, exactly like
-    ``catalog.load_table``, because the batch schema probe hits the same
-    PARQUET_TYPE_ILLEGAL on an externally built session); the same ns->us
-    conversion as the batch catalog keeps stream and batch plans
-    identical downstream.
+    events, ``catalog.normalize_event_ts`` applies the batch catalog's
+    reader contract (``ts`` must be a TIMESTAMP; the NTZ cast), so stream
+    and batch plans stay identical downstream and a TIMESTAMP(NANOS) file
+    fails here exactly as it does in ``catalog.load_table``.
     """
-    from xgboost_ray_spark.catalog import normalize_event_ts
-
-    if table == "events":
-        from xgboost_ray_spark.registry import set_runtime_conf
-
-        set_runtime_conf(
-            spark, "spark.sql.legacy.parquet.nanosAsLong", "true"
-        )
     raw_schema = spark.read.parquet(table_path(sf_dir, table)).schema
     # The file-stream source needs a directory; scope it to the one table
     # file with a glob filter.
@@ -94,9 +84,7 @@ def windowed_counts(
 # harness 8 partitions run the stateful suite 2-4x faster than 32 with
 # identical results; on a real cluster raise it until per-partition state
 # fits the executor state-store budget.
-STREAM_STATE_PARTITIONS = int(
-    __import__("os").environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "8")
-)
+STREAM_STATE_PARTITIONS = 8
 
 
 @contextmanager
