@@ -1,38 +1,40 @@
 """Simulate the driver's correctness sweep with a BARE SparkSession.
 
-The round-1 driver built its own SparkSession (no repo confs) and erred on
-every events read; this twin reproduces that contract: no get_spark, no
-conf beyond master/shuffle — then runs every queries() entry at sf0.01,
-compares against oracle_sql() via DuckDB, and prints per-entry status+time.
+An external driver builds its own SparkSession without the repo's confs;
+this twin reproduces that contract: no get_spark and no RUNTIME_CONF, only
+the master, shuffle partitions and driver heap, sized like get_spark's.
+It runs every queries() entry, compares each against oracle_sql() via
+DuckDB, and prints per-entry status and time plus a summary line.
 
 Usage: python scripts/driver_sim.py [sf_dir] [only_prefix]
 """
 
 from __future__ import annotations
 
-import json
+import os
 import sys
 import time
 import traceback
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
+from pyspark.sql import SparkSession  # noqa: E402
 
-import __spark_entry__ as entrymod
-from tests.oracle_utils import compare
+import __spark_entry__ as entrymod  # noqa: E402
+from tests.oracle_utils import compare  # noqa: E402
+from xgboost_ray_spark.session import _DEFAULTS, effective_cpus  # noqa: E402
 
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = sys.argv[2] if len(sys.argv) > 2 else ""
 
-    # Bare session: mimics the harness. Only master + shuffle partitions.
+    cpus = effective_cpus()
     spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
+        SparkSession.builder.master(f"local[{cpus}]")
+        .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "48g")
+        .config("spark.driver.memory", _DEFAULTS["spark.driver.memory"])
         .appName("driver_sim")
         .getOrCreate()
     )
@@ -41,8 +43,8 @@ def main() -> None:
     queries = entrymod.queries()
     oracles = entrymod.oracle_sql()
 
-    results: dict[str, dict] = {}
     n_pass = n_rows_only = n_fail = 0
+    total = 0.0
     for name, fn in queries.items():
         if only and not name.startswith(only):
             continue
@@ -63,18 +65,15 @@ def main() -> None:
             err = traceback.format_exc(limit=4)
             n_fail += 1
         dt = time.time() - t0
-        results[name] = {"status": status, "sec": round(dt, 2), "err": err}
+        total += dt
         print(f"{name:32s} {status:16s} {dt:6.2f}s", flush=True)
         if err:
             print(err, flush=True)
 
-    total = sum(r["sec"] for r in results.values())
     print(
         f"\n== {n_pass} pass, {n_rows_only} rows-only, {n_fail} FAIL, "
-        f"{len(results)} total, {total:.1f}s query wall =="
+        f"{n_pass + n_rows_only + n_fail} total, {total:.1f}s query wall =="
     )
-    with open("/tmp/driver_sim.json", "w") as f:
-        json.dump(results, f, indent=1)
     sys.exit(1 if n_fail else 0)
 
 

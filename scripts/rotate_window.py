@@ -39,15 +39,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def parse_timings(path: str) -> dict[str, float]:
-    """Per-entry seconds from driver_sim output — either its JSON results
-    file (/tmp/driver_sim.json) or its printed log."""
-    if path.endswith(".json"):
-        with open(path) as fh:
-            return {
-                name: float(rec["sec"])
-                for name, rec in json.load(fh).items()
-                if rec.get("err") is None
-            }
+    """Per-entry seconds from scripts/driver_sim.py's printed log."""
     times: dict[str, float] = {}
     with open(path) as fh:
         # tolerate progress-bar \r pollution in captured logs

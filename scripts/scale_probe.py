@@ -1,21 +1,17 @@
 #!/usr/bin/env python
-"""Next-decade scaling probe for the heavy iterative set (VERDICT r12 #4).
+"""Next-decade scaling probe for the heavy iterative set.
 
-Times the six expensive iterative/ML queries at two scale directories
-under the SAME protocol (bench.timed_build, one session per scale, one
-warmup, min of 3 round-robin passes) and prints one JSON line per scale
-plus the per-query scaling factor across the jump. Pair it with
-scripts/gen_scale_probe.py, which tiles sf0.1 into a 10x corpus whose
-per-operator workload is measured to scale exactly linearly (near-dup
-pairs and cluster counts 10.000x — see SCALE.md round-13 note).
+Times the six expensive iterative/ML queries at two scale directories with
+``bench.measure`` (one session per scale, bench.py's timing and noise rule)
+and prints one JSON line per scale plus the per-query scaling factor across
+the jump. Pair it with scripts/gen_scale_probe.py, which tiles sf0.1 into a
+10x corpus whose per-operator workload scales exactly linearly (see
+SCALE.md).
 
 Usage: python scripts/scale_probe.py [base_sf_dir] [big_sf_dir] [ops]
 
-``ops`` (optional, comma-separated registry names) overrides the default
-iterative six — round 14 uses it to point the same protocol at the
-heavy shuffle-bound RELATIONAL entries (VERDICT r13 #4: s05d six-table
-join, s28e TF-IDF, s11c grouping sets, s09 Q1) so the relational scale
-story is measured, not inferred from the sf0.01->sf0.1 band.
+``ops`` (optional, comma-separated registry names) replaces the default
+six, e.g. with the heavy shuffle-bound relational entries.
 """
 
 from __future__ import annotations
@@ -36,9 +32,8 @@ PROBE = [
 ]
 if len(sys.argv) > 3:
     PROBE = [n for n in sys.argv[3].split(",") if n]
-    # Validate the override at parse time (ADVICE r14): a typo'd name
-    # otherwise surfaces as a raw KeyError mid-probe, after the base
-    # scale has already burned minutes of Spark time.
+    # Validate before any Spark work: a typo'd name would otherwise surface
+    # as a KeyError after the base scale has run for minutes.
     from xgboost_ray_spark.registry import all_queries as _aq
 
     _unknown = [n for n in PROBE if n not in _aq()]
@@ -50,26 +45,15 @@ if len(sys.argv) > 3:
 
 
 def run_scale(sf_dir: str) -> dict[str, float]:
-    from bench import WARMUP_QUERY, timed_build
+    from bench import measure
     from xgboost_ray_spark.registry import all_queries
     from xgboost_ray_spark.session import get_spark
 
-    specs = all_queries()
     spark = get_spark(app_name=f"scale_probe_{os.path.basename(sf_dir)}")
-    specs[WARMUP_QUERY].build(spark, sf_dir).count()
-    samples: dict[str, list[float]] = {n: [] for n in PROBE}
-    for _ in range(3):
-        for name in PROBE:
-            samples[name].append(round(timed_build(spark, specs, name, sf_dir), 3))
-    out = {n: min(v) for n, v in samples.items()}
-    print(json.dumps({
-        "sf_dir": sf_dir,
-        "queries": out,
-        "samples": samples,
-        "loadavg": [round(x, 2) for x in os.getloadavg()],
-    }))
+    result = measure(spark, all_queries(), PROBE, sf_dir)
+    print(json.dumps({"sf_dir": sf_dir, **result}))
     spark.stop()
-    return out
+    return result["queries"]
 
 
 def main() -> None:

@@ -371,82 +371,3 @@ def test_sort_aggregate_only_where_audited(catalog_plans):
         "round-8 fix), or audit and allowlist it with a measurement."
         .format(got=offenders)
     )
-
-
-def test_contention_verdict_backtest():
-    """bench.py's self-annotating contention flag (VERDICT r12 #3),
-    backtested against the three historical artifacts the judges
-    adjudicated with out-of-band controls: r10 (burst outliers, spread
-    6.5x) and r12 (loadavg 3.19 -> 10.64 AND spreads >5x) must flag;
-    r11 (quiet: load flat 3.3-4.0, max spread 2.6x) must not. Also pins
-    the false-positive guard: a bench-driven load rise on an idle-start
-    host (0.2 -> ~4 on 32 cpus, no sample spread) stays clean. Every
-    call passes cpus=32 — the artifacts came from a 32-cpu host, and
-    the load prong's floor is cpus/8, so on a smaller host the
-    idle-start case would trip the load prong and the backtest would
-    fail for host reasons (ADVICE r13; cpus is injectable for exactly
-    this). The busy-start prong (also ADVICE r13) gets its own case: a
-    run that BEGINS at loadavg 10 and stays flat never trips the
-    relative load prong, but steady pre-existing contention of that
-    size must still flag on the absolute level."""
-    import json
-    import os
-
-    from bench import contention_verdict
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    # r13 joined the backtest in r14: the first official run that carried
-    # the flag live (contended: false, judged quiet by its own telemetry
-    # and the pre-registered band) — it must stay clean under any future
-    # prong change.
-    expect = {"10": True, "11": False, "12": True, "13": False}
-    for rnum, flagged in expect.items():
-        with open(os.path.join(repo, f"BENCH_r{rnum}.json")) as fh:
-            parsed = json.load(fh)["parsed"]
-        verdict = contention_verdict(parsed["load"], parsed["samples"], cpus=32)
-        assert verdict["contended"] is flagged, (
-            f"r{rnum}: expected contended={flagged}, got {verdict}"
-        )
-
-    idle_quiet = contention_verdict(
-        [{"at": "start", "t": 0, "loadavg": [0.2, 0.5, 1.0]},
-         {"at": "end", "t": 100, "loadavg": [4.1, 2.0, 1.5]}],
-        {"s26g_dup_clusters": [5.8, 4.4, 4.0]},
-        cpus=32,
-    )
-    assert idle_quiet["contended"] is False, idle_quiet
-
-    steady_busy = contention_verdict(
-        [{"at": "start", "t": 0, "loadavg": [10.2, 10.0, 9.8]},
-         {"at": "end", "t": 100, "loadavg": [11.0, 10.5, 10.0]}],
-        {"s26g_dup_clusters": [5.8, 4.4, 4.0]},  # spread quiet: 1.45x
-        cpus=32,
-    )
-    assert steady_busy["contended"] is True, steady_busy
-    assert steady_busy["contention"]["busy_start_flag"] is True
-    assert steady_busy["contention"]["load_flag"] is False
-
-    # ADVICE r14: the busy-start prong keys off the explicit pre-warmup
-    # "pre" point when present, not load_points[0]'s position. An idle
-    # host (pre 0.3) whose first post-warmup point already carries the
-    # bench's own load (8.5 on 32 cpus — above the 2x floor=8 trip level
-    # that the old positional read would have self-tripped on) must not
-    # trip the busy-start prong (the relative load prong adjudicates the
-    # rise separately, against the same pre-point start)...
-    pre_point_quiet = contention_verdict(
-        [{"at": "pre", "t": 0, "loadavg": [0.3, 0.5, 1.0]},
-         {"at": "start", "t": 45, "loadavg": [8.5, 3.0, 1.5]},
-         {"at": "end", "t": 150, "loadavg": [4.1, 3.5, 2.0]}],
-        {"s26g_dup_clusters": [5.8, 4.4, 4.0]},
-        cpus=32,
-    )
-    assert pre_point_quiet["contention"]["busy_start_flag"] is False, pre_point_quiet
-    # ...while genuine pre-existing contention in the "pre" point still
-    # flags on the absolute level.
-    pre_point_busy = contention_verdict(
-        [{"at": "pre", "t": 0, "loadavg": [10.2, 10.0, 9.8]},
-         {"at": "start", "t": 45, "loadavg": [11.0, 10.5, 10.0]}],
-        {"s26g_dup_clusters": [5.8, 4.4, 4.0]},
-        cpus=32,
-    )
-    assert pre_point_busy["contention"]["busy_start_flag"] is True, pre_point_busy
