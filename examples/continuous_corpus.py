@@ -36,7 +36,7 @@ import argparse
 
 from pyspark.sql import functions as F
 
-from xgboost_ray_spark.catalog import load_table
+from xgboost_ray_spark.catalog import SCRATCH_DIR, load_table
 from xgboost_ray_spark.operators.dedup import (
     bucket_pairs,
     lsh_bands,
@@ -52,7 +52,7 @@ DELTA_MOD = 5  # doc_id % 5 == 0 -> "today's" arrivals
 def main(sf_dir: str = "/root/testdata/sf0.001") -> dict:
     spark = get_spark(app_name="example-continuous-corpus")
     ensure_workers_can_import(spark)
-    scratch = os.path.join("/root/repo/.scratch", "continuous_corpus")
+    scratch = os.path.join(SCRATCH_DIR, "continuous_corpus")
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     is_delta = F.col("doc_id") % DELTA_MOD == 0

@@ -36,7 +36,7 @@ import argparse
 
 from pyspark.sql import functions as F
 
-from xgboost_ray_spark.catalog import load_table
+from xgboost_ray_spark.catalog import SCRATCH_DIR, load_table
 from xgboost_ray_spark.registry import dsum
 from xgboost_ray_spark.session import get_spark
 
@@ -55,7 +55,7 @@ def partial_agg(df):
 
 def main(sf_dir: str = "/root/testdata/sf0.001") -> dict:
     spark = get_spark(app_name="example-incremental-snapshot")
-    scratch = os.path.join("/root/repo/.scratch", "incr_snapshot")
+    scratch = os.path.join(SCRATCH_DIR, "incr_snapshot")
 
     cutoff = F.lit(CUTOFF).cast("timestamp")
     feed_end = F.lit(FEED_END).cast("timestamp")

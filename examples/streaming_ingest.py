@@ -33,7 +33,7 @@ import argparse
 
 from pyspark.sql import functions as F
 
-from xgboost_ray_spark.catalog import load_table
+from xgboost_ray_spark.catalog import SCRATCH_DIR, load_table
 from xgboost_ray_spark.session import get_spark
 from xgboost_ray_spark.streaming.windows import (
     read_events_stream,
@@ -63,7 +63,7 @@ def main(sf_dir: str = "/root/testdata/sf0.001") -> dict:
             F.to_date("ts").alias("day"),
         )
     )
-    out = os.path.join("/root/repo/.scratch", "streaming_ingest")
+    out = os.path.join(SCRATCH_DIR, "streaming_ingest")
     got = run_stream_to_files(etl, spark, out, partition_by="day")
 
     # Streaming/batch equivalence: the sink must hold exactly the batch

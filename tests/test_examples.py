@@ -5,11 +5,15 @@ time (it runs 6 distributed trials); it is exercised manually."""
 from __future__ import annotations
 
 import importlib
+import os
 import sys
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+EXAMPLES = os.path.join(REPO, "examples")
 
 
 def _load(name: str):
-    sys.path.insert(0, "/root/repo/examples")
+    sys.path.insert(0, EXAMPLES)
     try:
         return importlib.import_module(name)
     finally:

@@ -5,18 +5,22 @@ own cwd — not the repo root. Two failure modes only appear under that
 contract: (a) relative-path assumptions in the engine, and (b) workers
 failing to import ``xgboost_ray_spark`` for cloudpickled mapInPandas
 functions (``registry.ensure_workers_can_import`` exists precisely for
-this). The in-process pytest suite runs with cwd=/root/repo and can miss
-both, so this test re-runs the contract in a subprocess with cwd=/tmp.
+this). The in-process pytest suite runs with the checkout root as cwd and can
+miss both, so this test re-runs the contract in a subprocess with cwd=/tmp.
 """
 
 from __future__ import annotations
 
+import os
 import subprocess
 import sys
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+# argv[1] is the checkout root.
 _SCRIPT = r"""
 import sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, sys.argv[1])
 import __spark_entry__ as contract
 from pyspark.sql import SparkSession
 
@@ -52,7 +56,7 @@ print("FOREIGN_CWD_OK")
 
 def test_contract_runs_from_foreign_cwd():
     proc = subprocess.run(
-        [sys.executable, "-c", _SCRIPT],
+        [sys.executable, "-c", _SCRIPT, REPO],
         cwd="/tmp",
         capture_output=True,
         text=True,

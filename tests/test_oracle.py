@@ -35,9 +35,10 @@ def test_rows_only_runs(spark, name):
 
 
 def test_entry_smoke(spark):
+    import os
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as entry_mod
 
     df = entry_mod.entry(spark)

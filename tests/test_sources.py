@@ -284,9 +284,9 @@ def test_range_clustered_write_produces_skippable_files(spark):
     import pyarrow.parquet as pq
 
     from tests.conftest import SF_SMOKE
-    from xgboost_ray_spark.catalog import load_table
+    from xgboost_ray_spark.catalog import SCRATCH_DIR, load_table
 
-    out = "/root/repo/.scratch/events_clustered"
+    out = os.path.join(SCRATCH_DIR, "events_clustered")
     ev = load_table(spark, SF_SMOKE, "events").select("user_id", "value")
     (
         ev.repartitionByRange(8, "user_id")

@@ -131,13 +131,14 @@ def test_cdc_upsert_merges_across_microbatches(spark):
     (the global latest, regardless of which batch carried it)."""
     import os
 
+    from xgboost_ray_spark.catalog import SCRATCH_DIR
     from xgboost_ray_spark.registry import all_queries
     from tests.conftest import SF_SMOKE
 
     out = all_queries()["s25i_stream_cdc_upsert"].build(spark, SF_SMOKE)
     rows = out.collect()
     assert len(rows) == len({r.user_id for r in rows}), "one row per key"
-    versions = sorted(os.listdir("/root/repo/.scratch/cdc_upsert/snaps"))
+    versions = sorted(os.listdir(os.path.join(SCRATCH_DIR, "cdc_upsert", "snaps")))
     assert len(versions) == 4, f"expected 4 microbatch snapshots: {versions}"
 
 

@@ -1,7 +1,7 @@
 """Table catalog over the driver-generated parquet testdata.
 
 Loads the TPC-H-ish star schema + events / documents / embeddings tables
-(see /root/repo/TESTDATA.md) and registers them as temp views. All reads go
+(see TESTDATA.md) and registers them as temp views. All reads go
 through ``spark.read.parquet`` so Catalyst gets predicate pushdown, column
 pruning and partition-sized splits for free — at 100 TB these become real
 parquet row-group skips, not driver-side filtering.

@@ -5,6 +5,12 @@ shuffle partitions sized to cores for local mode (a cluster deployment
 overrides via ``extra_conf`` or ``spark-defaults``), Arrow enabled for every
 pandas interchange, UTC session timezone so results compare bit-stable
 against external engines (DuckDB oracle, parquet readers).
+
+The driver JVM's launch options go in ``spark.driver.defaultJavaOptions``,
+which Spark puts before ``spark.driver.extraJavaOptions``: a deployment's
+or caller's ``extraJavaOptions`` still applies and, for the same HotSpot
+flag, wins. A ``defaultJavaOptions`` set in ``spark-defaults`` is replaced
+whenever ``get_spark`` sets one.
 """
 
 from __future__ import annotations
@@ -14,12 +20,8 @@ import os
 from pyspark.sql import SparkSession
 
 def effective_cpus() -> int:
-    """Resolved ``$SPARK_GRAFT_CPUS`` — validated ONCE, shared by the
-    session factory and bench.py's result record (ADVICE r15: bench.py
-    parsed the env var independently at result-print time, so a
-    non-numeric value crashed AFTER the whole run completed and a
-    mid-process env change could make the JSON's ``cpus`` disagree with
-    the master the session actually ran on). Falls back to the host
+    """Resolved ``$SPARK_GRAFT_CPUS``, the one validation shared by the
+    session factory and bench.py's result record. Falls back to the host
     count when unset; raises immediately (before any work) on a
     non-numeric or non-positive value."""
     raw = os.environ.get("SPARK_GRAFT_CPUS")
@@ -66,6 +68,18 @@ _DEFAULTS = {
 }
 
 
+def compiler_threads(cpus: int) -> int | None:
+    """The JIT compiler-thread count ``get_spark`` launches a driver JVM
+    with on ``cpus`` cpus: half of them, never below 2 (tiered HotSpot
+    refuses to start with fewer). None where that would not lower the count
+    HotSpot picks itself for ``cpus`` (JDK 17 ``CICompilerCountPerCPU``:
+    max(2, 3/2 * log2 n * log2 log2 n)); HotSpot then keeps its own."""
+    log = cpus.bit_length() - 1
+    hotspot = max(2, log * (max(log, 1).bit_length() - 1) * 3 // 2)
+    count = max(2, cpus // 2)
+    return count if count < hotspot else None
+
+
 def get_spark(
     app_name: str = "xgboost_ray_spark",
     master: str | None = None,
@@ -77,12 +91,17 @@ def get_spark(
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (or all cores) so the
     same entry points run in tests and in the driver harness; on a real
     cluster the caller passes its own master / relies on spark-submit.
+    The JVM options take effect only when this call launches the JVM.
     """
     cpus = effective_cpus()
     master = master or f"local[{cpus}]"
     builder = SparkSession.builder.master(master).appName(app_name)
     conf = dict(_DEFAULTS)
     conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions or cpus)
+    # JIT compiler threads: half of $SPARK_GRAFT_CPUS, never below 2, and set
+    # only where that lowers HotSpot's own count.
+    if count := compiler_threads(cpus):
+        conf["spark.driver.defaultJavaOptions"] = f"-XX:CICompilerCount={count}"
     if extra_conf:
         conf.update(extra_conf)
     for k, v in conf.items():
