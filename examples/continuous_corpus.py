@@ -36,7 +36,7 @@ import argparse
 
 from pyspark.sql import functions as F
 
-from xgboost_ray_spark.catalog import SCRATCH_DIR, load_table
+from xgboost_ray_spark.catalog import load_table, scratch_path
 from xgboost_ray_spark.operators.dedup import (
     bucket_pairs,
     lsh_bands,
@@ -52,7 +52,7 @@ DELTA_MOD = 5  # doc_id % 5 == 0 -> "today's" arrivals
 def main(sf_dir: str = "/root/testdata/sf0.001") -> dict:
     spark = get_spark(app_name="example-continuous-corpus")
     ensure_workers_can_import(spark)
-    scratch = os.path.join(SCRATCH_DIR, "continuous_corpus")
+    scratch = scratch_path("continuous_corpus")
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     is_delta = F.col("doc_id") % DELTA_MOD == 0
@@ -60,15 +60,11 @@ def main(sf_dir: str = "/root/testdata/sf0.001") -> dict:
 
     # -- day 0: bootstrap the two indexes ---------------------------------
     band_idx_path = os.path.join(scratch, "band_index")
-    lsh_bands(minhash_signatures(base)).write.mode("overwrite").parquet(
-        band_idx_path
-    )
+    lsh_bands(minhash_signatures(base)).write.parquet(band_idx_path)
 
     # -- day N: delta-proportional maintenance ----------------------------
     delta_bands_path = os.path.join(scratch, "band_index_delta")
-    lsh_bands(minhash_signatures(delta)).write.mode("overwrite").parquet(
-        delta_bands_path
-    )
+    lsh_bands(minhash_signatures(delta)).write.parquet(delta_bands_path)
     band_idx = spark.read.parquet(band_idx_path)
     delta_bands = spark.read.parquet(delta_bands_path)
 

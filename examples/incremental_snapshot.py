@@ -36,7 +36,7 @@ import argparse
 
 from pyspark.sql import functions as F
 
-from xgboost_ray_spark.catalog import SCRATCH_DIR, load_table
+from xgboost_ray_spark.catalog import load_table, scratch_path
 from xgboost_ray_spark.registry import dsum
 from xgboost_ray_spark.session import get_spark
 
@@ -55,7 +55,7 @@ def partial_agg(df):
 
 def main(sf_dir: str = "/root/testdata/sf0.001") -> dict:
     spark = get_spark(app_name="example-incremental-snapshot")
-    scratch = os.path.join(SCRATCH_DIR, "incr_snapshot")
+    scratch = scratch_path("incr_snapshot")
 
     cutoff = F.lit(CUTOFF).cast("timestamp")
     feed_end = F.lit(FEED_END).cast("timestamp")
@@ -65,9 +65,8 @@ def main(sf_dir: str = "/root/testdata/sf0.001") -> dict:
 
     # 1. Day-0 snapshot + stored aggregate partial.
     snap_path = os.path.join(scratch, "snapshot_v0")
-    orders.filter(F.col("o_orderdate") < cutoff).drop("o_orderdate").write.mode(
-        "overwrite"
-    ).parquet(snap_path)
+    day0 = orders.filter(F.col("o_orderdate") < cutoff).drop("o_orderdate")
+    day0.write.parquet(snap_path)
     base = spark.read.parquet(snap_path)
     stored_partial = partial_agg(base).collect()  # "few KB" — a real job
     # would write this to a table; collect keeps the example observable.

@@ -33,7 +33,7 @@ import argparse
 
 from pyspark.sql import functions as F
 
-from xgboost_ray_spark.catalog import SCRATCH_DIR, load_table
+from xgboost_ray_spark.catalog import load_table, scratch_path
 from xgboost_ray_spark.session import get_spark
 from xgboost_ray_spark.streaming.windows import (
     read_events_stream,
@@ -63,8 +63,9 @@ def main(sf_dir: str = "/root/testdata/sf0.001") -> dict:
             F.to_date("ts").alias("day"),
         )
     )
-    out = os.path.join(SCRATCH_DIR, "streaming_ingest")
-    got = run_stream_to_files(etl, spark, out, partition_by="day")
+    got = run_stream_to_files(
+        etl, spark, scratch_path("streaming_ingest"), partition_by="day"
+    )
 
     # Streaming/batch equivalence: the sink must hold exactly the batch
     # answer (events are unique per event_id in the fixture, so dedup is

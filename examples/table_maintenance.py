@@ -34,7 +34,7 @@ import glob
 
 from pyspark.sql import functions as F
 
-from xgboost_ray_spark.catalog import SCRATCH_DIR, load_table
+from xgboost_ray_spark.catalog import load_table, scratch_path
 from xgboost_ray_spark.plans.explain import has_dynamic_pruning
 from xgboost_ray_spark.session import get_spark
 from xgboost_ray_spark.sources.layout import zorder_cluster
@@ -46,15 +46,13 @@ def main(sf_dir: str = "/root/testdata/sf0.001") -> dict:
         "o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority"
     )
     n_rows = orders.count()
-    base = os.path.join(SCRATCH_DIR, "maint")
+    base = scratch_path("maint")
 
     # 1. The landing zone: fragmented small files, then compaction.
     landing = os.path.join(base, "landing")
     compacted = os.path.join(base, "compacted")
-    orders.repartition(40).write.mode("overwrite").parquet(landing)
-    spark.read.parquet(landing).coalesce(4).write.mode("overwrite").parquet(
-        compacted
-    )
+    orders.repartition(40).write.parquet(landing)
+    spark.read.parquet(landing).coalesce(4).write.parquet(compacted)
     n_landing = len(glob.glob(os.path.join(landing, "*.parquet")))
     n_compact = len(glob.glob(os.path.join(compacted, "*.parquet")))
     assert n_compact < n_landing / 5, (n_landing, n_compact)
@@ -65,7 +63,7 @@ def main(sf_dir: str = "/root/testdata/sf0.001") -> dict:
     clustered = os.path.join(base, "clustered")
     zorder_cluster(
         spark.read.parquet(compacted), ["o_custkey", "o_totalprice"], 4
-    ).write.mode("overwrite").partitionBy("o_orderpriority").parquet(clustered)
+    ).write.partitionBy("o_orderpriority").parquet(clustered)
     table = spark.read.parquet(clustered)
     assert table.count() == n_rows
 
@@ -80,8 +78,7 @@ def main(sf_dir: str = "/root/testdata/sf0.001") -> dict:
                 F.col("o_orderpriority").isin("1-URGENT", "2-HIGH"), "high"
             ).otherwise("low"),
         )
-        .write.mode("overwrite")
-        .parquet(dim_path)
+        .write.parquet(dim_path)
     )
     dim = spark.read.parquet(dim_path).filter(F.col("pclass") == "high")
     pruned = table.join(F.broadcast(dim), "o_orderpriority")

@@ -1,10 +1,11 @@
 """Shared AST mechanics for the static call-site audits.
 
-Three audits pin call-site inventories over the package (driver
-materialization, broadcast hints, cache lifecycles). They share the
+Four audits pin call-site inventories over the package (driver
+materialization, broadcast hints, cache lifecycles, scratch-file
+writers; the last also walks ``examples/``). They share the
 walk-and-attribute machinery so a fix to the mechanics (e.g. how calls
-are attributed to their enclosing function) lands once, not three
-times; each audit supplies only its matcher.
+are attributed to their enclosing function) lands once; each audit
+supplies only its matcher.
 """
 
 from __future__ import annotations
@@ -14,23 +15,24 @@ import os
 from collections import Counter
 from collections.abc import Callable, Iterator
 
-PKG = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "xgboost_ray_spark",
-)
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PKG = os.path.join(REPO, "xgboost_ray_spark")
+EXAMPLES = os.path.join(REPO, "examples")
 
 
-def _modules() -> Iterator[tuple[str, ast.AST, dict[ast.AST, str]]]:
-    """Yield (relative path, parsed tree, node -> enclosing-function map)
-    for every package module."""
-    for root, _, files in os.walk(PKG):
+def _modules(
+    top: str = PKG,
+) -> Iterator[tuple[str, ast.AST, dict[ast.AST, str]]]:
+    """Yield (path relative to ``top``, parsed tree, node ->
+    enclosing-function map) for every module under ``top``."""
+    for root, _, files in os.walk(top):
         if "__pycache__" in root:
             continue
         for fname in sorted(files):
             if not fname.endswith(".py"):
                 continue
             path = os.path.join(root, fname)
-            rel = os.path.relpath(path, PKG).replace(os.sep, "/")
+            rel = os.path.relpath(path, top).replace(os.sep, "/")
             with open(path) as fh:
                 tree = ast.parse(fh.read())
             func_of: dict[ast.AST, str] = {}
@@ -87,4 +89,26 @@ def string_constants(substr_lower: str) -> list[tuple[str, str, str]]:
                 and substr_lower in node.value.lower()
             ):
                 hits.append((rel, func_of.get(node, "?"), node.value))
+    return hits
+
+
+def name_references(
+    names: set[str], top: str = PKG
+) -> list[tuple[str, str, str]]:
+    """(file, enclosing function, name) for every bare name, attribute or
+    imported name in ``names`` under ``top``: ``x.rmtree``, ``rmtree`` and
+    ``from shutil import rmtree`` all count, called or passed along."""
+    hits = []
+    for rel, tree, func_of in _modules(top):
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Name):
+                found = [node.id]
+            elif isinstance(node, ast.Attribute):
+                found = [node.attr]
+            elif isinstance(node, ast.ImportFrom):
+                found = [a.name for a in node.names]
+            else:
+                continue
+            hits += [(rel, func_of.get(node, "?"), n) for n in found
+                     if n in names]
     return hits

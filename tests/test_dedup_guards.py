@@ -132,8 +132,10 @@ def test_spill_shared_key_does_not_break_live_reader(spark):
 
 
 def test_sweep_scratch_keeps_only_live_roots():
-    """The sweep keeps a live pid's scratch root and removes a dead pid's
-    root and an old-layout ``spill_<tag>_<digest>`` dir."""
+    """The sweep keeps a live pid's scratch root and removes everything
+    else: a dead pid's root, an old-layout ``spill_<tag>_<digest>`` dir
+    and the fixed-name dirs older builders wrote (``events_etl``, and
+    ``maint``, a name without ``_``)."""
     import shutil
 
     from xgboost_ray_spark import catalog
@@ -142,20 +144,26 @@ def test_sweep_scratch_keeps_only_live_roots():
     proc = subprocess.Popen([sys.executable, "-c", "pass"])
     proc.wait()  # reaped: the pid no longer names a running process
     live = os.path.join(SCRATCH_DIR, f"spill_{os.getpid()}_testguard")
-    dead = os.path.join(SCRATCH_DIR, f"spill_{proc.pid}_testguard")
-    old_layout = os.path.join(SCRATCH_DIR, "spill_testguard_deadbeef0000")
-    for d in (live, dead, old_layout):
+    garbage = [
+        os.path.join(SCRATCH_DIR, name)
+        for name in (
+            f"spill_{proc.pid}_testguard",
+            "spill_testguard_deadbeef0000",
+            "events_etl",
+            "maint",
+        )
+    ]
+    for d in (live, *garbage):
         os.makedirs(os.path.join(d, "part"), exist_ok=True)
     try:
         catalog._SCRATCH_SWEPT = False  # re-arm the once-per-process guard
-        assert sweep_scratch() >= 2
+        assert sweep_scratch() >= len(garbage)
         assert os.path.exists(live)
-        assert not os.path.exists(dead)
-        assert not os.path.exists(old_layout)
+        assert not [d for d in garbage if os.path.exists(d)]
         # Second call in the same process is a no-op by design.
         assert sweep_scratch() == 0
     finally:
-        for d in (live, dead, old_layout):
+        for d in (live, *garbage):
             shutil.rmtree(d, ignore_errors=True)
 
 
@@ -179,6 +187,29 @@ def test_scratch_path_unique_across_threads():
         sys.setswitchinterval(interval)
     assert len(set(paths)) == len(paths) == 16 * 200
     assert len({os.path.dirname(p) for p in paths}) == 1
+
+
+def test_worker_zip_is_written_once_under_scratch_root(spark):
+    """The package zip shipped to Python workers is written once per
+    process under this process's scratch root (removed at exit), not
+    under the system temp dir."""
+    import tempfile
+
+    from xgboost_ray_spark.catalog import scratch_path
+    from xgboost_ray_spark.registry import (
+        _package_zip,
+        ensure_workers_can_import,
+    )
+
+    ensure_workers_can_import(spark)
+    zpath = _package_zip()
+    assert zpath == _package_zip()
+    assert os.path.dirname(zpath) == os.path.dirname(scratch_path("probe"))
+    assert os.path.getsize(zpath) > 0
+    legacy = os.path.join(
+        tempfile.gettempdir(), f"xgboost_ray_spark_pyfiles_{os.getpid()}.zip"
+    )
+    assert not os.path.exists(legacy)
 
 
 _BUILD_AND_EXIT = r"""

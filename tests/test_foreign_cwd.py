@@ -41,7 +41,7 @@ assert qs["s29_pandas_udf"](spark, "/root/testdata/sf0.001").count() > 0
 
 # The file-layout family (r8 rotation) is the most cwd-sensitive surface
 # in the catalog: these entries WRITE derived layouts (compacted files,
-# z-ordered copies, partitioned dirs) under catalog.SCRATCH_DIR and read
+# z-ordered copies, partitioned dirs) under catalog.scratch_path and read
 # them back. A relative-path slip anywhere in that machinery only shows
 # up from a foreign cwd, so pin the three heaviest here permanently.
 for name in (

@@ -270,7 +270,7 @@ def test_compaction_reduces_file_count_without_shuffle(spark):
     assert "Exchange" not in plan, "coalesce must stay a narrow dependency"
 
 
-def test_range_clustered_write_produces_skippable_files(spark):
+def test_range_clustered_write_produces_skippable_files(spark, tmp_path):
     """Z-order-lite: repartitionByRange + sortWithinPartitions on the
     filter column writes files whose footer min/max ranges are pairwise
     disjoint — a reader filtering one key can skip all but one file on
@@ -284,15 +284,14 @@ def test_range_clustered_write_produces_skippable_files(spark):
     import pyarrow.parquet as pq
 
     from tests.conftest import SF_SMOKE
-    from xgboost_ray_spark.catalog import SCRATCH_DIR, load_table
+    from xgboost_ray_spark.catalog import load_table
 
-    out = os.path.join(SCRATCH_DIR, "events_clustered")
+    out = str(tmp_path / "events_clustered")
     ev = load_table(spark, SF_SMOKE, "events").select("user_id", "value")
     (
         ev.repartitionByRange(8, "user_id")
         .sortWithinPartitions("user_id")
-        .write.mode("overwrite")
-        .parquet(out)
+        .write.parquet(out)
     )
     ranges = []
     for f in glob.glob(os.path.join(out, "part-*.parquet")):

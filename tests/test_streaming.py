@@ -131,32 +131,78 @@ def test_cdc_upsert_merges_across_microbatches(spark):
     (the global latest, regardless of which batch carried it)."""
     import os
 
-    from xgboost_ray_spark.catalog import SCRATCH_DIR
     from xgboost_ray_spark.registry import all_queries
     from tests.conftest import SF_SMOKE
 
     out = all_queries()["s25i_stream_cdc_upsert"].build(spark, SF_SMOKE)
     rows = out.collect()
     assert len(rows) == len({r.user_id for r in rows}), "one row per key"
-    versions = sorted(os.listdir(os.path.join(SCRATCH_DIR, "cdc_upsert", "snaps")))
+    # The frame reads snaps/v<latest>/part-*: its grandparent is snaps.
+    (snaps,) = {
+        os.path.dirname(os.path.dirname(f.removeprefix("file:")))
+        for f in out.inputFiles()
+    }
+    versions = sorted(os.listdir(snaps))
     assert len(versions) == 4, f"expected 4 microbatch snapshots: {versions}"
 
 
+@pytest.mark.parametrize(
+    "name", ["s25h_file_sink_etl", "s25i_stream_cdc_upsert"]
+)
+def test_stream_sink_frame_survives_rebuild(spark, name):
+    """Each build writes its sink to a fresh catalog.scratch_path, so the
+    frame an earlier build returned still collects after a second build
+    of the same entry (a wipe-and-rewrite of a fixed dir made it fail
+    with FileNotFoundException)."""
+    from collections import Counter
+
+    from xgboost_ray_spark.registry import all_queries
+    from tests.conftest import SF_SMOKE
+
+    build = all_queries()[name].build
+    first = build(spark, SF_SMOKE)
+    second = build(spark, SF_SMOKE)
+    assert not set(first.inputFiles()) & set(second.inputFiles())
+    rows = first.collect()
+    assert rows
+    assert Counter(rows) == Counter(second.collect())
+
+
+def test_memory_sink_frame_outlives_its_view(spark, tmp_path):
+    """run_stream_to_memory leaves no ``stream_out_*`` temp view behind:
+    the frame it returns holds the sink itself and still collects."""
+    src = str(tmp_path / "mem_src")
+    _mk_events(spark, [(1, 0, 1, 1.0), (2, 5, 2, 2.0), (1, 70, 3, 3.0)]) \
+        .coalesce(1).write.parquet(src)
+    stream = spark.readStream.schema(spark.read.parquet(src).schema).parquet(
+        src
+    )
+    out = run_stream_to_memory(
+        stream.groupBy("user_id").agg(F.count("*").alias("n")), spark
+    )
+    views = [
+        t.name for t in spark.catalog.listTables()
+        if t.name.startswith("stream_out_")
+    ]
+    assert not views, f"memory-sink views left registered: {views}"
+    assert sorted((r.user_id, r.n) for r in out.collect()) == [(1, 2), (2, 1)]
+
+
 def test_file_sink_exactly_once_across_restart(spark, tmp_path):
-    """Exactly-once across a stop/restart: two runs of the same query over
-    a growing source directory, sharing one checkpoint, must process every
-    source row exactly once — the second run picks up ONLY the file that
-    arrived while the stream was down (no duplicates, no loss)."""
+    """Exactly-once across a stop/restart: run_stream_to_files twice on
+    one out_dir over a growing source directory resumes from that dir's
+    checkpoint — the second run commits batch 1 holding ONLY the file
+    that arrived while the stream was down (no duplicates, no loss)."""
     import os
 
     from pyspark.sql import functions as F
 
     from tests.conftest import SF_SMOKE
     from xgboost_ray_spark.catalog import load_table
+    from xgboost_ray_spark.streaming.windows import run_stream_to_files
 
     src = str(tmp_path / "src")
     sink = str(tmp_path / "sink")
-    ckpt = str(tmp_path / "ckpt")
     os.makedirs(src)
 
     events = load_table(spark, SF_SMOKE, "events").select(
@@ -168,28 +214,26 @@ def test_file_sink_exactly_once_across_restart(spark, tmp_path):
     schema = spark.read.parquet(src + "/batch_a").schema
 
     def run_once():
-        q = (
+        stream = (
             spark.readStream.schema(schema)
             .option("recursiveFileLookup", "true")
             .parquet(src)
-            .writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination(120)
+        return run_stream_to_files(stream, spark, sink)
 
-    run_once()  # first run sees only batch_a
-    n_first = spark.read.parquet(sink).count()
-    assert n_first == part1.count()
+    # first run sees only batch_a
+    assert run_once().count() == part1.count()
 
     part2.coalesce(1).write.parquet(src + "/batch_b")
-    run_once()  # restart from the same checkpoint
+    got = run_once()  # restart from the same checkpoint
 
-    got = spark.read.parquet(sink)
     assert got.count() == events.count(), "no loss, no duplicates"
     assert got.select("event_id").distinct().count() == events.count()
+    batches = sorted(
+        n for n in os.listdir(os.path.join(sink, "_spark_metadata"))
+        if not n.startswith(".")
+    )
+    assert batches == ["0", "1"], f"sink commit log: {batches}"
 
 
 def test_stateful_sessions_on_rocksdb_state_store(spark, tmp_path):

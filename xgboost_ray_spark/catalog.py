@@ -33,10 +33,10 @@ TABLES = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# Repo-local scratch root for operators that materialize artifacts
-# (indexes, compacted files, stream sinks). Derived from this file's
-# location so a relocated checkout keeps working; single definition so
-# the path can't drift between modules.
+# Repo-local scratch root for every file the engine writes (spills,
+# layouts, stream sinks, the worker zip). Derived from this file's
+# location so a relocated checkout keeps working; read only here, through
+# scratch_path and sweep_scratch (tests/test_scratch_audit.py).
 SCRATCH_DIR = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch"
 )
@@ -50,13 +50,15 @@ _SCRATCH_SWEPT = False
 def scratch_path(tag: str) -> str:
     """A path no build has used before: ``<root>/<tag>_<n>``.
 
-    Every scratch artifact (spills, layout round trips) is written once
-    to a fresh path and never overwritten, so a frame built earlier keeps
-    reading the files it listed however many later builds run. The root
-    is one ``spill_<pid>_*`` dir per process under ``SCRATCH_DIR``,
-    removed at exit; :func:`sweep_scratch` removes the roots of processes
-    that died without exiting cleanly. Safe to call from several threads:
-    the counter is shared and the root is made once under a lock.
+    The one way any code writes under ``SCRATCH_DIR``: spills, layout
+    round trips, stream sinks with their checkpoints, CDC snapshots,
+    example outputs and the worker zip all take a fresh path here and
+    never overwrite it, so a frame built earlier keeps reading the files
+    it listed however many later builds run. The root is one
+    ``spill_<pid>_*`` dir per process under ``SCRATCH_DIR``, removed at
+    exit; :func:`sweep_scratch` removes everything else found there.
+    Safe to call from several threads: the counter is shared and the
+    root is made once under a lock.
     """
     global _SCRATCH_ROOT
     with _SCRATCH_LOCK:
@@ -80,15 +82,14 @@ def _pid_alive(pid: int) -> bool:
 
 
 def sweep_scratch() -> int:
-    """Remove every ``spill_*`` entry under ``SCRATCH_DIR`` except the
-    roots of live processes; returns how many went.
+    """Remove every entry under ``SCRATCH_DIR`` except the roots of live
+    processes; returns how many went.
 
     A ``spill_<pid>_*`` root whose pid is running belongs to a live
     session (this one, or a concurrent test/driver process) and stays.
     Everything else is garbage: roots of processes that were killed
-    before their exit hook ran, and dirs of the old keyed layout
-    (``spill_<tag>_<digest>``). Runs once per process, from
-    ``registry.prepare_session``.
+    before their exit hook ran, and dirs that older layouts wrote at
+    fixed names. Runs once per process, from ``registry.prepare_session``.
     """
     global _SCRATCH_SWEPT
     if _SCRATCH_SWEPT:
@@ -100,10 +101,9 @@ def sweep_scratch() -> int:
         return 0
     removed = 0
     for name in entries:
-        if not name.startswith("spill_"):
-            continue
-        owner = name.split("_")[1]
-        if owner.isdigit() and _pid_alive(int(owner)):
+        kind, _, rest = name.partition("_")
+        owner = rest.partition("_")[0]
+        if kind == "spill" and owner.isdigit() and _pid_alive(int(owner)):
             continue
         shutil.rmtree(os.path.join(SCRATCH_DIR, name), ignore_errors=True)
         removed += 1

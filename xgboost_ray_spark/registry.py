@@ -10,6 +10,7 @@ exact-decimal accumulation so both engines produce bit-identical doubles.
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -96,6 +97,29 @@ def prepare_session(spark: SparkSession) -> None:
     sweep_scratch()
 
 
+@functools.cache
+def _package_zip() -> str:
+    """This package's ``.py`` files zipped once per process to a fresh
+    ``catalog.scratch_path``, removed with the scratch root at exit. A
+    write cut short leaves a partial zip at a path nothing reuses: the
+    cache only holds a path whose write finished."""
+    import os
+    import zipfile
+
+    from xgboost_ray_spark.catalog import scratch_path
+
+    pkg_dir = os.path.dirname(os.path.abspath(__file__))
+    zpath = scratch_path("pyfiles") + ".zip"
+    with zipfile.ZipFile(zpath, "w") as zf:
+        for root, _dirs, files in os.walk(pkg_dir):
+            for fname in files:
+                if fname.endswith(".py"):
+                    full = os.path.join(root, fname)
+                    rel = os.path.relpath(full, pkg_dir)
+                    zf.write(full, os.path.join("xgboost_ray_spark", rel))
+    return zpath
+
+
 def ensure_workers_can_import(spark: SparkSession) -> None:
     """Ship this package to Python workers via ``addPyFile``.
 
@@ -104,37 +128,13 @@ def ensure_workers_can_import(spark: SparkSession) -> None:
     be able to ``import xgboost_ray_spark`` regardless of the driver
     process's cwd/sys.path. On a real cluster this is exactly how the
     package deploys (py-files); in local mode it is a no-op-cost guard.
+    A session restarted in the same process ships the same zip again.
     """
     sc = spark.sparkContext
     app = sc.applicationId
     if app in _SHIPPED_APPS:
         return
-    import os
-    import tempfile
-    import zipfile
-
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    zpath = os.path.join(
-        tempfile.gettempdir(), f"xgboost_ray_spark_pyfiles_{os.getpid()}.zip"
-    )
-    if not os.path.exists(zpath):
-        # Write-then-rename: an interrupted write must not leave a partial
-        # zip at the final name — os.path.exists would accept it on retry
-        # and workers would fail with confusing ImportErrors on whatever
-        # submodules got truncated (same pattern as barrier.save_checkpoint).
-        tmp = f"{zpath}.tmp.{os.getpid()}"
-        with zipfile.ZipFile(tmp, "w") as zf:
-            for root, _dirs, files in os.walk(pkg_dir):
-                for fname in files:
-                    if not fname.endswith(".py"):
-                        continue
-                    full = os.path.join(root, fname)
-                    rel = os.path.join(
-                        "xgboost_ray_spark", os.path.relpath(full, pkg_dir)
-                    )
-                    zf.write(full, rel)
-        os.replace(tmp, zpath)
-    sc.addPyFile(zpath)
+    sc.addPyFile(_package_zip())
     _SHIPPED_APPS.add(app)
 
 

@@ -276,10 +276,9 @@ def s25g_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "etl"),
 )
 def s25h_file_sink_etl(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     from pyspark.sql import functions as F
 
+    from xgboost_ray_spark.catalog import scratch_path
     from xgboost_ray_spark.streaming.windows import run_stream_to_files
 
     etl = (
@@ -292,10 +291,9 @@ def s25h_file_sink_etl(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.to_date("ts").alias("day"),
         )
     )
-    from xgboost_ray_spark.catalog import SCRATCH_DIR
-
-    out = os.path.join(SCRATCH_DIR, "events_etl")
-    got = run_stream_to_files(etl, spark, out, partition_by="day")
+    got = run_stream_to_files(
+        etl, spark, scratch_path("events_etl"), partition_by="day"
+    )
     return got.select("event_id", "user_id", "value", "day")
 
 
@@ -382,28 +380,23 @@ def snapshot_merge_sink(snaps: str):
 )
 def s25i_stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import shutil
 
     from pyspark.sql import functions as F
 
-    from xgboost_ray_spark.catalog import load_table
+    from xgboost_ray_spark.catalog import load_table, scratch_path
 
-    from xgboost_ray_spark.catalog import SCRATCH_DIR
-
-    root = os.path.join(SCRATCH_DIR, "cdc_upsert")
+    root = scratch_path("cdc_upsert")
     src = os.path.join(root, "src")
     chk = os.path.join(root, "chk")
     snaps = os.path.join(root, "snaps")
-    shutil.rmtree(root, ignore_errors=True)
-    for d in (src, chk, snaps):
-        os.makedirs(d, exist_ok=True)
+    os.makedirs(snaps)
 
     cols = ["user_id", "ts", "event_id", "event_type", "value"]
     # Four source files -> four microbatches: the merge provably carries
     # state across batch boundaries instead of reducing one big batch.
     load_table(spark, sf_dir, "events").select(*cols).repartition(
         4
-    ).write.mode("overwrite").parquet(src)
+    ).write.parquet(src)
 
     merge, committed_versions = snapshot_merge_sink(snaps)
 

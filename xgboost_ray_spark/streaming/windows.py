@@ -4,7 +4,11 @@ The events table replays as a file-source stream; aggregations use event-time
 tumbling/sliding windows. ``run_stream_to_memory`` drives a query to
 completion synchronously (processAllAvailable against a memory sink) so the
 batch-equivalence oracle can hash the result — the pattern from the public
-Spark docs for deterministic streaming tests.
+Spark docs for deterministic streaming tests. Its returned frame holds the
+sink itself; the sink's temp view is dropped before it returns.
+``run_stream_to_files`` writes a checkpointed file sink to the dir its
+caller names and never wipes it; the registry entries pass a fresh
+``catalog.scratch_path``.
 
 Watermarks: ``windowed_counts`` takes a watermark delay for the append-mode
 production path (late data dropped after the delay); the oracle-checked
@@ -19,7 +23,6 @@ with checkpointing — the file source here swaps out, the plan does not.
 from __future__ import annotations
 
 import uuid
-from collections import deque
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
@@ -105,17 +108,6 @@ def stream_state_partitions(spark: SparkSession):
         spark.conf.set("spark.sql.shuffle.partitions", batch_parts)
 
 
-# Memory-sink temp views registered by run_stream_to_memory, oldest first.
-# The sink keeps its full result set on the driver for as long as the
-# view exists, so an unbounded session (bench loops re-running streaming
-# entries every pass) would otherwise accumulate one complete result set
-# per run forever. Retention is a small FIFO: the returned DataFrame is
-# guaranteed valid until _MEMORY_SINK_KEEP further run_stream_to_memory
-# calls — collect promptly (every harness here does; the driver collects
-# each query before building the next).
-_MEMORY_SINK_VIEWS: deque[tuple[SparkSession, str]] = deque()
-_MEMORY_SINK_KEEP = 8
-
 # Most recent micro-batch executed plan, stashed by the two runners for
 # the streaming leg of the plan-hygiene sweep (tests/test_plan_hygiene.py
 # pins the batch catalog directly; streaming plans only exist while a
@@ -138,40 +130,37 @@ def _capture_stream_plan(q) -> None:
 def run_stream_to_memory(
     agg: DataFrame, spark: SparkSession, output_mode: str = "complete"
 ) -> DataFrame:
-    """Run a streaming aggregation to completion into a memory sink."""
+    """Run a streaming aggregation to completion into a memory sink.
+
+    The returned frame is resolved over the sink's temp view and holds
+    the sink itself, so the view is dropped before returning: the result
+    rows live on the driver exactly as long as the caller keeps the
+    frame, and no run leaves a ``stream_out_*`` view registered, failed
+    runs included.
+    """
     name = f"stream_out_{uuid.uuid4().hex[:8]}"
     # Clear BEFORE start so a failed run leaves the cell empty, never the
     # previous query's plan (the cell's contract is "this run's plan").
     LAST_STREAM_PLAN[:] = []
-    with stream_state_partitions(spark):
-        q = (
-            agg.writeStream.outputMode(output_mode)
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        # Enqueue for eviction as soon as the view EXISTS (start()
-        # registers it), not after success: a failing
-        # processAllAvailable would otherwise leak a never-evicted,
-        # driver-resident sink view per retry — the exact unbounded
-        # growth the FIFO bounds.
-        _MEMORY_SINK_VIEWS.append((spark, name))
-        try:
-            q.processAllAvailable()
-            _capture_stream_plan(q)
-        finally:
-            q.stop()
-    # The memory sink keeps the result rows after stop(); the uniquely-named
-    # temp view stays registered until evicted by the FIFO above (a
-    # driver-side collect+createDataFrame round-trip here cost ~3s per
-    # 100k rows, so the result stays lazy over the sink).
-    while len(_MEMORY_SINK_VIEWS) > _MEMORY_SINK_KEEP:
-        old_spark, old_name = _MEMORY_SINK_VIEWS.popleft()
-        try:
-            old_spark.catalog.dropTempView(old_name)
-        except Exception:
-            pass  # session already stopped; nothing to free
-    return spark.table(name)
+    try:
+        with stream_state_partitions(spark):
+            q = (
+                agg.writeStream.outputMode(output_mode)
+                .format("memory")
+                .queryName(name)
+                .start()
+            )
+            try:
+                q.processAllAvailable()
+                _capture_stream_plan(q)
+            finally:
+                q.stop()
+        # The memory sink keeps the result rows after stop(); the result
+        # stays lazy over the sink (a driver-side collect+createDataFrame
+        # round-trip here cost ~3s per 100k rows).
+        return spark.table(name)
+    finally:
+        spark.catalog.dropTempView(name)
 
 
 def run_stream_to_files(
@@ -184,18 +173,14 @@ def run_stream_to_files(
     file sink (Trigger.AvailableNow) and return the materialized output.
 
     This is the production ETL topology: the file sink's commit manifest
-    plus the checkpoint give end-to-end exactly-once — a re-run after a
-    mid-batch crash never double-writes (the sink skips committed batch
-    ids). Scratch dirs are wiped first so the entry is deterministic per
-    invocation; on a real deployment the checkpoint persists instead.
+    plus the checkpoint (``<out_dir>_chk``) give end-to-end exactly-once
+    — a re-run after a mid-batch crash never double-writes (the sink
+    skips committed batch ids). Nothing is wiped: a caller that passes a
+    dir used before resumes from its checkpoint and appends only the
+    input that arrived since, and a caller that wants a fresh run passes
+    a fresh ``catalog.scratch_path``.
     """
-    import os
-    import shutil
-
     chk_dir = out_dir + "_chk"
-    for d in (out_dir, chk_dir):
-        shutil.rmtree(d, ignore_errors=True)
-        os.makedirs(d, exist_ok=True)
     writer = (
         df.writeStream.format("parquet")
         .option("path", out_dir)
