@@ -1,11 +1,11 @@
 """Shared AST mechanics for the static call-site audits.
 
-Four audits pin call-site inventories over the package (driver
+Five audits pin call-site inventories over the package (driver
 materialization, broadcast hints, cache lifecycles, scratch-file
-writers; the last also walks ``examples/``). They share the
-walk-and-attribute machinery so a fix to the mechanics (e.g. how calls
-are attributed to their enclosing function) lands once; each audit
-supplies only its matcher.
+writers, plan-text renderers; the scratch audit also walks
+``examples/``). They share the walk-and-attribute machinery so a fix to
+the mechanics (e.g. how calls are attributed to their enclosing
+function) lands once; each audit supplies only its matcher.
 """
 
 from __future__ import annotations

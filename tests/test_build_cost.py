@@ -47,13 +47,10 @@ BOUNDS = [
     # batch count is deterministic for fixed input) and was bit-stable
     # across back-to-back runs on 2026-08-15. All already low-hundreds —
     # no per-element composition found; pinned so it stays that way.
-    # (re-measured after the runners gained the one-call micro-batch plan
-    # capture for the streaming hygiene sweep — +1 where it applies;
-    # re-measured 2026-10-19 once every memory-sink run drops its view
-    # and the sinks write to fresh scratch paths: s25/s25b/s25c/s25d/
-    # s25e unchanged, s25f 292, s25g 423, s25h 130, s25i 750, s25j 220,
-    # s25k 150, s25l 672 — left pinned at the earlier readings, which
-    # give the same floor and ceiling)
+    # (re-measured 2026-10-20 with no plan rendered by the runners:
+    # s25 177, s25b 177, s25c 178, s25d 104, s25e 63, s25f 291, s25g 422,
+    # s25h 129, s25i 750, s25j 219, s25k 149, s25l 671 — left pinned at
+    # the earlier readings, which give the same floor and ceiling)
     ("s25_stream_tumbling", 178, 400),
     ("s25b_stream_sliding", 178, 400),
     ("s25c_stream_watermark_append", 179, 400),

@@ -273,19 +273,33 @@ def test_shuffle_exchange_counts_stay_at_pin(catalog_plans):
     )
 
 
-def test_no_banned_nodes_in_streaming_microbatch_plans(spark):
+def test_no_banned_nodes_in_streaming_microbatch_plans(spark, monkeypatch):
     """The streaming leg of rule 1: micro-batch executed plans only exist
-    while a query runs, so the stream runners stash the last one
-    (streaming/windows.py LAST_STREAM_PLAN) and this sweep re-drives each
-    streaming entry and inspects it. The ~40 s of re-drives duplicates
-    executions other tests perform, deliberately: piggybacking on
-    test_streaming.py's runs would make this sweep's coverage depend on
-    which tests happened to run first, and a single-cell capture keeps
-    the runner hook one line. s25i is the one legitimate no-capture
-    entry — its foreachBatch sink issues plain batch writes (no
-    streaming plan by construction); its merge topology is covered by
-    test_streaming.py's CDC restart tests."""
-    from xgboost_ray_spark.streaming import windows as sw
+    while a query runs, so this sweep re-drives each streaming entry with
+    ``StreamingQuery.processAllAvailable`` and ``.awaitTermination``
+    patched to record the query's last executed plan once they return.
+    The engine itself renders no streaming plan. The ~40 s of re-drives
+    duplicates executions other tests perform, deliberately:
+    piggybacking on test_streaming.py's runs would make this sweep's
+    coverage depend on which tests happened to run first. Every
+    streaming entry has a micro-batch plan, s25i's foreachBatch CDC
+    merge included."""
+    from pyspark.sql.streaming.query import StreamingQuery
+
+    plans: list[str] = []
+
+    def recording(wait):
+        def run(self, *args, **kwargs):
+            out = wait(self, *args, **kwargs)
+            plans.append(self._jsq.explainInternal(True))
+            return out
+
+        return run
+
+    for attr in ("processAllAvailable", "awaitTermination"):
+        monkeypatch.setattr(
+            StreamingQuery, attr, recording(getattr(StreamingQuery, attr))
+        )
 
     violations: dict[str, list[str]] = {}
     missing: list[str] = []
@@ -293,31 +307,31 @@ def test_no_banned_nodes_in_streaming_microbatch_plans(spark):
     for name, spec in all_queries().items():
         if "streaming" not in spec.tags:
             continue
-        sw.LAST_STREAM_PLAN[:] = []
+        plans.clear()
         spec.build(spark, SF_SMOKE)
-        plan = sw.LAST_STREAM_PLAN[0] if sw.LAST_STREAM_PLAN else ""
         # explainInternal returns a "No physical plan. Waiting for data."
         # placeholder when no micro-batch ever executed — that is NOT a
         # swept plan; report it as missing instead of passing vacuously.
-        if "== Physical Plan ==" not in plan:
+        swept = [p for p in plans if "== Physical Plan ==" in p]
+        if not swept:
             missing.append(name)
             continue
-        found = [
+        found = sorted(
             node
             for node, allowed in _BANNED_NODES.items()
-            if node in plan and name not in allowed
-        ]
+            if name not in allowed and any(node in p for p in swept)
+        )
         if found:
             violations[name] = found
         checked += 1
     assert not violations, (
         f"banned physical nodes in streaming micro-batch plans: {violations}"
     )
-    assert missing == ["s25i_stream_cdc_upsert"], (
-        "streaming entries without a captured micro-batch plan (runner "
-        f"bypassed or capture broke): {missing}"
+    assert missing == [], (
+        "streaming entries without a micro-batch plan (no query ran to "
+        f"completion through the patched waits): {missing}"
     )
-    assert checked >= 11, f"streaming sweep shrank unexpectedly: {checked}"
+    assert checked >= 12, f"streaming sweep shrank unexpectedly: {checked}"
 
 
 def test_nested_loop_joins_only_on_scalar_frames(catalog_plans):

@@ -12,7 +12,6 @@ raises on the Spark side too (fails closed, matching the oracle).
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from xgboost_ray_spark.operators.profile import exact_outlier_flags
 
@@ -97,170 +96,3 @@ def test_s32b_empty_snapshot_reports_zero_not_null(spark, tmp_path):
     assert len(got) == 5
     assert all(v == 0 for v in got.values()), got
 
-
-def test_profile_warns_on_unpersisted_expensive_input(spark, caplog):
-    """profile() executes its input plan twice by design (docstring
-    contract, measured 3x win over the one-aggregate SortAggregate plan
-    for pruned scans). For a derived frame that doubles real work, so the
-    call must emit the foot-gun warning when the analyzed plan carries a
-    join/aggregate/shuffle node AND the frame is unpersisted — and stay
-    silent for the two sanctioned shapes (pruned scan; persisted derived
-    frame)."""
-    import logging
-
-    from xgboost_ray_spark.operators.profile import profile
-
-    logger = "xgboost_ray_spark.operators.profile"
-    a = spark.range(10).withColumnRenamed("id", "k")
-    joined = a.join(spark.range(10).withColumnRenamed("id", "k"), "k")
-
-    with caplog.at_level(logging.WARNING, logger=logger):
-        profile(joined, (("k", True),))
-    assert any(
-        "executes its input plan TWICE" in r.getMessage()
-        for r in caplog.records
-    ), "no foot-gun warning for an unpersisted joined input"
-
-    # dropDuplicates and orderBy shuffle the full input too — in the
-    # ANALYZED plan they appear as Deduplicate/Sort, not Aggregate
-    caplog.clear()
-    with caplog.at_level(logging.WARNING, logger=logger):
-        profile(a.dropDuplicates(["k"]), (("k", True),))
-    assert any(
-        "Deduplicate" in r.getMessage() for r in caplog.records
-    ), "no warning for an unpersisted dropDuplicates input"
-
-    # sanctioned shape 1: a plain scan-like frame -> silent, even when
-    # an IDENTIFIER contains a node name (node matching is anchored to
-    # the plan-tree position, not bare substrings)
-    caplog.clear()
-    with caplog.at_level(logging.WARNING, logger=logger):
-        profile(
-            a.withColumnRenamed("k", "JoinKey"), (("JoinKey", True),)
-        )
-    assert not caplog.records, [r.getMessage() for r in caplog.records]
-
-    # sanctioned shape 2: the documented mitigation (persist) -> silent
-    joined.persist()
-    try:
-        caplog.clear()
-        with caplog.at_level(logging.WARNING, logger=logger):
-            profile(joined, (("k", True),))
-        assert not caplog.records, [r.getMessage() for r in caplog.records]
-
-        # sanctioned shape 3 (round-11): a frame DERIVED from the
-        # persisted parent — cache substitution puts the Join below an
-        # InMemoryRelation boundary in withCachedData, and both profile
-        # branches hit the cache, so no warning (this was the docstring's
-        # known over-warn; the cached subtree's embedded physical plan
-        # must not count either)
-        caplog.clear()
-        with caplog.at_level(logging.WARNING, logger=logger):
-            profile(joined.select("k").filter(F.col("k") >= 0), (("k", True),))
-        assert not caplog.records, [r.getMessage() for r in caplog.records]
-
-        # ...but expensive work ABOVE the cache boundary genuinely runs
-        # twice and must still warn
-        caplog.clear()
-        with caplog.at_level(logging.WARNING, logger=logger):
-            profile(joined.dropDuplicates(["k"]), (("k", True),))
-        assert any(
-            "Deduplicate" in r.getMessage() for r in caplog.records
-        ), "no warning for expensive work above a cached parent"
-    finally:
-        joined.unpersist()
-
-    # sanctioned shape 4 (round-11, the ADVICE r10 catalog-cache class):
-    # a frame DERIVED from a CATALOG-cached view (cacheTable, not
-    # DataFrame.persist). A direct spark.table() of the cached view
-    # already reports the cache through df.storageLevel (the fast
-    # path), so the over-warn class is the derived frame — its own
-    # storageLevel is NONE, but withCachedData substitutes the view's
-    # InMemoryRelation below it, so no warning
-    joined.createOrReplaceTempView("profile_guard_cached_v")
-    try:
-        spark.catalog.cacheTable("profile_guard_cached_v")
-        derived = spark.table("profile_guard_cached_v").filter(
-            F.col("k") >= 0
-        )
-        assert not (
-            derived.storageLevel.useMemory or derived.storageLevel.useDisk
-        ), "precondition: the DERIVED frame must not be the fast-path case"
-        caplog.clear()
-        with caplog.at_level(logging.WARNING, logger=logger):
-            profile(derived, (("k", True),))
-        assert not caplog.records, [r.getMessage() for r in caplog.records]
-    finally:
-        # uncache may legitimately have nothing to release if cacheTable
-        # itself failed; the view drop must still run either way
-        try:
-            spark.catalog.uncacheTable("profile_guard_cached_v")
-        except Exception:
-            pass
-        spark.catalog.dropTempView("profile_guard_cached_v")
-
-
-def test_strip_cached_subtrees_sibling_and_degenerate_lines():
-    """String-level pins for the ``_strip_cached_subtrees`` depth
-    heuristic (VERDICT r11 #7 + ADVICE r11): (a) a sibling node at the
-    SAME depth as a cached subtree's root — including a second
-    InMemoryRelation — ends the skip and is processed itself; (b) a
-    degenerate render line (blank, or prefix-set characters only)
-    inside a cached subtree must not prematurely end the skip and
-    re-expose the cached plan's expensive nodes to the warn regex."""
-    from xgboost_ray_spark.operators.profile import (
-        _EXPENSIVE_NODE_RE,
-        _strip_cached_subtrees,
-    )
-
-    # (a) multi-child plan: cached left child, expensive right SIBLING at
-    # equal depth. The sibling's Aggregate sits above any cache boundary
-    # -> must survive the strip; the cached subtree's Sort/Exchange must
-    # not.
-    plan = "\n".join([
-        "Project [k]",
-        "+- Join Inner, (k = k)",
-        "   :- InMemoryRelation [k], StorageLevel(disk, memory)",
-        "   :     +- Sort [k ASC], false",
-        "   :        +- Exchange hashpartitioning(k, 32)",
-        "   +- Aggregate [k], [k, count(1) AS c]",
-        "      +- Range (0, 10)",
-    ])
-    stripped = _strip_cached_subtrees(plan)
-    assert "Aggregate" in stripped, "sibling after the boundary was lost"
-    assert "Join" in stripped
-    assert "Sort" not in stripped and "Exchange" not in stripped
-    assert "InMemoryRelation" not in stripped
-    hits = set(_EXPENSIVE_NODE_RE.findall(stripped))
-    assert hits == {"Join", "Aggregate"}, hits
-
-    # (a') two InMemoryRelation siblings at equal depth: the second must
-    # start its OWN skip, not be emitted as a resumed line.
-    plan = "\n".join([
-        "Join Inner, (a = b)",
-        ":- InMemoryRelation [a], StorageLevel(memory)",
-        ":     +- Sort [a ASC], false",
-        "+- InMemoryRelation [b], StorageLevel(memory)",
-        "      +- Window [row_number()], [b]",
-    ])
-    stripped = _strip_cached_subtrees(plan)
-    assert stripped == "Join Inner, (a = b)", stripped
-
-    # (b) degenerate lines inside the cached subtree: a bare ':'
-    # continuation and a fully blank line both lstrip to an empty body,
-    # so their prefix length carries no depth signal. Before the r12 fix
-    # they ended the skip and re-exposed the Exchange below them.
-    plan = "\n".join([
-        "Project [k]",
-        "+- InMemoryRelation [k], StorageLevel(memory)",
-        "   :     +- Sort [k ASC], false",
-        "   :",
-        "",
-        "   :        +- Exchange hashpartitioning(k, 32)",
-        "+- Range (0, 10)",
-    ])
-    stripped = _strip_cached_subtrees(plan)
-    assert "Exchange" not in stripped, stripped
-    assert "Sort" not in stripped
-    assert "Range" in stripped, "equal-depth resume after degenerate lines"
-    assert not _EXPENSIVE_NODE_RE.findall(stripped)

@@ -67,7 +67,6 @@ class MatrixSpec:
     feature_weights: tuple[float, ...] | None = None
     missing: float | None = None
     ignore: tuple[str, ...] = ()
-    enable_categorical: bool = False
     # "dmatrix" | "quantile" — the reference's RayDMatrix vs
     # Ray(Device)QuantileDMatrix split (matrix.py:697 vs matrix.py:977):
     # "quantile" makes the barrier path build xgb.QuantileDMatrix (histogram

@@ -1,8 +1,9 @@
 """Training cluster/fault-tolerance parameters.
 
 Parity with ``RayParams`` (xgboost_ray/main.py:450-540): the fields keep the
-reference names so a user can port call sites mechanically; fields whose
-concern Spark absorbs are documented as such rather than dropped.
+reference names so a user can port call sites mechanically. Reference fields
+with no Spark counterpart have no field here, so setting one fails with a
+``TypeError`` instead of being silently ignored.
 """
 
 from __future__ import annotations
@@ -19,25 +20,23 @@ class GBTParams:
     cpus_per_actor    -> cpus_per_worker: maps to spark.task.cpus intent; in
                          the barrier task we set OMP_NUM_THREADS from it
                          (reference main.py:355-362).
-    gpus_per_actor    -> gpus_per_worker: stage-level scheduling hook (v1:
-                         recorded, not yet wired; reference main.py:387-418).
     max_actor_restarts-> max_restarts: driver-side retry loop around the
                          training job (reference retry loop main.py:1606-1713;
                          Spark additionally re-runs barrier stages itself).
     checkpoint_frequency: boosting rounds between checkpoints (reference
                          _save_checkpoint_callback main.py:612-626).
-    elastic_training  : accepted for parity; Spark barrier stages are
-                         all-or-nothing, so elastic shrink maps to
-                         retry-with-current-parallelism (SURVEY §7 gap).
+
+    Not carried over: gpus_per_actor (GPU stage-level scheduling is not
+    wired; reference main.py:387-418) and elastic_training (Spark barrier
+    stages are all-or-nothing, so elastic shrink maps to the max_restarts
+    retry at current parallelism; SURVEY §7 gap).
     """
 
     num_workers: int = 2
     cpus_per_worker: int = 0
-    gpus_per_worker: int = 0
     max_restarts: int = 0
     checkpoint_frequency: int = 5
     checkpoint_path: str | None = None
-    elastic_training: bool = False
     seed: int = 42
     # Cooperative-stop flag path (reference R22 Event actor; see
     # ml/stopping.py). When set, both backends honor a stop request
@@ -48,9 +47,4 @@ class GBTParams:
     def validated(self) -> "GBTParams":
         if self.num_workers < 1:
             raise ValueError("num_workers must be >= 1")
-        if self.elastic_training and self.max_restarts == 0:
-            raise ValueError(
-                "elastic_training requires max_restarts > 0 "
-                "(shrink-on-retry semantics; see SURVEY §7)"
-            )
         return self

@@ -15,16 +15,11 @@ profiling happens ad hoc in pandas. Here it is a first-class operator.
 
 from __future__ import annotations
 
-import logging
-import re
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from xgboost_ray_spark.catalog import load_table
 from xgboost_ray_spark.registry import register
-
-_LOG = logging.getLogger(__name__)
 
 # (column, numeric?) — o_orderdate profiles via a fixed-format string
 # rendering (lexicographic == chronological for this format).
@@ -36,94 +31,6 @@ _PROFILE_COLS: tuple[tuple[str, bool], ...] = (
     ("o_orderpriority", False),
     ("o_orderdate_s", False),
 )
-
-
-# Analyzed-logical-plan node names whose recompute is expensive enough
-# that profiling the frame unpersisted doubles real work (vs a pruned
-# scan, whose second pass re-reads cheap column chunks). Deduplicate and
-# Sort are full shuffles at this stage too (dropDuplicates/orderBy show
-# up under those names in the ANALYZED plan, before any physical
-# rewrite); RepartitionByExpression is repartition(col).
-_EXPENSIVE_PLAN_NODES = (
-    "Join", "Aggregate", "Deduplicate", "Sort",
-    "Repartition", "RepartitionByExpression", "Window",
-)
-# Node names sit right after the plan tree's drawing prefix; anchoring
-# there keeps identifiers from matching (a column named WindowStart
-# appears inside brackets mid-line, never at the node position).
-_EXPENSIVE_NODE_RE = re.compile(
-    r"(?m)^[\s+:|-]*(" + "|".join(_EXPENSIVE_PLAN_NODES) + r")\b"
-)
-
-
-def _strip_cached_subtrees(plan: str) -> str:
-    """Drop every subtree rooted at an InMemoryRelation from a plan-tree
-    string render. InMemoryRelation embeds its cached PHYSICAL plan in
-    the render, and a physical Sort/Window line outside a codegen span
-    sits at the node-anchored position the expensive-node regex scans —
-    but anything below the cache boundary is exactly the work a second
-    pass does NOT redo, so it must not count. Depth = length of the
-    tree-drawing prefix (spaces and ``:+-|``). Degenerate render lines
-    (blank, or entirely made of prefix-set characters) carry no depth
-    signal, so while a skip is active they stay inside the skipped
-    subtree instead of prematurely ending it."""
-    out: list[str] = []
-    skip_depth: int | None = None
-    for line in plan.splitlines():
-        body = line.lstrip(" :+-|")
-        if skip_depth is not None and not body.strip():
-            continue
-        depth = len(line) - len(body)
-        if skip_depth is not None:
-            if depth > skip_depth:
-                continue
-            skip_depth = None
-        if body.startswith("InMemoryRelation"):
-            skip_depth = depth
-            continue
-        out.append(line)
-    return "\n".join(out)
-
-
-def _warn_if_recompute_expensive(df: DataFrame) -> None:
-    """Warn when ``profile``'s documented double-execution contract is
-    about to bite: the input's logical plan (one py4j string render —
-    no optimization, no job) contains a join/aggregate/shuffle node AND
-    the frame is not persisted. Persisted inputs are exempt — their
-    second pass hits the cache, which is exactly the documented
-    mitigation. Advisory only: never fails the call (the check is
-    best-effort and a deliberate unpersisted double-pass stays legal).
-
-    The scan reads ``withCachedData`` — the analyzed plan AFTER cache
-    substitution — so a frame DERIVED from a persisted parent (e.g.
-    ``profile(cached.select(...))``) or reading a catalog-cached view
-    (``spark.catalog.cacheTable``) stays silent: the parent's Join sits
-    below an InMemoryRelation boundary and both profile branches would
-    hit the cache. Expensive work ABOVE the cache boundary (say
-    ``profile(cached.dropDuplicates(...))``) still warns — that part
-    genuinely runs twice. Falls back to the pre-substitution ANALYZED
-    plan if the withCachedData render fails (erring loud beats missing
-    the real double-pass)."""
-    try:
-        if df.storageLevel.useMemory or df.storageLevel.useDisk:
-            return
-        qe = df._jdf.queryExecution()
-        try:
-            plan = _strip_cached_subtrees(qe.withCachedData().toString())
-        except Exception:
-            plan = qe.analyzed().toString()
-    except Exception:  # plan render is diagnostics, never a failure path
-        return
-    hits = sorted(set(_EXPENSIVE_NODE_RE.findall(plan)))
-    if hits:
-        _LOG.warning(
-            "profile() executes its input plan TWICE (two independent "
-            "aggregate branches) and this input contains %s — persist() "
-            "the frame before profiling (and unpersist after) to avoid "
-            "paying its construction cost twice; see profile()'s "
-            "caller contract.",
-            "/".join(hits),
-        )
 
 
 def profile(df: DataFrame, cols: tuple[tuple[str, bool], ...]) -> DataFrame:
@@ -153,9 +60,7 @@ def profile(df: DataFrame, cols: tuple[tuple[str, bool], ...]) -> DataFrame:
     the measured win over the one-aggregate SortAggregate plan. If you
     profile an expensive derived frame (joins, UDFs, shuffles upstream),
     ``persist()`` it before calling and unpersist after, or you pay its
-    full construction cost twice. ``_warn_if_recompute_expensive`` turns
-    that contract into a logged warning at call time."""
-    _warn_if_recompute_expensive(df)
+    full construction cost twice."""
     nd_fields = ", ".join(
         f"count(DISTINCT {c}) AS {c}__nd" for c, _ in cols
     )

@@ -225,70 +225,60 @@ def sql_davg(expr: str, alias: str) -> str:
 # ---------------------------------------------------------------------------
 _DRIVER_ORDER = [
     # -- slots 1-50 -----------------------------------------------------
-    "s03_projection", "s28_token_stats", "s15_sort_limit",
-    "s22_array_funcs", "s21_conditional", "s20_math_funcs",
-    "s19_date_funcs", "s18_string_funcs", "s33_sequence_pack",
-    "s12_having", "s31_hash_split", "s16_topk_per_group",
-    "s23_json", "s04_filter", "s09d_argmax", "s11c_grouping_sets",
-    "s14_window_analytic", "s13_window_rank", "s10_count_distinct",
-    "s17_setops", "s24_tumbling_window", "s01_parquet_scan",
-    "s02_csv_scan", "s14d_point_in_time", "s28i_bigram_counts",
-    "s24f_user_sequences", "s24d_transition_counts", "s28j_feature_hash",
-    "s14c_scd2_intervals", "s26c_simhash", "s28l_unigram_logprob",
-    "s28g_repetition_score", "s05b_salted_join",
-    "s06_outer_join", "s07_semi_anti_join", "s08_broadcast_join",
-    "s26h_boilerplate_phrases", "s28e_tfidf_top_terms",
-    "s26b_minhash_lsh", "s26f_canonical_dedup",
-    "s27c_embedding_neardup", "s26e_hamming_pairs",
-    "s26d_ngram_jaccard", "s29_pandas_udf", "s32_profile",
-    "s30c_linear_model_train", "s25e_stream_dedup",
-    "s26g_dup_clusters", "s25d_stateful_sessions", "s24g_pagerank",
+    "s03_projection", "s11e_unpivot", "s26_dedup_exact", "s01_parquet_scan",
+    "s31e_temporal_split", "s28k_class_entropy", "s24b_sessionization",
+    "s26f_canonical_dedup", "s31d_domain_mixture", "s32c_drift_report",
+    "s21_conditional", "s31g_negative_pairs", "s19_date_funcs",
+    "s24e_retention_cohorts", "s04_filter", "s07_semi_anti_join",
+    "s06_outer_join", "s09_groupby_agg", "s15_sort_limit",
+    "s22_array_funcs", "s09d_argmax", "s05c_tpch_q3", "s05_inner_join",
+    "s14_window_analytic", "s31_hash_split", "s24_tumbling_window",
+    "s05b_salted_join", "s02_csv_scan", "s16_topk_per_group",
+    "s30c_linear_model_train", "s20_math_funcs", "s11c_grouping_sets",
+    "s10_count_distinct", "s13_window_rank", "s27c_embedding_neardup",
+    "s08_broadcast_join", "s23_json", "s05h_tpch_q9", "s32_profile",
+    "s12_having", "s27h_embedding_quantize", "s33_sequence_pack",
+    "s05f_tpch_q7", "s17_setops", "s27i_quantized_topk", "s28_token_stats",
+    "s05g_tpch_q8", "s29_pandas_udf", "s25e_stream_dedup",
+    "s18_string_funcs",
     # -- slots 51+: outside the window ---------------------------------
-    "s27j_kmeans", "s26l_prefix_filter_join", "s26j_fuzzy_snm",
-    "s27e_knn_classify", "s27f_label_centroids",
-    "s29j_unicode_normalize", "s29i_map_in_arrow",
-    "s29h_grouped_agg_udaf", "s29f_audio_window_rms",
-    "s01g_jsonl_scan", "s01b_orc_scan", "s01c_partition_pruning",
-    "s01d_schema_evolution", "s01h_zorder_layout",
-    "s01f_binaryfile_scan", "s01e_compaction",
-    "s01i_dynamic_partition_pruning",
-    "s05f_tpch_q7", "s05g_tpch_q8", "s04b_disjunctive_pushdown",
+    "s14d_point_in_time", "s28i_bigram_counts", "s24f_user_sequences",
+    "s24d_transition_counts", "s28j_feature_hash", "s14c_scd2_intervals",
+    "s26c_simhash", "s28l_unigram_logprob", "s28g_repetition_score",
+    "s26h_boilerplate_phrases", "s28e_tfidf_top_terms", "s26b_minhash_lsh",
+    "s26e_hamming_pairs", "s26d_ngram_jaccard", "s26g_dup_clusters",
+    "s25d_stateful_sessions", "s24g_pagerank", "s27j_kmeans",
+    "s26l_prefix_filter_join", "s26j_fuzzy_snm", "s27e_knn_classify",
+    "s27f_label_centroids", "s29j_unicode_normalize", "s29i_map_in_arrow",
+    "s29h_grouped_agg_udaf", "s29f_audio_window_rms", "s01g_jsonl_scan",
+    "s01b_orc_scan", "s01c_partition_pruning", "s01d_schema_evolution",
+    "s01h_zorder_layout", "s01f_binaryfile_scan", "s01e_compaction",
+    "s01i_dynamic_partition_pruning", "s04b_disjunctive_pushdown",
     "s07c_inactive_customers", "s07d_sole_fault_supplier",
-    "s06d_outerjoin_histogram", "s06c_cdc_upsert",
-    "s28h_pii_redact",
-    "s27g_lsh_neardup_pairs", "s32b_data_quality",
-    "s25b_stream_sliding", "s25c_stream_watermark_append",
-    "s25f_stream_static_join", "s25j_stream_trending",
-    "s25k_stream_session_window", "s30_gbt_train_predict",
-    "s23c_variant", "s13b_distribution_ranks", "s31h_quantile_bins",
-    "s32d_outlier_flags", "s26i_decontaminate",
+    "s06d_outerjoin_histogram", "s06c_cdc_upsert", "s28h_pii_redact",
+    "s27g_lsh_neardup_pairs", "s32b_data_quality", "s25b_stream_sliding",
+    "s25c_stream_watermark_append", "s25f_stream_static_join",
+    "s25j_stream_trending", "s25k_stream_session_window",
+    "s30_gbt_train_predict", "s23c_variant", "s13b_distribution_ranks",
+    "s31h_quantile_bins", "s32d_outlier_flags", "s26i_decontaminate",
     "s27_cosine_topk", "s27d_ivf_topk", "s30d_linear_model_score",
     "s30e_cv_ols", "s30f_learning_curve", "s26k_incremental_neardup",
     "s25h_file_sink_etl", "s25l_stream_outlier_guard",
-    "s25g_stream_stream_join", "s25i_stream_cdc_upsert",
-    "s22c_map_funcs", "s12b_having_join", "s16b_tpch_q15",
-    "s29g_udtf_token_runs", "s07b_exists_subquery",
-    "s09e_quantile_filter", "s09f_scalar_subquery", "s09g_incremental_agg",
-    "s14e_gaps_islands", "s24c_funnel", "s21c_tpch_q12",
-    "s05d_tpch_q5", "s05e_tpch_q10", "s27b_lsh_topk",
-    "s25_stream_tumbling",
-    "s15b_sort_nulls", "s22b_array_hof", "s21b_promo_revenue",
-    "s33b_chunk_overlap", "s31b_stratified_sample", "s31c_group_sample",
-    "s31f_weighted_sample", "s23b_from_json", "s28b_lang_id",
-    "s28c_quality_score", "s28d_fingerprint", "s28f_regex_tokens",
-    "s04c_tpch_q6", "s29c_grouped_map", "s29e_frame_sample",
-    "s30b_ltr_rank",
-    "s10c_distinct_rows", "s11_rollup", "s11b_cube", "s11d_pivot",
-    "s11e_unpivot", "s06b_full_outer_join", "s09b_stats_agg",
-    "s09c_salted_agg", "s10b_approx_count_distinct", "s14b_range_frame",
-    "s08b_asof_join", "s08c_range_join",
+    "s25g_stream_stream_join", "s25i_stream_cdc_upsert", "s22c_map_funcs",
+    "s12b_having_join", "s16b_tpch_q15", "s29g_udtf_token_runs",
+    "s07b_exists_subquery", "s09e_quantile_filter", "s09f_scalar_subquery",
+    "s09g_incremental_agg", "s14e_gaps_islands", "s24c_funnel",
+    "s21c_tpch_q12", "s05d_tpch_q5", "s05e_tpch_q10", "s27b_lsh_topk",
+    "s25_stream_tumbling", "s15b_sort_nulls", "s22b_array_hof",
+    "s21b_promo_revenue", "s33b_chunk_overlap", "s31b_stratified_sample",
+    "s31c_group_sample", "s31f_weighted_sample", "s23b_from_json",
+    "s28b_lang_id", "s28c_quality_score", "s28d_fingerprint",
+    "s28f_regex_tokens", "s04c_tpch_q6", "s29c_grouped_map",
+    "s29e_frame_sample", "s30b_ltr_rank", "s10c_distinct_rows",
+    "s11_rollup", "s11b_cube", "s11d_pivot", "s06b_full_outer_join",
+    "s09b_stats_agg", "s09c_salted_agg", "s10b_approx_count_distinct",
+    "s14b_range_frame", "s08b_asof_join", "s08c_range_join",
     "s29b_multimodal_decode", "s29d_multimodal_resize",
-    "s31e_temporal_split", "s31g_negative_pairs", "s31d_domain_mixture",
-    "s28k_class_entropy", "s32c_drift_report", "s26_dedup_exact",
-    "s05_inner_join", "s24b_sessionization",
-    "s27h_embedding_quantize", "s27i_quantized_topk",
-    "s05c_tpch_q3", "s09_groupby_agg", "s05h_tpch_q9",
-    "s24e_retention_cohorts",
 ]
 
 # How many leading entries of queries() the driver's correctness sweep reads.

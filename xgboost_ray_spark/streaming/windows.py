@@ -8,7 +8,9 @@ Spark docs for deterministic streaming tests. Its returned frame holds the
 sink itself; the sink's temp view is dropped before it returns.
 ``run_stream_to_files`` writes a checkpointed file sink to the dir its
 caller names and never wipes it; the registry entries pass a fresh
-``catalog.scratch_path``.
+``catalog.scratch_path``. Neither runner renders plan text: a test that
+needs a micro-batch plan records it from the query itself
+(tests/test_plan_hygiene.py).
 
 Watermarks: ``windowed_counts`` takes a watermark delay for the append-mode
 production path (late data dropped after the delay); the oracle-checked
@@ -108,25 +110,6 @@ def stream_state_partitions(spark: SparkSession):
         spark.conf.set("spark.sql.shuffle.partitions", batch_parts)
 
 
-# Most recent micro-batch executed plan, stashed by the two runners for
-# the streaming leg of the plan-hygiene sweep (tests/test_plan_hygiene.py
-# pins the batch catalog directly; streaming plans only exist while a
-# query runs, so the runner captures them in passing). One list cell,
-# overwritten per run — read it immediately after the build returns.
-LAST_STREAM_PLAN: list[str] = []
-
-
-def _capture_stream_plan(q) -> None:
-    """Stash the finished query's lastExecution plan text (explainInternal
-    reads driver-side state — no job, one py4j call, covered by the
-    build-cost ceilings' headroom). Advisory: capture failures leave the
-    cell empty rather than failing the run."""
-    try:
-        LAST_STREAM_PLAN[:] = [q._jsq.explainInternal(True)]
-    except Exception:
-        LAST_STREAM_PLAN[:] = []
-
-
 def run_stream_to_memory(
     agg: DataFrame, spark: SparkSession, output_mode: str = "complete"
 ) -> DataFrame:
@@ -139,9 +122,6 @@ def run_stream_to_memory(
     runs included.
     """
     name = f"stream_out_{uuid.uuid4().hex[:8]}"
-    # Clear BEFORE start so a failed run leaves the cell empty, never the
-    # previous query's plan (the cell's contract is "this run's plan").
-    LAST_STREAM_PLAN[:] = []
     try:
         with stream_state_partitions(spark):
             q = (
@@ -152,7 +132,6 @@ def run_stream_to_memory(
             )
             try:
                 q.processAllAvailable()
-                _capture_stream_plan(q)
             finally:
                 q.stop()
         # The memory sink keeps the result rows after stop(); the result
@@ -190,10 +169,6 @@ def run_stream_to_files(
     )
     if partition_by:
         writer = writer.partitionBy(partition_by)
-    # Same pre-start clear as run_stream_to_memory: a failed run must not
-    # leave the previous query's plan readable as this run's.
-    LAST_STREAM_PLAN[:] = []
     q = writer.start()
     q.awaitTermination()
-    _capture_stream_plan(q)
     return spark.read.parquet(out_dir)
