@@ -51,6 +51,16 @@ def parse_timings(path: str) -> dict[str, float]:
     return times
 
 
+def window_order(
+    window: list[str], times: dict[str, float], lead: str
+) -> list[str]:
+    """``lead`` (the registry's first entry, which absorbs JVM warm-up)
+    stays first; the rest follow cheapest-first, untimed entries last."""
+    return sorted(
+        window, key=lambda n: (n != lead, times.get(n, float("inf")), n)
+    )
+
+
 def main() -> None:
     times = parse_timings(sys.argv[1]) if len(sys.argv) > 1 else {}
 
@@ -129,9 +139,8 @@ def main() -> None:
     n_rot = DRIVER_WINDOW - len(CANONICAL_ENTRIES)
     rotation = backlog[:n_rot]
     refill = stale[: n_rot - len(rotation)]
-    window = sorted(
-        list(CANONICAL_ENTRIES) + rotation + refill,
-        key=lambda n: (times.get(n, float("inf")), n),
+    window = window_order(
+        list(CANONICAL_ENTRIES) + rotation + refill, times, lead=names[0]
     )
 
     print(f"driver rows so far: {len(seen)} entries across {len(rounds)} rounds")
@@ -146,7 +155,10 @@ def main() -> None:
         )
         for n in refill:
             print(f"  r{last_round.get(n, 0):<3d} {n}")
-    print(f"\nsuggested next window ({len(window)} entries, cheap-first):")
+    print(
+        f"\nsuggested next window ({len(window)} entries, "
+        f"{names[0]} first, then cheap-first):"
+    )
     for n in window:
         if n in rotation:
             tag = "  <- rotated in"

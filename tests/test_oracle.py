@@ -10,8 +10,8 @@ import pytest
 
 from xgboost_ray_spark.registry import all_queries
 
-from .conftest import SF_SMOKE
-from .oracle_utils import compare
+from .conftest import SF_ORACLE, SF_SMOKE
+from .oracle_utils import compare, duck_connection
 
 _QUERIES = all_queries()
 _WITH_ORACLE = [n for n, s in _QUERIES.items() if s.oracle is not None]
@@ -23,6 +23,17 @@ def test_oracle_match(spark, name):
     spec = _QUERIES[name]
     df = spec.build(spark, SF_SMOKE)
     compare(df, spec.oracle, SF_SMOKE)
+
+
+def test_no_oracle_is_empty():
+    """A hash match of two empty results checks nothing, so every oracle
+    must return at least one row at ``SF_ORACLE``. DuckDB only."""
+    con = duck_connection(SF_ORACLE)
+    empty = [
+        n for n in _WITH_ORACLE
+        if con.execute(_QUERIES[n].oracle).fetchone() is None
+    ]
+    assert empty == [], f"oracles with no rows at {SF_ORACLE}: {empty}"
 
 
 @pytest.mark.parametrize("name", _ROWS_ONLY)

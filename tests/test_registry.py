@@ -199,3 +199,26 @@ def test_every_entry_has_a_driver_row_or_sits_in_the_window():
     assert not orphaned, (
         f"historical driver rows name unknown entries: {orphaned}"
     )
+
+
+def test_rotate_window_keeps_the_warmup_entry_first(registry):
+    """The suggested window sorts by driver_sim time, but the registry's
+    first entry absorbs JVM warm-up and must stay first even when its
+    logged time (which includes that warm-up) is the slowest."""
+    import importlib.util
+    import os
+
+    path = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "scripts", "rotate_window.py",
+    )
+    spec = importlib.util.spec_from_file_location("rotate_window", path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+
+    lead = next(iter(registry))
+    times = {lead: 9.0, "s04_filter": 0.5, "s01_parquet_scan": 0.2}
+    window = ["s04_filter", "s15_sort_limit", lead, "s01_parquet_scan"]
+    assert mod.window_order(window, times, lead) == [
+        lead, "s01_parquet_scan", "s04_filter", "s15_sort_limit",
+    ]

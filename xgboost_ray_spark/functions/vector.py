@@ -47,11 +47,12 @@ def norm(a: str | Column) -> Column:
 
 
 def cosine(a: str | Column, b: str | Column) -> Column:
-    """Cosine similarity with the repo-wide zero-norm convention: a
-    zero-norm operand clamps its norm to 1 (yielding 0.0, never NaN from
-    0/0), matching :func:`cosine_pandas` and the ANN kernels
-    (functions/ann.py, operators/similarity.py). NULL vectors propagate
-    NULL. Parity on degenerate rows is pinned in
+    """Cosine similarity with a zero-norm clamp: a zero-norm operand
+    clamps its norm to 1 (yielding 0.0, never NaN from 0/0), matching
+    :func:`cosine_pandas`, functions/ann.py and
+    ``operators/similarity.search_codes``. The similarity.py top-k and
+    near-dup scorers do NOT clamp: they divide by the raw norm. NULL
+    vectors propagate NULL. Parity on degenerate rows is pinned in
     tests/test_null_safety.py::test_cosine_pandas_null_and_zero_norm."""
     na, nb = norm(a), norm(b)
     na = F.when(na == 0.0, F.lit(1.0)).otherwise(na)
@@ -66,8 +67,9 @@ def cosine_pandas(a: pd.Series, b: pd.Series) -> pd.Series:
     Same semantics as the module's expression path (:func:`cosine`) and
     the ANN kernels: a NULL vector on either side yields a NULL
     similarity (never a task crash — np.stack over None raised before),
-    and zero-norm vectors clamp that operand's norm to 1 (the repo-wide
-    convention, ann.py / similarity.py) instead of emitting NaN. The
+    and zero-norm vectors clamp that operand's norm to 1 (as
+    :func:`cosine`, ann.py and ``similarity.search_codes`` do) instead of
+    emitting NaN. The
     degenerate-row parity with :func:`cosine` is pinned in
     tests/test_null_safety.py. Vectors within a column are assumed
     fixed-dimension, as everywhere else in the embedding surface.

@@ -406,14 +406,28 @@ def exact_outlier_flags(
             ).over(w),
         }
     )
-    n = F.col("_n").cast(DEC38)
-    v = F.col(cents_col).cast(DEC38)
-    dev = n * v - F.col("_s1")
+    return st.withColumn(
+        "is_outlier", outlier_flag("_n", "_s1", "_s2", cents_col, k)
+    ).drop("_n", "_s1", "_s2")
+
+
+def outlier_flag(
+    n_col: str, s1_col: str, s2_col: str, value_col: str, k: int = SIGMA_K
+) -> F.Column:
+    """The exact integer k-sigma flag of ``value_col`` against its group's
+    non-null count ``n_col``, DECIMAL(38,0) sum ``s1_col`` and sum of
+    squares ``s2_col``: (n*x-S1)^2*(n-1) > k^2*n*(n*S2-S1^2). One
+    spelling for the window kernel (:func:`exact_outlier_flags`) and the
+    streaming guard's broadcast stats (s25l)."""
+    DEC38 = "decimal(38,0)"
+    n = F.col(n_col).cast(DEC38)
+    v = F.col(value_col).cast(DEC38)
+    dev = n * v - F.col(s1_col)
     lhs = dev * dev * (n - 1)
     rhs = (
         F.lit(k * k).cast(DEC38)
         * n
-        * (n * F.col("_s2") - F.col("_s1") * F.col("_s1"))
+        * (n * F.col(s2_col) - F.col(s1_col) * F.col(s1_col))
     )
     # Overflow fails CLOSED, identically to the DuckDB oracle: past the
     # documented ~1e6-row/“drop a fixed-point digit” bound, Spark's
@@ -422,19 +436,16 @@ def exact_outlier_flags(
     # comparison false and silently UNFLAG real outliers. A non-null
     # input value with a null predicate side can only mean DECIMAL(38,0)
     # overflow, so raise instead of returning a wrong mask.
-    overflow = F.col(cents_col).isNotNull() & (lhs.isNull() | rhs.isNull())
-    flag = (F.col("_n") >= 2) & (lhs > rhs)
-    return st.withColumn(
-        "is_outlier",
-        F.when(
-            overflow,
-            F.raise_error(
-                F.lit(
-                    "exact_outlier_flags: DECIMAL(38,0) overflow in the "
-                    "integer 3-sigma predicate (group too large or values "
-                    "too hot for the fixed-point scale); rescale the "
-                    "cents column down a digit"
-                )
-            ).cast("boolean"),
-        ).otherwise(flag),
-    ).drop("_n", "_s1", "_s2")
+    overflow = F.col(value_col).isNotNull() & (lhs.isNull() | rhs.isNull())
+    flag = (F.col(n_col) >= 2) & (lhs > rhs)
+    return F.when(
+        overflow,
+        F.raise_error(
+            F.lit(
+                f"outlier_flag: DECIMAL(38,0) overflow in the integer "
+                f"{k}-sigma predicate (group too large or values too hot "
+                "for the fixed-point scale); rescale the cents column "
+                "down a digit"
+            )
+        ).cast("boolean"),
+    ).otherwise(flag)

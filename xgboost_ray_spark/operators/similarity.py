@@ -26,12 +26,12 @@ from xgboost_ray_spark.registry import register
 
 N_PLANES = 8
 TOP_K = 5
+NEARDUP_SIM = 0.2  # cosine threshold of the near-dup pair entries (s27c, s27g)
 _HEX = "0123456789abcdef"
 
 # Sequential-double dot product (exact left-to-right fold, matching
 # DuckDB's list_dot_product loop). ONE implementation repo-wide —
-# functions/vector.py owns it; a second copy here once existed and is
-# exactly the kind of bit-stability contract that must not fork.
+# functions/vector.py owns it.
 from xgboost_ray_spark.functions.vector import dot_sql as _dot_sql
 
 
@@ -47,6 +47,41 @@ def _dot(a: str, b: str) -> F.Column:
     return F.expr(_dot_sql(a, b))
 
 
+def _normed(vectors: DataFrame, id_as: str, vec_as: str, norm_as: str) -> DataFrame:
+    """(vec_id, embedding) renamed to (id_as, vec_as) plus the L2 norm as
+    ``norm_as``. Norms are computed ONCE per vector before any join (a
+    narrow projection), not per pair — at |Q|*|corpus| pairs that is a 3x
+    cut in per-pair expression work. Zero norms are NOT clamped (only
+    :func:`search_codes` clamps): under ANSI mode, Spark 4's default, a
+    zero vector's cosine raises DIVIDE_BY_ZERO, where the DuckDB oracles
+    return NULL."""
+    return vectors.select(
+        F.col("vec_id").alias(id_as),
+        F.col("embedding").alias(vec_as),
+        F.sqrt(_dot("embedding", "embedding")).alias(norm_as),
+    )
+
+
+def _cosine(a: str, b: str, na: str, nb: str) -> F.Column:
+    """Cosine of vector columns ``a``, ``b`` from their precomputed norms."""
+    return _dot(a, b) / (F.col(na) * F.col(nb))
+
+
+def _top_k(cand: DataFrame, sim: F.Column, k: int) -> DataFrame:
+    """Rank (query_id, neighbor_id) candidates by full-precision ``sim``
+    with neighbor_id tie-break, keep the top ``k`` per query, and emit the
+    sim rounded to 4 dp for cross-engine hash stability."""
+    w = W.partitionBy("query_id").orderBy(
+        F.col("sim_full").desc(), F.col("neighbor_id")
+    )
+    return (
+        cand.withColumn("sim_full", sim)
+        .withColumn("rk", F.row_number().over(w).cast("int"))
+        .filter(F.col("rk") <= k)
+        .select("query_id", "neighbor_id", F.round("sim_full", 4).alias("sim"), "rk")
+    )
+
+
 def cosine_topk(queries: DataFrame, corpus: DataFrame, k: int = TOP_K) -> DataFrame:
     """Exact top-k cosine neighbors for each query vector.
 
@@ -54,33 +89,10 @@ def cosine_topk(queries: DataFrame, corpus: DataFrame, k: int = TOP_K) -> DataFr
     is broadcast; ranking uses full-precision sim with vec_id tiebreak, the
     emitted sim is rounded for cross-engine hash stability.
     """
-    # Norms are computed ONCE per vector before the join (a narrow
-    # projection), not per pair — at |Q|*|corpus| pairs that is a 3x cut in
-    # per-pair expression work, and at 100 TB corpus norms would be a
-    # precomputed column of the index anyway.
-    q = queries.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qe"),
-        F.sqrt(_dot("embedding", "embedding")).alias("qn"),
-    )
-    c = corpus.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("ce"),
-        F.sqrt(_dot("embedding", "embedding")).alias("cn"),
-    )
-    sim = _dot("qe", "ce") / (F.col("qn") * F.col("cn"))
-    pairs = (
-        c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("sim_full", sim)
-    )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("sim_full").desc(), F.col("neighbor_id")
-    )
-    return (
-        pairs.withColumn("rk", F.row_number().over(w).cast("int"))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", F.round("sim_full", 4).alias("sim"), "rk")
-    )
+    q = _normed(queries, "query_id", "qe", "qn")
+    c = _normed(corpus, "neighbor_id", "ce", "cn")
+    pairs = c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
+    return _top_k(pairs, _cosine("qe", "ce", "qn", "cn"), k)
 
 
 @register(
@@ -236,12 +248,7 @@ def lsh_cosine_topk(
     qb = lsh_buckets(queries, dim=dim).select(
         F.col("vec_id").alias("query_id"), "bucket"
     )
-    q = queries.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qe"),
-        F.sqrt(_dot("embedding", "embedding")).alias("qn"),
-    )
-    qside = qb.join(q, "query_id")
+    qside = qb.join(_normed(queries, "query_id", "qe", "qn"), "query_id")
     cside = corpus.select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("embedding").alias("ce"),
@@ -251,14 +258,7 @@ def lsh_cosine_topk(
     cand = cside.join(F.broadcast(qside), "bucket").filter(
         F.col("query_id") != F.col("neighbor_id")
     )
-    sim = _dot("qe", "ce") / (F.col("qn") * F.col("cn"))
-    w = W.partitionBy("query_id").orderBy(F.col("sim_full").desc(), F.col("neighbor_id"))
-    return (
-        cand.withColumn("sim_full", sim)
-        .withColumn("rk", F.row_number().over(w).cast("int"))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", F.round("sim_full", 4).alias("sim"), "rk")
-    )
+    return _top_k(cand, _cosine("qe", "ce", "qn", "cn"), k)
 
 
 def _bucket_terms_sql(dim: int = 64) -> str:
@@ -343,16 +343,11 @@ def ivf_assign(corpus: DataFrame, centroids: DataFrame) -> DataFrame:
     deterministic centroid choice for k-means; the inverted-file structure
     and probing are identical.
     """
-    c = corpus.select(
-        "vec_id",
-        F.col("embedding").alias("e"),
-        F.sqrt(_dot("embedding", "embedding")).alias("n"),
-    )
-    sim = _dot("e", "ce") / (F.col("n") * F.col("cn"))
+    c = _normed(corpus, "vec_id", "e", "n")
     w = W.partitionBy("vec_id").orderBy(F.col("csim").desc(), F.col("cid"))
     return (
         c.join(F.broadcast(centroids))
-        .withColumn("csim", sim)
+        .withColumn("csim", _cosine("e", "ce", "n", "cn"))
         .withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") == 1)
         .select("vec_id", F.col("cid").alias("cell"))
@@ -369,44 +364,28 @@ def ivf_topk(
     centroids are nearest each query. The corpus is scanned once for
     assignment (amortizable: persist as the index) and candidates shuffle
     only within probed cells."""
-    centroids = corpus.filter(F.col("vec_id") < N_CENTROIDS).select(
-        F.col("vec_id").alias("cid"),
-        F.col("embedding").alias("ce"),
-        F.sqrt(_dot("embedding", "embedding")).alias("cn"),
+    centroids = _normed(
+        corpus.filter(F.col("vec_id") < N_CENTROIDS), "cid", "ce", "cn"
     )
     assign = ivf_assign(corpus, centroids)
 
-    q = queries.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qe"),
-        F.sqrt(_dot("embedding", "embedding")).alias("qn"),
-    )
-    qsim = _dot("qe", "ce") / (F.col("qn") * F.col("cn"))
+    q = _normed(queries, "query_id", "qe", "qn")
     wq = W.partitionBy("query_id").orderBy(F.col("qcsim").desc(), F.col("cid"))
     probes = (
         q.join(F.broadcast(centroids))
-        .withColumn("qcsim", qsim)
+        .withColumn("qcsim", _cosine("qe", "ce", "qn", "cn"))
         .withColumn("prk", F.row_number().over(wq))
         .filter(F.col("prk") <= nprobe)
         .select("query_id", "qe", "qn", F.col("cid").alias("cell"))
     )
 
-    cside = corpus.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("ne"),
-        F.sqrt(_dot("embedding", "embedding")).alias("nn"),
-    ).join(assign.withColumnRenamed("vec_id", "neighbor_id"), "neighbor_id")
+    cside = _normed(corpus, "neighbor_id", "ne", "nn").join(
+        assign.withColumnRenamed("vec_id", "neighbor_id"), "neighbor_id"
+    )
     cand = cside.join(F.broadcast(probes), "cell").filter(
         F.col("query_id") != F.col("neighbor_id")
     )
-    sim = _dot("qe", "ne") / (F.col("qn") * F.col("nn"))
-    w = W.partitionBy("query_id").orderBy(F.col("sim_full").desc(), F.col("neighbor_id"))
-    return (
-        cand.withColumn("sim_full", sim)
-        .withColumn("rk", F.row_number().over(w).cast("int"))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", F.round("sim_full", 4).alias("sim"), "rk")
-    )
+    return _top_k(cand, _cosine("qe", "ne", "qn", "nn"), k)
 
 
 def _ivf_oracle() -> str:
@@ -475,7 +454,7 @@ def s27d_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "s27c_embedding_neardup",
-    oracle="""
+    oracle=f"""
     WITH emb AS (
       SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings WHERE vec_id < 150
     )
@@ -486,10 +465,11 @@ def s27d_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM emb a JOIN emb b ON a.vec_id < b.vec_id
     WHERE list_dot_product(a.e, b.e)
              / (sqrt(list_dot_product(a.e, a.e)) * sqrt(list_dot_product(b.e, b.e)))
-          >= 0.6
+          >= {NEARDUP_SIM}
     """,
-    doc="Embedding-cosine near-duplicate pairs (sim >= 0.6) over a bounded "
-        "slice; the unbounded version runs behind the LSH bucketer (s27b).",
+    doc=f"Embedding-cosine near-duplicate pairs (sim >= {NEARDUP_SIM}) over "
+        "a bounded slice; the unbounded version runs behind the LSH "
+        "bucketer (s27g).",
     tags=("similarity", "dedup"),
 )
 def s27c_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -498,21 +478,12 @@ def s27c_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("vec_id") < 150)
         .select("vec_id", "embedding")
     )
-    a = emb.select(
-        F.col("vec_id").alias("vec_a"),
-        F.col("embedding").alias("qe"),
-        F.sqrt(_dot("embedding", "embedding")).alias("qn"),
-    )
-    b = emb.select(
-        F.col("vec_id").alias("vec_b"),
-        F.col("embedding").alias("ce"),
-        F.sqrt(_dot("embedding", "embedding")).alias("cn"),
-    )
-    sim = _dot("qe", "ce") / (F.col("qn") * F.col("cn"))
+    a = _normed(emb, "vec_a", "qe", "qn")
+    b = _normed(emb, "vec_b", "ce", "cn")
     return (
         a.join(b, F.col("vec_a") < F.col("vec_b"))
-        .withColumn("sim_full", sim)
-        .filter(F.col("sim_full") >= 0.6)
+        .withColumn("sim_full", _cosine("qe", "ce", "qn", "cn"))
+        .filter(F.col("sim_full") >= NEARDUP_SIM)
         .select("vec_a", "vec_b", F.round("sim_full", 4).alias("sim"))
     )
 
@@ -624,7 +595,6 @@ def s27f_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # S27 variant — unbounded LSH near-duplicate pairs (whole corpus)
 # ---------------------------------------------------------------------------
-NEARDUP_SIM = 0.2
 NEARDUP_MAX_BUCKET = 100
 
 
@@ -678,11 +648,7 @@ def s27g_lsh_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("bucket")
     )
     side = (
-        emb.select(
-            "vec_id",
-            F.col("embedding").alias("e"),
-            F.sqrt(_dot("embedding", "embedding")).alias("nrm"),
-        )
+        _normed(emb, "vec_id", "e", "nrm")
         .join(b, "vec_id")
         .join(F.broadcast(sizes), "bucket")
     )
@@ -698,11 +664,10 @@ def s27g_lsh_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("e").alias("eb"),
         F.col("nrm").alias("nb"),
     )
-    sim = _dot("ea", "eb") / (F.col("na") * F.col("nb"))
     return (
         a.join(bside, ["bucket"])
         .filter(F.col("vec_a") < F.col("vec_b"))
-        .withColumn("sim_full", sim)
+        .withColumn("sim_full", _cosine("ea", "eb", "na", "nb"))
         .filter(F.col("sim_full") >= NEARDUP_SIM)
         .select("vec_a", "vec_b", F.round("sim_full", 4).alias("sim"))
     )
@@ -983,28 +948,12 @@ def quantized_topk(
         .filter(F.col("crk") <= rerank)
         .select("query_id", F.col("vec_id").alias("neighbor_id"))
     )
-    cside = corpus.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("ce"),
-        F.sqrt(_dot("embedding", "embedding")).alias("cn"),
+    cside = _normed(corpus, "neighbor_id", "ce", "cn")
+    qside = _normed(queries, "query_id", "qe", "qn")
+    pairs = cside.join(F.broadcast(cand), "neighbor_id").join(
+        F.broadcast(qside), "query_id"
     )
-    qside = queries.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qe"),
-        F.sqrt(_dot("embedding", "embedding")).alias("qn"),
-    )
-    sim = _dot("qe", "ce") / (F.col("qn") * F.col("cn"))
-    w2 = W.partitionBy("query_id").orderBy(
-        F.col("sim_full").desc(), F.col("neighbor_id")
-    )
-    return (
-        cside.join(F.broadcast(cand), "neighbor_id")
-        .join(F.broadcast(qside), "query_id")
-        .withColumn("sim_full", sim)
-        .withColumn("rk", F.row_number().over(w2).cast("int"))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", F.round("sim_full", 4).alias("sim"), "rk")
-    )
+    return _top_k(pairs, _cosine("qe", "ce", "qn", "cn"), k)
 
 
 # ---------------------------------------------------------------------------
@@ -1023,7 +972,7 @@ KM_SEED_HASH_MULT = 2654435761
 KM_SEED_HASH_MOD = 4294967296
 
 
-def _km_quantize_expr() -> Column:
+def _km_quantize_expr() -> F.Column:
     """Embedding -> fixed-point bigint array (non-negative for in-range
     inputs; tail coordinates outside [-0.5, 0.5] may still quantize
     negative, which is safe — see below).
@@ -1131,7 +1080,7 @@ def kmeans_assign(
         mind = [min(m, _sq(q, best_q)) for m, (_, q) in zip(mind, samp)]
     cents: list[tuple[int, list[int]]] = list(enumerate(seed_qs))
 
-    def cent_literal() -> Column:
+    def cent_literal() -> F.Column:
         # SQL text parsed ONCE per assignment, not K*dim Column literals:
         # composing F.lit/F.struct per element cost ~20k py4j round-trips
         # per build (3 assignments x 8 centroids x 64 dims, several

@@ -563,7 +563,7 @@ def s25l_stream_outlier_guard(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     from xgboost_ray_spark.catalog import load_table
-    from xgboost_ray_spark.operators.profile import SIGMA_K
+    from xgboost_ray_spark.operators.profile import outlier_flag
 
     DEC38 = "decimal(38,0)"
     cents = (F.col("value").cast("decimal(12,2)") * 100).cast("bigint")
@@ -581,38 +581,9 @@ def s25l_stream_outlier_guard(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = read_events_stream(spark, sf_dir).select(
         "event_id", "event_type", "value", cents.alias("v")
     )
-    n = F.col("n").cast(DEC38)
-    v = F.col("v").cast(DEC38)
-    dev = n * v - F.col("s1")
-    lhs = dev * dev * (n - 1)
-    rhs = (
-        F.lit(SIGMA_K * SIGMA_K).cast(DEC38)
-        * n
-        * (n * F.col("s2") - F.col("s1") * F.col("s1"))
-    )
-    # Overflow fails CLOSED, exactly like the batch kernel
-    # (profile.exact_outlier_flags): past the documented bound Spark's
-    # non-ANSI decimal arithmetic yields NULL where DuckDB's HUGEINT
-    # errors loudly — an unguarded NULL side makes the comparison false
-    # and silently UNFLAGS real outliers, breaking the two-topologies-
-    # one-truth contract in the worse direction (stream passes what the
-    # batch run would refuse to score).
-    overflow = F.col("v").isNotNull() & (lhs.isNull() | rhs.isNull())
-    flag = (F.col("n") >= 2) & (lhs > rhs)
-    keep = F.when(
-        overflow,
-        F.raise_error(
-            F.lit(
-                "s25l_stream_outlier_guard: DECIMAL(38,0) overflow in "
-                "the integer 3-sigma predicate (group too large or "
-                "values too hot for the fixed-point scale); rescale the "
-                "cents column down a digit"
-            )
-        ).cast("boolean"),
-    ).otherwise(flag)
     flagged = (
         stream.join(F.broadcast(stats), "event_type")
-        .filter(keep)
+        .filter(outlier_flag("n", "s1", "s2", "v"))
         .select("event_id", "event_type", "value")
     )
     # per-row map with no aggregation: append mode (complete requires agg)
