@@ -168,15 +168,15 @@ def measure(spark, specs, names, sf_dir: str) -> dict:
 
 
 def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    from xgboost_ray_spark.catalog import DEFAULT_SF_DIR as sf_dir
+    from xgboost_ray_spark.registry import all_queries
+    from xgboost_ray_spark.session import effective_cpus, get_spark
+
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     try:
         sf = float(sf)
     except ValueError:
         sf = sf_dir
-
-    from xgboost_ray_spark.registry import all_queries
-    from xgboost_ray_spark.session import effective_cpus, get_spark
 
     # Resolved once, before any work: a bad $SPARK_GRAFT_CPUS fails here,
     # and the record's "cpus" is the count the session's master uses.

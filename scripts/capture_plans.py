@@ -23,8 +23,8 @@ from bench import HEADLINE  # noqa: E402
 def main() -> None:
     label = sys.argv[1]
     names = sys.argv[2:] or HEADLINE
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+    from xgboost_ray_spark.catalog import DEFAULT_SF_DIR
     from xgboost_ray_spark.plans.explain import formatted_plan
     from xgboost_ray_spark.registry import all_queries
     from xgboost_ray_spark.session import get_spark
@@ -39,7 +39,7 @@ def main() -> None:
     os.makedirs(out_dir, exist_ok=True)
     for name in names:
         spark.sparkContext.setJobDescription(f"capture:{name}")
-        df = specs[name].build(spark, sf_dir)
+        df = specs[name].build(spark, DEFAULT_SF_DIR)
         plan = formatted_plan(df)
         path = os.path.join(out_dir, f"{name}_{label}.txt")
         with open(path, "w") as f:

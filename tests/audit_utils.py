@@ -1,9 +1,10 @@
 """Shared AST mechanics for the static call-site audits.
 
-Five audits pin call-site inventories over the package (driver
+Six audits pin call-site inventories over the package (driver
 materialization, broadcast hints, cache lifecycles, scratch-file
-writers, plan-text renderers; the scratch audit also walks
-``examples/``). They share the walk-and-attribute machinery so a fix to
+writers, plan-text renderers, public-function callers; the scratch
+audit also walks ``examples/``, the public-surface audit every
+caller tree). They share the walk-and-attribute machinery so a fix to
 the mechanics (e.g. how calls are attributed to their enclosing
 function) lands once; each audit supplies only its matcher.
 """
@@ -18,37 +19,43 @@ from collections.abc import Callable, Iterator
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = os.path.join(REPO, "xgboost_ray_spark")
 EXAMPLES = os.path.join(REPO, "examples")
+SCRIPTS = os.path.join(REPO, "scripts")
 
 
 def _modules(
     top: str = PKG,
 ) -> Iterator[tuple[str, ast.AST, dict[ast.AST, str]]]:
     """Yield (path relative to ``top``, parsed tree, node ->
-    enclosing-function map) for every module under ``top``."""
-    for root, _, files in os.walk(top):
-        if "__pycache__" in root:
-            continue
-        for fname in sorted(files):
-            if not fname.endswith(".py"):
-                continue
-            path = os.path.join(root, fname)
-            rel = os.path.relpath(path, top).replace(os.sep, "/")
-            with open(path) as fh:
-                tree = ast.parse(fh.read())
-            func_of: dict[ast.AST, str] = {}
+    enclosing-function map) for every module under ``top``, or for
+    ``top`` itself when it is one file (rel is then its base name)."""
+    if os.path.isfile(top):
+        paths = [top]
+        base = os.path.dirname(top)
+    else:
+        paths = [
+            os.path.join(root, fname)
+            for root, _, files in os.walk(top)
+            if "__pycache__" not in root
+            for fname in sorted(files)
+            if fname.endswith(".py")
+        ]
+        base = top
+    for path in paths:
+        rel = os.path.relpath(path, base).replace(os.sep, "/")
+        with open(path) as fh:
+            tree = ast.parse(fh.read())
+        func_of: dict[ast.AST, str] = {}
 
-            def assign(node: ast.AST, fn: str) -> None:
-                for child in ast.iter_child_nodes(node):
-                    nfn = fn
-                    if isinstance(
-                        child, (ast.FunctionDef, ast.AsyncFunctionDef)
-                    ):
-                        nfn = child.name
-                    func_of[child] = nfn
-                    assign(child, nfn)
+        def assign(node: ast.AST, fn: str) -> None:
+            for child in ast.iter_child_nodes(node):
+                nfn = fn
+                if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    nfn = child.name
+                func_of[child] = nfn
+                assign(child, nfn)
 
-            assign(tree, "<module>")
-            yield rel, tree, func_of
+        assign(tree, "<module>")
+        yield rel, tree, func_of
 
 
 def call_sites(match: Callable[[ast.Call], str | None]) -> Counter:
@@ -112,3 +119,13 @@ def name_references(
             hits += [(rel, func_of.get(node, "?"), n) for n in found
                      if n in names]
     return hits
+
+
+def top_level_functions(top: str = PKG) -> list[tuple[str, ast.FunctionDef]]:
+    """(file, definition) for every module-level function under ``top``."""
+    return [
+        (rel, node)
+        for rel, tree, _ in _modules(top)
+        for node in tree.body
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+    ]

@@ -38,7 +38,7 @@ def test_gemm_topk_matches_jvm_bruteforce(spark):
     from tests.conftest import SF_SMOKE
     from xgboost_ray_spark.catalog import load_table
     from xgboost_ray_spark.functions.ann import gemm_topk
-    from xgboost_ray_spark.functions.vector import cosine
+    from xgboost_ray_spark.functions.vector import dot
     from xgboost_ray_spark.registry import ensure_workers_can_import
 
     ensure_workers_can_import(spark)
@@ -49,6 +49,9 @@ def test_gemm_topk_matches_jvm_bruteforce(spark):
     ]
     k = 5
     got = gemm_topk(emb, np.stack(queries), k=k).toPandas()
+
+    def cosine(a, b):
+        return dot(a, b) / (F.sqrt(dot(a, a)) * F.sqrt(dot(b, b)))
 
     for qi, qvec in enumerate(queries):
         jvm = (

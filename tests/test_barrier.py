@@ -322,26 +322,6 @@ def test_prepare_shards_rejects_null_qids(spark):
     assert prepared.count() == 2
 
 
-def test_prepare_shards_validate_false_stays_lazy(spark):
-    """validate=False must skip the eager NULL-qid job entirely —
-    prepare_shards returns a pure plan even over NULL-qid input (the
-    documented lazy-composition escape hatch; the NULL then surfaces at
-    DMatrix build, which the caller opted into)."""
-    from xgboost_ray_spark.matrix import MatrixSpec
-    from xgboost_ray_spark.ml.barrier import prepare_shards
-
-    spec = MatrixSpec(label_cols=("rel",), qid_col="qid")
-    bad = spark.createDataFrame(
-        [(1, 1.0, 1), (None, 2.0, 0)], "qid int, f double, rel int"
-    )
-    tracker = spark.sparkContext.statusTracker()
-    jobs_before = len(tracker.getJobIdsForGroup(None) or [])
-    prepared, *_ = prepare_shards(bad, spec, num_workers=2, validate=False)
-    jobs_after = len(tracker.getJobIdsForGroup(None) or [])
-    assert jobs_after == jobs_before, "validate=False must not run a job"
-    assert prepared.count() == 2  # the plan itself is intact
-
-
 def test_version_band_padding():
     """parse_version_band pads to two components: a one-part '3' must
     compare as (3, 0) — bare (3,) sorts below (3, 0) under tuple-prefix

@@ -20,7 +20,6 @@ from tests.conftest import SF_SMOKE
 from xgboost_ray_spark.catalog import load_table
 from xgboost_ray_spark.operators.dedup import (
     minhash_candidate_pairs,
-    simhash64,
     simhash_hamming_pairs,
 )
 
@@ -248,35 +247,6 @@ def test_subprocess_leaves_no_scratch_root():
     left = [n for n in os.listdir(SCRATCH_DIR)
             if n.startswith(f"spill_{proc.pid}_")]
     assert not left, f"scratch root survived its process: {left}"
-
-
-def test_simhash64_pairs_recall_vs_bruteforce(spark):
-    """Blocked 64-bit candidate generation must equal brute-force all-pairs
-    at distance <= 2 (pigeonhole guarantee, no capped buckets at n=150)."""
-    docs = _docs(spark, n=150)
-    fp = simhash64(docs).cache()
-    blocked = {
-        (r.doc_a, r.doc_b)
-        for r in simhash_hamming_pairs(
-            docs, bits=64, fingerprints=fp
-        ).collect()
-    }
-    a, b = fp.alias("a"), fp.alias("b")
-    brute = {
-        (r.doc_a, r.doc_b)
-        for r in a.join(b, F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.bit_count(
-                F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
-            ).alias("dist"),
-        )
-        .filter(F.col("dist") <= 2)
-        .collect()
-    }
-    fp.unpersist()
-    assert blocked == brute
 
 
 def test_layout_scratch_keyed_per_sf_interleaved_builds(spark):

@@ -218,34 +218,3 @@ def test_nfc_changed_detects_length_preserving_reorder(spark):
     assert out[1]["bytes_before"] == out[1]["bytes_after"] == 5
     assert out[1]["changed"] == 1
     assert out[2]["changed"] == 0
-
-
-def test_cosine_pandas_null_and_zero_norm_semantics(spark):
-    """The pandas cosine must match the module's expression-path
-    conventions: NULL vector on either side -> NULL similarity (never a
-    np.stack task crash), zero-norm vectors clamp the denominator to 1."""
-    from xgboost_ray_spark.functions.vector import cosine, cosine_pandas
-
-    df = spark.createDataFrame(
-        [(1, [1.0, 0.0], [1.0, 0.0]),
-         (2, None, [1.0, 0.0]),
-         (3, [0.0, 0.0], [1.0, 0.0]),
-         (4, [3.0, 4.0], [3.0, 4.0])],
-        schema=T.StructType([
-            T.StructField("i", T.LongType()),
-            T.StructField("a", T.ArrayType(T.FloatType()), True),
-            T.StructField("b", T.ArrayType(T.FloatType()), True),
-        ]),
-    )
-    out = {r["i"]: r["c"] for r in
-           df.select("i", cosine_pandas("a", "b").alias("c")).collect()}
-    assert out[1] == 1.0 and out[4] == 1.0
-    assert out[2] is None, "NULL vector must yield NULL, not crash"
-    assert out[3] == 0.0, "zero-norm clamps the denominator to 1"
-    # parity with the JVM expression path, INCLUDING the degenerate rows:
-    # zero-norm must clamp (0.0, not NaN) and NULL must propagate in both
-    jvm = {r["i"]: r["c"] for r in
-           df.select("i", cosine("a", "b").alias("c")).collect()}
-    assert jvm[1] == out[1] and jvm[4] == out[4]
-    assert jvm[3] == 0.0, "expression path must clamp zero norms too"
-    assert jvm[2] is None, "expression path must propagate NULL vectors"

@@ -1,85 +1,15 @@
-"""Source-reader tests — the reference's per-source creation harness
+"""Source tests — the reference's per-source creation harness
 (xgboost_ray tests/test_matrix.py:74-113: build from every source type,
-load back, compare to the original)."""
+load back, compare to the original). File formats are ``spark.read.*``;
+the one package reader is ``from_numpy``."""
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pytest
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from tests.conftest import SF_SMOKE
-from xgboost_ray_spark.sources.readers import (
-    from_numpy,
-    from_pandas,
-    read_csv,
-    read_json,
-    read_parquet,
-)
-
-
-def test_read_parquet_columns_pushdown(spark):
-    df = read_parquet(
-        spark, f"{SF_SMOKE}/nation.parquet", columns=["n_nationkey", "n_name"]
-    )
-    assert df.columns == ["n_nationkey", "n_name"]
-    assert df.count() == 25
-
-
-def test_read_parquet_ignore_projection(spark):
-    df = read_parquet(spark, f"{SF_SMOKE}/nation.parquet", ignore=["n_name"])
-    assert "n_name" not in df.columns
-    assert df.count() == 25
-
-
-def test_read_parquet_multiple_paths(spark):
-    p = f"{SF_SMOKE}/region.parquet"
-    df = read_parquet(spark, [p, p])
-    assert df.count() == 2 * read_parquet(spark, p).count()
-
-
-def test_read_csv_roundtrip(spark, tmp_path):
-    out = str(tmp_path / "csv")
-    nation = read_parquet(spark, f"{SF_SMOKE}/nation.parquet")
-    nation.coalesce(1).write.option("header", True).csv(out)
-    schema = T.StructType(
-        [
-            T.StructField("n_nationkey", T.IntegerType()),
-            T.StructField("n_name", T.StringType()),
-            T.StructField("n_regionkey", T.IntegerType()),
-        ]
-    )
-    back = read_csv(spark, out, schema=schema)
-    assert sorted(r.n_nationkey for r in back.collect()) == sorted(
-        r.n_nationkey for r in nation.collect()
-    )
-
-
-def test_read_csv_infers_without_schema(spark, tmp_path):
-    out = str(tmp_path / "csv2")
-    spark.range(10).withColumn("v", F.col("id") * 1.5).coalesce(1).write.option(
-        "header", True
-    ).csv(out)
-    back = read_csv(spark, out)
-    assert dict(back.dtypes)["v"] == "double"
-    assert back.count() == 10
-
-
-def test_read_json_roundtrip(spark, tmp_path):
-    out = str(tmp_path / "json")
-    spark.range(5).withColumn("s", F.concat(F.lit("x"), F.col("id"))).coalesce(
-        1
-    ).write.json(out)
-    assert read_json(spark, out).count() == 5
-
-
-def test_from_pandas_arrow(spark):
-    pdf = pd.DataFrame({"a": [1, 2, 3], "b": ["x", "y", "z"]})
-    df = from_pandas(spark, pdf)
-    assert df.columns == ["a", "b"]
-    assert df.count() == 3
+from xgboost_ray_spark.sources.readers import from_numpy
 
 
 def test_from_numpy_column_names(spark):
@@ -96,133 +26,15 @@ def test_from_numpy_1d_promotes(spark):
     assert df.count() == 2
 
 
-def test_from_numpy_ignore(spark):
-    arr = np.zeros((2, 3))
-    df = from_numpy(spark, arr, ignore=["f1"])
-    assert df.columns == ["f0", "f2"]
-
-
-# ---------------------------------------------------------------------------
-# Sinks
-# ---------------------------------------------------------------------------
-def test_write_parquet_partitioned_prunes(spark, tmp_path):
-    """Partition directories must exist and a partition-filtered read must
-    only touch the matching directory (partition pruning)."""
-    import os
-
-    from xgboost_ray_spark.sources.writers import write_parquet
-
-    nation = read_parquet(spark, f"{SF_SMOKE}/nation.parquet")
-    out = str(tmp_path / "part_parquet")
-    write_parquet(nation, out, partition_by=["n_regionkey"], mode="overwrite")
-    dirs = {d for d in os.listdir(out) if d.startswith("n_regionkey=")}
-    assert len(dirs) == 5
-    back = spark.read.parquet(out).filter(F.col("n_regionkey") == 3)
-    assert back.count() == nation.filter(F.col("n_regionkey") == 3).count()
-    plan = back._jdf.queryExecution().executedPlan().toString()
-    assert "n_regionkey=3" not in plan or True  # pruning is in scan metadata
-    assert back.select("n_name").count() == 5
-
-
-def test_write_csv_roundtrip(spark, tmp_path):
-    from xgboost_ray_spark.sources.writers import write_csv
-
-    out = str(tmp_path / "w_csv")
-    df = spark.range(20).withColumn("v", F.col("id") * 2)
-    write_csv(df, out, mode="overwrite")
-    back = read_csv(spark, out)
-    assert back.count() == 20
-
-
-def test_write_json_roundtrip(spark, tmp_path):
-    from xgboost_ray_spark.sources.writers import write_json
-
-    out = str(tmp_path / "w_json")
-    write_json(spark.range(7), out, mode="overwrite")
-    assert read_json(spark, out).count() == 7
-
-
-def test_write_bucketed_table_skips_join_shuffle(spark, tmp_path):
-    """A self-join of a table bucketed on the join key must plan without an
-    Exchange on either side — the write-once, join-many co-location payoff."""
-    from xgboost_ray_spark.sources.writers import write_bucketed_table
-
-    spark.sql("DROP TABLE IF EXISTS bkt_orders")
-    orders = read_parquet(spark, f"{SF_SMOKE}/orders.parquet").select(
-        "o_orderkey", "o_custkey", "o_totalprice"
-    )
-    write_bucketed_table(
-        orders, "bkt_orders", bucket_cols=["o_custkey"], num_buckets=4,
-        mode="overwrite",
-    )
-    t = spark.table("bkt_orders")
-    agg = t.groupBy("o_custkey").count()
-    plan = agg._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan, "bucketed aggregation must not shuffle"
-    spark.sql("DROP TABLE IF EXISTS bkt_orders")
-
-
-def test_read_orc_roundtrip_and_pushdown(spark, tmp_path):
-    """ORC reader (R-source breadth): round-trip equality with the parquet
-    original, and predicate pushdown reaching the ORC scan."""
+def test_orc_scan_pushes_filter_to_the_scan(spark):
+    """s01b reads its ORC round trip back with the filter pushed into
+    the ORC scan (spark.sql.orc.filterPushdown), not applied after a
+    full read."""
     from xgboost_ray_spark.plans.explain import has_pushed_filters
-    from xgboost_ray_spark.sources.readers import read_orc
+    from xgboost_ray_spark.registry import all_queries
 
-    supp = read_parquet(spark, f"{SF_SMOKE}/supplier.parquet")
-    out = str(tmp_path / "supplier_orc")
-    supp.write.orc(out)
-    back = read_orc(spark, out, columns=["s_suppkey", "s_name", "s_acctbal"])
-    assert back.count() == supp.count()
-    orig = {(r.s_suppkey, r.s_name) for r in supp.select("s_suppkey", "s_name").collect()}
-    got = {(r.s_suppkey, r.s_name) for r in back.select("s_suppkey", "s_name").collect()}
-    assert got == orig
-    filtered = read_orc(spark, out).filter(F.col("s_acctbal") > 0)
-    assert has_pushed_filters(filtered), "ORC scan must receive the filter"
-
-
-def test_bucketed_tables_colocated_join_no_shuffle(spark):
-    """Fact-to-fact join of two tables bucketed on the join key must plan
-    with ZERO Exchange — the write-once co-location that makes repeated
-    lineitem-orders joins at 100 TB pay one shuffle total, at write time.
-    Broadcast is disabled so the assert can't be satisfied trivially
-    (BroadcastExchange is an Exchange too)."""
-    from xgboost_ray_spark.sources.writers import write_bucketed_table
-
-    for t in ("bkt_li", "bkt_ord"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-    li = read_parquet(spark, f"{SF_SMOKE}/lineitem.parquet").select(
-        "l_orderkey", "l_quantity", "l_extendedprice"
-    )
-    orders = read_parquet(spark, f"{SF_SMOKE}/orders.parquet").select(
-        "o_orderkey", "o_custkey", "o_totalprice"
-    )
-    write_bucketed_table(
-        li, "bkt_li", bucket_cols=["l_orderkey"], num_buckets=4,
-        mode="overwrite",
-    )
-    write_bucketed_table(
-        orders, "bkt_ord", bucket_cols=["o_orderkey"], num_buckets=4,
-        mode="overwrite",
-    )
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = spark.table("bkt_li").join(
-            spark.table("bkt_ord"),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, f"co-located join must not shuffle:\n{plan}"
-        # and the join is real: every lineitem row matches its order
-        assert joined.count() == li.count()
-        # downstream aggregation on the same key reuses the bucketing too
-        agg = joined.groupBy("l_orderkey").agg(F.sum("l_quantity").alias("q"))
-        agg_plan = agg._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in agg_plan, "bucketed agg must reuse co-location"
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        for t in ("bkt_li", "bkt_ord"):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
+    df = all_queries()["s01b_orc_scan"].build(spark, SF_SMOKE)
+    assert has_pushed_filters(df), "ORC scan must receive the filter"
 
 
 def test_compaction_reduces_file_count_without_shuffle(spark):
@@ -307,25 +119,6 @@ def test_range_clustered_write_produces_skippable_files(spark, tmp_path):
     ranges.sort()
     for (lo1, hi1), (lo2, hi2) in zip(ranges, ranges[1:]):
         assert hi1 <= lo2, f"file ranges overlap: ({lo1},{hi1}) vs ({lo2},{hi2})"
-
-
-def test_write_orc_partitioned_roundtrip(spark, tmp_path):
-    """write_orc with directory partitioning: read-back equals input and
-    a partition filter prunes to one directory."""
-    from pyspark.sql import functions as F
-
-    from xgboost_ray_spark.sources.writers import write_orc
-
-    df = spark.createDataFrame(
-        [(i, i % 3, float(i)) for i in range(60)], "id long, p int, v double"
-    )
-    out = str(tmp_path / "orc_part")
-    write_orc(df, out, partition_by=["p"], mode="overwrite")
-    back = spark.read.orc(out)
-    assert back.count() == 60
-    assert sorted(r.id for r in back.collect()) == list(range(60))
-    one = back.filter(F.col("p") == 1)
-    assert one.count() == 20
 
 
 def _load_events(spark, sf_dir):

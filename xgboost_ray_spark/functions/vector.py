@@ -1,16 +1,15 @@
-"""Vector column functions over ``array<float>`` embeddings.
+"""The dot product over ``array<float>`` embeddings, as a JVM-side
+expression (zip_with/aggregate) — no Python in the hot path.
 
-JVM-side expressions (zip_with/aggregate) — no Python in the hot path; a
-vectorized Pandas-UDF fallback exists for ops that outgrow expression form.
+The operators compose :func:`dot_sql` (one parse per expression);
+:func:`dot` builds the same fold Column by Column and is the reference
+that pins it.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType
 
 
 def dot(a: str | Column, b: str | Column) -> Column:
@@ -41,50 +40,3 @@ def dot_sql(a: str, b: str) -> str:
         "0.0D, (acc, v) -> acc + v)"
     )
 
-
-def norm(a: str | Column) -> Column:
-    return F.sqrt(dot(a, a))
-
-
-def cosine(a: str | Column, b: str | Column) -> Column:
-    """Cosine similarity with a zero-norm clamp: a zero-norm operand
-    clamps its norm to 1 (yielding 0.0, never NaN from 0/0), matching
-    :func:`cosine_pandas`, functions/ann.py and
-    ``operators/similarity.search_codes``. The similarity.py top-k and
-    near-dup scorers do NOT clamp: they divide by the raw norm. NULL
-    vectors propagate NULL. Parity on degenerate rows is pinned in
-    tests/test_null_safety.py::test_cosine_pandas_null_and_zero_norm."""
-    na, nb = norm(a), norm(b)
-    na = F.when(na == 0.0, F.lit(1.0)).otherwise(na)
-    nb = F.when(nb == 0.0, F.lit(1.0)).otherwise(nb)
-    return dot(a, b) / (na * nb)
-
-
-@F.pandas_udf(DoubleType())
-def cosine_pandas(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Arrow-batched cosine for very wide vectors (numpy BLAS per batch).
-
-    Same semantics as the module's expression path (:func:`cosine`) and
-    the ANN kernels: a NULL vector on either side yields a NULL
-    similarity (never a task crash — np.stack over None raised before),
-    and zero-norm vectors clamp that operand's norm to 1 (as
-    :func:`cosine`, ann.py and ``similarity.search_codes`` do) instead of
-    emitting NaN. The
-    degenerate-row parity with :func:`cosine` is pinned in
-    tests/test_null_safety.py. Vectors within a column are assumed
-    fixed-dimension, as everywhere else in the embedding surface.
-    """
-    n = len(a)
-    mask = a.isna().to_numpy() | b.isna().to_numpy()
-    out = pd.array([None] * n, dtype="Float64")
-    idx = np.flatnonzero(~mask)
-    if idx.size:
-        am = np.stack(a.iloc[idx].to_numpy())
-        bm = np.stack(b.iloc[idx].to_numpy())
-        num = (am * bm).sum(axis=1)
-        na = np.linalg.norm(am, axis=1)
-        nb = np.linalg.norm(bm, axis=1)
-        na[na == 0.0] = 1.0
-        nb[nb == 0.0] = 1.0
-        out[idx] = num / (na * nb)
-    return pd.Series(out)

@@ -111,17 +111,8 @@ def prepare_shards(
     spec: MatrixSpec,
     num_workers: int,
     evals: list[tuple[DataFrame, str]] | None = None,
-    validate: bool = True,
 ) -> tuple[DataFrame, list[str], list[str], str, list[str]]:
     """Shard train + eval sets across ``num_workers`` barrier tasks.
-
-    ``validate=True`` (the default, and what ``train_barrier`` uses) runs
-    the NULL-qid emptiness check below, which executes a Spark job at
-    call time — the one eager action in an otherwise pure plan-assembly
-    function. Callers composing plans lazily (no imminent train) can pass
-    ``validate=False`` and accept that a NULL qid then surfaces as an
-    opaque DMatrix error inside the barrier stage instead of a named
-    ValueError here.
 
     Returns ``(prepared, cols, eval_names, label_col, feats)``. Train and
     every eval set ride the same barrier stage: tag each frame, union, and
@@ -183,7 +174,7 @@ def prepare_shards(
         # and healthy runs pay a metadata pass, not a second data read;
         # worst case (non-statistics sources) is one single-column scan
         # before a multi-minute barrier train.
-        if validate and not tagged.where(F.col(spec.qid_col).isNull()).isEmpty():
+        if not tagged.where(F.col(spec.qid_col).isNull()).isEmpty():
             raise ValueError(
                 f"qid column {spec.qid_col!r} contains NULLs; every row "
                 "in dtrain and each eval set needs a query-group id for "

@@ -481,44 +481,6 @@ HAMMING_MAX = 2  # pairs within this many differing bits
 HAMMING_MAX_BUCKET = 100  # per-block bucket cap, same guard as MinHash LSH
 
 
-def simhash64(docs: DataFrame) -> DataFrame:
-    """64-bit SimHash via ``xxhash64`` token bit votes — the production
-    fingerprint for corpus-scale Hamming search.
-
-    bit_j(token) = bit j of xxhash64(token); the fingerprint sets bit j when
-    the sum of (2*bit_j - 1) votes over the doc's tokens is positive. All
-    JVM built-ins (xxhash64 is Spark-native and far cheaper than md5); one
-    shuffle on doc_id. 64 bits gives 2^21-value block keys (vs 2^6 for the
-    16-bit md5 variant), so block buckets stay small at any corpus size.
-    Not oracle-checked (DuckDB has no xxhash64); the registered s26e entry
-    uses the md5-derived 16-bit fingerprint for bit-identical parity and the
-    same blocked+capped pair generator.
-    """
-    tok = fan_out(docs).select(
-        "doc_id", F.explode(F.split("text", " ")).alias("w")
-    )
-    tok = tok.withColumn("h", F.xxhash64("w"))
-    # & 1, NOT % 2: Spark's % keeps the dividend's sign, so a negative
-    # odd hash would vote -3 instead of +1 and poison bit 0. SQL text,
-    # one parse per bit (64 Column-composed aggs cost ~0.5 s of py4j
-    # round-trips per build); integer-only, identical parsed plan.
-    aggs = [
-        F.expr(f"SUM((shiftrightunsigned(h, {j}) & 1) * 2 - 1)").alias(f"v{j}")
-        for j in range(64)
-    ]
-    votes = tok.groupBy("doc_id").agg(*aggs)
-    # 2**63 overflows signed int64 as a sum term; build the sign bit with
-    # shiftleft (two's complement makes the addition exact).
-    fp = " + ".join(
-        f"(CASE WHEN v{j} > 0 THEN shiftleft(CAST(1 AS BIGINT), {j}) "
-        "ELSE CAST(0 AS BIGINT) END)"
-        for j in range(64)
-    )
-    return votes.select(
-        "doc_id", F.expr(f"CAST(({fp}) AS BIGINT)").alias("simhash")
-    )
-
-
 def _block_splits(bits: int, n_blocks: int) -> list[tuple[int, int]]:
     """(shift, width) per block, widths as balanced as possible."""
     base, extra = divmod(bits, n_blocks)
@@ -557,9 +519,9 @@ def simhash_hamming_pairs(
     only on a dropped block are lost on both sides identically — the cap
     trades bounded recall loss in degenerate buckets for a bounded task.
 
-    At 100 TB: use ``fingerprints=simhash64(docs)`` with ``bits=64`` —
-    3 blocks of ~21 bits key the shuffle on 2M+ values, and the same cap
-    bounds the residual skew.
+    At 100 TB: pass 64-bit ``fingerprints`` with ``bits=64`` — 3 blocks
+    of ~21 bits key the shuffle on 2M+ values, and the same cap bounds the
+    residual skew.
     """
     fp = fingerprints if fingerprints is not None else simhash(docs, bits)
     mask = lambda shift, width: F.shiftrightunsigned("simhash", shift).bitwiseAND(
@@ -642,7 +604,7 @@ def _hamming_oracle() -> str:
         "multi-index blocks — pigeonhole guarantees recall, bucket-grouped "
         f"pair generation capped at {HAMMING_MAX_BUCKET} docs/bucket with "
         "observe() drop metrics; identical cap in the oracle. 64-bit "
-        "xxhash64 variant (simhash64) is the corpus-scale path.",
+        "fingerprints (bits=64) are the corpus-scale path.",
     tags=("dedup", "similarity"),
 )
 def s26e_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:

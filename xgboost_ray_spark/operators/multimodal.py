@@ -2,10 +2,10 @@
 
 Treats image/audio/video payloads as opaque ``binary`` columns with typed
 metadata, processed by Arrow-batched ``mapInPandas`` — the schema,
-partitioning, UDF signature and batch shape are real and tested; the actual
-codec step is STUBBED (this container ships no image/audio libs) behind
-``decode_image_real``, which raises ``NotImplementedError`` until PIL/ffmpeg
-are present.
+partitioning, UDF signature and batch shape are real and tested; the codec
+step is not: no image/audio library ships with the package, so a real
+decoder (PIL, ffmpeg, soundfile) is the deployment's to wire in where the
+fake decoders below sit.
 
 The deterministic fake "decoder" derives metadata purely from the payload
 bytes (md5 digest), so even the Python-UDF path is exactly DuckDB-oracle-
@@ -41,14 +41,6 @@ def with_binary_payload(docs: DataFrame) -> DataFrame:
     point is the ``binary`` dtype flowing through Arrow batches.
     """
     return docs.select("doc_id", F.unhex(F.md5("text")).alias("payload"))
-
-
-def decode_image_real(payload: bytes) -> dict:
-    """Real codec hook — STUB. Requires an image library absent from this
-    container; wire PIL/torchvision here in deployment."""
-    raise NotImplementedError(
-        "image decode requires PIL/libvips — not available in this environment"
-    )
 
 
 def _fake_decode_batch(batch: pd.DataFrame) -> pd.DataFrame:
@@ -322,14 +314,6 @@ AUDIO_SCHEMA = "doc_id bigint, window_id int, rms double, peak int"
 AUDIO_WINDOW = 4  # samples per analysis window (16-byte payload -> 4 windows)
 
 
-def decode_audio_real(payload: bytes) -> "np.ndarray":  # noqa: F821
-    """Real audio codec hook — STUB. Requires ffmpeg/soundfile, absent from
-    this container; wire the PCM decode here in deployment."""
-    raise NotImplementedError(
-        "audio decode requires ffmpeg/soundfile — not available here"
-    )
-
-
 def audio_window_energy(frames: DataFrame) -> DataFrame:
     """Arrow-batched windowed energy over (doc_id, payload binary) frames.
 
@@ -397,8 +381,8 @@ def audio_window_energy(frames: DataFrame) -> DataFrame:
     doc="Audio-modality plumbing: PCM-like binary payloads -> Arrow-batched "
         "windowed RMS energy + peak amplitude per analysis window (the "
         "silence/clipping screen an audio corpus runs before training). "
-        "Codec is an honest stub (decode_audio_real) beside a "
-        "deterministic byte-derived fake, same pattern as the image path; "
+        "No real codec ships: a deterministic byte-derived fake "
+        "decodes, same pattern as the image path; "
         "numpy vectorizes per batch. The RMS needs NO cross-engine "
         "rounding: integer square sums and /4.0 are exact, and sqrt is "
         "correctly rounded in both engines — bit-identical doubles from "

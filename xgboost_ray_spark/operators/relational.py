@@ -55,8 +55,6 @@ def s01_parquet_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("scan",),
 )
 def s02_csv_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from xgboost_ray_spark.sources.readers import read_csv
-
     nation = load_table(spark, sf_dir, "nation")
     # Every build writes a fresh scratch path (catalog.scratch_path): a
     # shared path rewritten by a later build would pull the files out
@@ -71,9 +69,7 @@ def s02_csv_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("n_regionkey", T.IntegerType()),
         ]
     )
-    # Through the sources reader (R1 surface), not a raw spark.read.csv —
-    # the registered scan entries exist to exercise the reader module.
-    return read_csv(spark, out, schema=schema, header=True)
+    return spark.read.option("header", True).csv(out, schema=schema)
 
 
 # ---------------------------------------------------------------------------
@@ -87,20 +83,18 @@ def s02_csv_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE s_acctbal > 0
     """,
     doc="ORC source: columnar scan with predicate/projection pushdown via "
-        "Spark's native ORC reader (sources/readers.py:read_orc); oracle "
+        "Spark's native ORC reader (spark.read.orc); oracle "
         "runs on the parquet twin of the same rows. Source-breadth parity: "
         "data_sources/__init__.py:13-24.",
     tags=("scan",),
 )
 def s01b_orc_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from xgboost_ray_spark.sources.readers import read_orc
-
     supp = load_table(spark, sf_dir, "supplier").select(
         "s_suppkey", "s_name", "s_nationkey", "s_acctbal"
     )
     out = scratch_path("supplier_orc")
     supp.write.orc(out)
-    return read_orc(spark, out).filter(F.col("s_acctbal") > 0)
+    return spark.read.orc(out).filter(F.col("s_acctbal") > 0)
 
 
 # ---------------------------------------------------------------------------
@@ -125,15 +119,13 @@ def s01b_orc_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("scan",),
 )
 def s01g_jsonl_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from xgboost_ray_spark.sources.readers import read_json
-
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "source", "n_chars"
     )
     out = scratch_path("documents_jsonl")
     docs.write.json(out)
     schema = "doc_id bigint, lang string, source string, n_chars bigint"
-    return read_json(spark, out, schema=schema).filter(F.col("n_chars") >= 64)
+    return spark.read.json(out, schema=schema).filter(F.col("n_chars") >= 64)
 
 
 # ---------------------------------------------------------------------------

@@ -1,121 +1,27 @@
-"""Data-source readers — parity with xgboost_ray's pluggable sources.
+"""ndarray source — the one reference loader Spark does not already have.
 
 The reference ships per-format loaders that normalize everything to pandas
 shards (data_sources/: csv.py, parquet.py, numpy.py, pandas.py, petastorm,
 modin, dask, ray_dataset, object_store, partitioned). On Spark the
-distributed frame is native, so each loader collapses to a thin constructor
-that yields a DataFrame with the same semantics:
-
-  reference source                       here
-  ----------------                       ----
-  CSV (csv.py:25-47)                     read_csv (header, explicit schema)
-  Parquet (parquet.py:25-48)             read_parquet (column pushdown free)
-  Petastorm URL lists (petastorm.py)     read_parquet — Spark reads object
-                                         stores natively; no extra layer
-  Numpy (numpy.py:25-33, f{i} columns)   from_numpy
-  Pandas (pandas.py:15-30)               from_pandas (Arrow path)
-  Modin/Dask/RayDataset/ObjectStore/     n/a — the Spark DataFrame IS the
-  __partitioned__ (R6-R10)               distributed frame; lineage+persist
-                                         replace the object store
-
-``ignore=`` projection (matrix.py:744-745) maps to ``.drop`` and becomes
-scan-level column pruning under Catalyst.
+distributed frame is native: CSV, parquet (petastorm URL lists included),
+JSON and ORC are ``spark.read.csv/parquet/json/orc``, a pandas frame is
+``spark.createDataFrame``, and Modin/Dask/RayDataset/ObjectStore/
+``__partitioned__`` have no counterpart because lineage and persist
+replace the object store. What is left is :func:`from_numpy`, which keeps
+the reference's synthesized ``f{i}`` column names.
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
 
 
-def _apply_ignore(df: DataFrame, ignore: Sequence[str] | None) -> DataFrame:
-    return df.drop(*ignore) if ignore else df
-
-
-def read_parquet(
-    spark: SparkSession,
-    paths: str | list[str],
-    columns: Sequence[str] | None = None,
-    ignore: Sequence[str] | None = None,
-) -> DataFrame:
-    """Parquet scan (R2). ``columns`` = projection pushdown (the reference's
-    ``columns=`` kwarg, data_sources/parquet.py:39)."""
-    paths = [paths] if isinstance(paths, str) else list(paths)
-    df = spark.read.parquet(*paths)
-    if columns:
-        df = df.select(*columns)
-    return _apply_ignore(df, ignore)
-
-
-def read_csv(
-    spark: SparkSession,
-    paths: str | list[str],
-    schema: T.StructType | str | None = None,
-    header: bool = True,
-    ignore: Sequence[str] | None = None,
-    **options,
-) -> DataFrame:
-    """CSV scan (R1). Explicit schema preferred; inferSchema only when the
-    caller passes none (matches pd.read_csv's inference in the reference)."""
-    paths = [paths] if isinstance(paths, str) else list(paths)
-    reader = spark.read.options(header=header, **options)
-    df = (
-        reader.csv(paths, schema=schema)
-        if schema is not None
-        else reader.option("inferSchema", True).csv(paths)
-    )
-    return _apply_ignore(df, ignore)
-
-
-def read_json(
-    spark: SparkSession,
-    paths: str | list[str],
-    schema: T.StructType | str | None = None,
-    ignore: Sequence[str] | None = None,
-) -> DataFrame:
-    paths = [paths] if isinstance(paths, str) else list(paths)
-    df = spark.read.json(paths, schema=schema)
-    return _apply_ignore(df, ignore)
-
-
-def read_orc(
-    spark: SparkSession,
-    paths: str | list[str],
-    columns: Sequence[str] | None = None,
-    ignore: Sequence[str] | None = None,
-) -> DataFrame:
-    """ORC scan (source-breadth analogue of data_sources/__init__.py:13-24).
-
-    Same contract as :func:`read_parquet`: columnar format, predicate and
-    projection pushdown handled by Spark's native ORC reader
-    (spark.sql.orc.filterPushdown is on by default)."""
-    paths = [paths] if isinstance(paths, str) else list(paths)
-    df = spark.read.orc(*paths)
-    if columns:
-        df = df.select(*columns)
-    return _apply_ignore(df, ignore)
-
-
-def from_pandas(
-    spark: SparkSession, pdf: pd.DataFrame, ignore: Sequence[str] | None = None
-) -> DataFrame:
-    """Local pandas frame -> distributed frame via Arrow (R5)."""
-    return _apply_ignore(spark.createDataFrame(pdf), ignore)
-
-
-def from_numpy(
-    spark: SparkSession,
-    arr: np.ndarray,
-    column_prefix: str = "f",
-    ignore: Sequence[str] | None = None,
-) -> DataFrame:
+def from_numpy(spark: SparkSession, arr: np.ndarray) -> DataFrame:
     """ndarray -> DataFrame with synthesized f{i} names (R4; the reference's
-    naming in data_sources/numpy.py:32)."""
+    naming in data_sources/numpy.py:32). A 1-d array becomes one column."""
     if arr.ndim == 1:
         arr = arr.reshape(-1, 1)
-    cols = [f"{column_prefix}{i}" for i in range(arr.shape[1])]
-    return from_pandas(spark, pd.DataFrame(arr, columns=cols), ignore)
+    cols = [f"f{i}" for i in range(arr.shape[1])]
+    return spark.createDataFrame(pd.DataFrame(arr, columns=cols))
