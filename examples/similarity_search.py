@@ -13,7 +13,7 @@ reach for which physical strategy against the same `embeddings` table:
   3. **LSH bucketing** (`operators.similarity.lsh_cosine_topk`) —
      approximate, right at corpus scales where even one exact pass is too
      much: sign-random-projection buckets make candidate sets tiny, and
-     recall is tunable via n_planes.
+     recall is set by the plane count (``similarity.N_PLANES``).
   4. **Quantized two-stage** (`operators.similarity.quantized_topk`) —
      the memory-bandwidth dial: an int8 index scan scores everything
      with integer dot products (~cosine after normalization), float

@@ -1,11 +1,11 @@
 """Shared AST mechanics for the static call-site audits.
 
-Six audits pin call-site inventories over the package (driver
+Seven audits pin call-site inventories over the package (driver
 materialization, broadcast hints, cache lifecycles, scratch-file
-writers, plan-text renderers, public-function callers; the scratch
-audit also walks ``examples/``, the public-surface audit every
-caller tree). They share the walk-and-attribute machinery so a fix to
-the mechanics (e.g. how calls are attributed to their enclosing
+writers, plan-text renderers, public-function callers, parameter
+setters; the scratch audit also walks ``examples/``, the public-surface
+audits every caller tree). They share the walk-and-attribute machinery
+so a fix to the mechanics (e.g. how calls are attributed to their enclosing
 function) lands once; each audit supplies only its matcher.
 """
 
@@ -129,3 +129,77 @@ def top_level_functions(top: str = PKG) -> list[tuple[str, ast.FunctionDef]]:
         for node in tree.body
         if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
     ]
+
+
+def defaulted_parameters(
+    top: str = PKG,
+) -> list[tuple[str, str, str, str, int | None]]:
+    """(file, owning class or "", function, parameter, position) for every
+    parameter with a default of every function or method under ``top``,
+    nested ones included. ``position`` is the index a call passes the
+    parameter at positionally (a method's ``self``/``cls`` not counted),
+    None for a keyword-only one."""
+    out = []
+
+    def visit(node: ast.AST, rel: str, owner: str) -> None:
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, ast.ClassDef):
+                visit(child, rel, child.name)
+                continue
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                a = child.args
+                pos = a.posonlyargs + a.args
+                bound = owner and pos and pos[0].arg in ("self", "cls")
+                shift = 1 if bound else 0
+                first = len(pos) - len(a.defaults)
+                for i, arg in enumerate(pos[first:], start=first):
+                    out.append((rel, owner, child.name, arg.arg, i - shift))
+                for arg, default in zip(a.kwonlyargs, a.kw_defaults):
+                    if default is not None:
+                        out.append((rel, owner, child.name, arg.arg, None))
+                visit(child, rel, "")
+                continue
+            visit(child, rel, owner)
+
+    for rel, tree, _ in _modules(top):
+        visit(tree, rel, "")
+    return out
+
+
+def class_bases(top: str = PKG) -> dict[str, set[str]]:
+    """Class name -> the names its ``class`` statement lists as bases,
+    for every class under ``top``."""
+    return {
+        node.name: {
+            b.id if isinstance(b, ast.Name) else b.attr
+            for b in node.bases
+            if isinstance(b, (ast.Name, ast.Attribute))
+        }
+        for _, tree, _ in _modules(top)
+        for node in ast.walk(tree)
+        if isinstance(node, ast.ClassDef)
+    }
+
+
+def calls_by_name(tops: tuple[str, ...]) -> dict[str, list[ast.Call]]:
+    """Called name (as :func:`call_name` reads it) -> every Call node
+    under each of ``tops``."""
+    calls: dict[str, list[ast.Call]] = {}
+    for top in tops:
+        for _, tree, _ in _modules(top):
+            for node in ast.walk(tree):
+                if isinstance(node, ast.Call):
+                    name = call_name(node)
+                    if name is not None:
+                        calls.setdefault(name, []).append(node)
+    return calls
+
+
+def call_passes(call: ast.Call, param: str, position: int | None) -> bool:
+    """Whether ``call`` may pass ``param``: by keyword, through ``**``,
+    through ``*``, or positionally at ``position`` or beyond."""
+    if any(k.arg in (param, None) for k in call.keywords):
+        return True
+    if any(isinstance(a, ast.Starred) for a in call.args):
+        return True
+    return position is not None and len(call.args) > position

@@ -13,6 +13,7 @@ import os
 import subprocess
 import sys
 
+import pytest
 from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
@@ -70,6 +71,15 @@ def test_hamming_cap_drops_mega_buckets(spark):
     n_full = simhash_hamming_pairs(docs).count()
     assert dropped > 0
     assert n_capped < n_full
+
+
+def test_hamming_other_width_without_fingerprints_fails_at_build(spark):
+    """simhash builds SIMHASH_BITS-bit fingerprints only, so asking for
+    another width without the caller's own fingerprints is a bad config:
+    it must fail when the frame is built, before any job runs (building
+    64-bit sums instead died mid-job with CAST_OVERFLOW)."""
+    with pytest.raises(ValueError, match="fingerprints"):
+        simhash_hamming_pairs(_docs(spark), bits=64)
 
 
 def test_default_observation_names_compose(spark):

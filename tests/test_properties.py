@@ -1080,7 +1080,7 @@ def test_minhash_signature_and_bands_match_hashlib_mirror(spark, docs):
         for r in lsh_bands(sigs).collect()
     }
 
-    fams = _hash_family_constants(N_HASHES)
+    fams = _hash_family_constants()
     for doc_id, text in enumerate(texts):
         words = text.split(" ")
         m = max(len(words) - (MINHASH_WORDS - 1), 1)

@@ -11,6 +11,9 @@ or ``perfbench/``. Tests do not count as callers. ``@register`` builders
 are exempt: the registry calls them by name. A new orphan fails here
 with the burden of proof on its author: give it a caller, delete it, or
 add it to ``_EXEMPT`` with its reason.
+
+The second audit holds every defaulted parameter of a package function
+to the same rule: some call site, tests included, must pass it.
 """
 
 from __future__ import annotations
@@ -23,6 +26,10 @@ from tests.audit_utils import (
     PKG,
     REPO,
     SCRIPTS,
+    call_passes,
+    calls_by_name,
+    class_bases,
+    defaulted_parameters,
     name_references,
     top_level_functions,
 )
@@ -96,3 +103,68 @@ def test_every_public_function_has_a_caller():
     defined = {(rel, fn.name) for rel, fn in top_level_functions(PKG)}
     assert set(_EXEMPT) <= defined, set(_EXEMPT) - defined
     assert all(os.path.isfile(os.path.join(PKG, m)) for m in _EXEMPT_MODULES)
+
+
+_SETTER_TREES = _CALLER_TREES + (os.path.join(REPO, "tests"),)
+
+# (module, function) whose defaulted parameters are exempt, with the reason.
+_PARAM_EXEMPT = {
+    ("ml/estimators.py", "_RFMixin.__init__"): "the reference's "
+    "random-forest estimator keywords and defaults (sklearn.py:618-620), "
+    "public configuration like GBTParams",
+}
+
+
+def unset_parameters() -> list[str]:
+    """``module:function.parameter`` for every defaulted parameter of a
+    package function that no call site in a setter tree passes. A class's
+    ``__init__`` is called through the class or any subclass."""
+    bases = class_bases()
+
+    def lineage(cls: str) -> set[str]:
+        out = {cls}
+        for b in bases.get(cls, ()):
+            out |= lineage(b)
+        return out
+
+    calls = calls_by_name(_SETTER_TREES)
+    unset = []
+    for rel, owner, fn, param, position in defaulted_parameters():
+        qual = f"{owner}.{fn}" if owner else fn
+        if rel in _EXEMPT_MODULES or (rel, qual) in _PARAM_EXEMPT:
+            continue
+        if fn == "__init__":
+            names = [c for c in bases if owner in lineage(c)]
+        else:
+            names = [fn]
+        if not any(
+            call_passes(call, param, position)
+            for name in names
+            for call in calls.get(name, ())
+        ):
+            unset.append(f"{rel}:{qual}.{param}")
+    return sorted(unset)
+
+
+def test_every_optional_parameter_has_a_setter():
+    """Every defaulted parameter of a package function is passed by some
+    call site, by keyword, by position or through ``**``: one that every
+    caller leaves at its default is a constant spelled as an option, and
+    each such option doubles what tests and benchmarks must cover.
+
+    Unlike the function audit above, tests count as setters here: a
+    parameter only a test sets is the seam a property test sweeps
+    (thresholds, caps, widths) or a fault test injects through, and such
+    seams stay. A new unset parameter fails with the burden of proof on
+    its author: give it a setter, make it a module constant, or exempt
+    the function with a reason."""
+    found = unset_parameters()
+    assert not found, (
+        "defaulted parameters no call site sets (make each a module "
+        f"constant, or exempt its function with a reason): {found}"
+    )
+    defined = {
+        (rel, f"{owner}.{fn}" if owner else fn)
+        for rel, owner, fn, _, _ in defaulted_parameters()
+    }
+    assert set(_PARAM_EXEMPT) <= defined, set(_PARAM_EXEMPT) - defined

@@ -35,14 +35,9 @@ from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
 
-def gemm_topk(
-    df: DataFrame,
-    queries: np.ndarray,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Exact cosine top-k of ``queries`` against a corpus DataFrame.
+def gemm_topk(df: DataFrame, queries: np.ndarray, k: int = 10) -> DataFrame:
+    """Exact cosine top-k of ``queries`` against a ``(vec_id, embedding)``
+    corpus DataFrame.
 
     Returns a DataFrame ``(query_id, vec_id, cos)`` with ``k`` rows per
     query (fewer if the corpus is smaller). Scores are float64; rows per
@@ -80,13 +75,13 @@ def gemm_topk(
             # semantic — skip NULL/empty vectors (they can't be a
             # neighbor); ragged non-null dims still raise, as genuine
             # corpus corruption should.
-            vecs = pdf[vec_col].to_numpy()
+            vecs = pdf["embedding"].to_numpy()
             mask = np.array(
                 [v is not None and len(v) > 0 for v in vecs], dtype=bool
             )
             if not mask.any():
                 continue
-            ids = pdf[id_col].to_numpy()[mask]
+            ids = pdf["vec_id"].to_numpy()[mask]
             cm = np.stack(
                 [np.asarray(v, dtype=np.float64) for v in vecs[mask]]
             )
@@ -124,14 +119,14 @@ def gemm_topk(
                 out_cos.append(cos)
         yield pd.DataFrame(
             {"query_id": pd.Series(out_q, dtype="int64"),
-             id_col: pd.Series(out_id, dtype="int64"),
+             "vec_id": pd.Series(out_id, dtype="int64"),
              "cos": pd.Series(out_cos, dtype="float64")}
         )
 
-    partial = df.select(id_col, vec_col).mapInPandas(
-        score_partition, schema=f"query_id long, {id_col} long, cos double"
+    partial = df.select("vec_id", "embedding").mapInPandas(
+        score_partition, schema="query_id long, vec_id long, cos double"
     )
-    w = W.partitionBy("query_id").orderBy(F.desc("cos"), F.col(id_col))
+    w = W.partitionBy("query_id").orderBy(F.desc("cos"), F.col("vec_id"))
     return (
         partial.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= k)

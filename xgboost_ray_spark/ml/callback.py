@@ -6,11 +6,14 @@ helpers (xgboost_ray/session.py:8-81):
 
   reference                              here
   ---------                              ----
-  DistributedCallback hooks run on       same hook surface; invoked inside
+  DistributedCallback hooks run on       the load/train hooks; invoked inside
   every RayXGBoostActor around           the barrier task (xgb backend) or
-  load/train/predict                     driver-side around fit/transform
-                                         (mllib backend — workers are opaque
-                                         to MLlib, documented difference)
+  load/train/predict                     driver-side around data loading and
+                                         fit (mllib backend — workers are
+                                         opaque to MLlib, documented
+                                         difference). No predict hooks:
+                                         predict is a plain Spark transform
+                                         with no worker lifecycle to hook
   get_actor_rank() (session.py:37)       get_worker_rank(): BarrierTaskContext
                                          .partitionId() inside a barrier
                                          stage, 0 on the driver
@@ -43,12 +46,6 @@ class DistributedCallback:
         pass
 
     def after_train(self, ctx: "WorkerContext", result: Any = None, **kwargs: Any) -> None:
-        pass
-
-    def before_predict(self, ctx: "WorkerContext", **kwargs: Any) -> None:
-        pass
-
-    def after_predict(self, ctx: "WorkerContext", predictions: Any = None, **kwargs: Any) -> None:
         pass
 
 
@@ -91,12 +88,6 @@ class DistributedCallbackContainer:
 
     def after_train(self, ctx, **kw):
         self._invoke("after_train", ctx, **kw)
-
-    def before_predict(self, ctx, **kw):
-        self._invoke("before_predict", ctx, **kw)
-
-    def after_predict(self, ctx, **kw):
-        self._invoke("after_predict", ctx, **kw)
 
 
 def get_worker_rank() -> int:

@@ -23,6 +23,8 @@ from typing import Any, Callable
 
 from pyspark.sql import DataFrame
 
+TRAIN_FRACTION = 0.8  # share of rows in the training split; the rest validate
+
 
 @dataclass
 class TrialResult:
@@ -57,9 +59,7 @@ def grid_search(
     *,
     feature_cols: list[str] | None = None,
     metric: str = "auc",
-    train_fraction: float = 0.8,
     seed: int = 42,
-    maximize: bool | None = None,
 ) -> SearchResult:
     """Fit one distributed trial per grid point; select on a held-out split.
 
@@ -78,10 +78,8 @@ def grid_search(
         # trials would otherwise raise an opaque empty-sequence error
         # after the expensive setup.
         raise ValueError("grid_search: empty parameter grid")
-    if maximize is None:
-        maximize = metric == "auc"
     train_df, val_df = df.randomSplit(
-        [train_fraction, 1.0 - train_fraction], seed=seed
+        [TRAIN_FRACTION, 1.0 - TRAIN_FRACTION], seed=seed
     )
     # Every trial rescans both splits; pin them once.
     train_df = train_df.cache()
@@ -130,7 +128,7 @@ def grid_search(
             "grid_search: every trial produced a NaN metric "
             f"({metric!r}); validation split likely degenerate"
         )
-    best = (max if maximize else min)(finite, key=lambda t: t.metric)
+    best = (max if metric == "auc" else min)(finite, key=lambda t: t.metric)
     return SearchResult(
         best_params=best.params,
         best_metric=best.metric,

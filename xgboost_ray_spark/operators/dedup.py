@@ -146,11 +146,11 @@ def s26_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 MERSENNE_P = 2147483647  # 2^31 - 1
 
 
-def _hash_family_constants(k: int = N_HASHES) -> list[tuple[int, int]]:
+def _hash_family_constants() -> list[tuple[int, int]]:
     import hashlib
 
     out = []
-    for i in range(k):
+    for i in range(N_HASHES):
         d = hashlib.md5(f"family_{i}".encode()).hexdigest()
         a = (int(d[:8], 16) % (MERSENNE_P - 1)) + 1  # a in [1, P-1]
         b = int(d[8:16], 16) % MERSENNE_P
@@ -158,13 +158,13 @@ def _hash_family_constants(k: int = N_HASHES) -> list[tuple[int, int]]:
     return out
 
 
-def minhash_signatures(docs: DataFrame, k: int = N_HASHES) -> DataFrame:
-    """Per-doc k-wide MinHash signature.
+def minhash_signatures(docs: DataFrame) -> DataFrame:
+    """Per-doc ``N_HASHES``-wide MinHash signature.
 
     ONE md5 per shingle (the expensive part), folded to a 60-bit integer,
-    then k universal-hash families ``(a_i*x + b_i) mod P`` — 16x less
-    hashing than per-family md5 at identical LSH quality. All arithmetic
-    stays below 2^62, so int64 semantics match every engine.
+    then ``N_HASHES`` universal-hash families ``(a_i*x + b_i) mod P`` —
+    16x less hashing than per-family md5 at identical LSH quality. All
+    arithmetic stays below 2^62, so int64 semantics match every engine.
     Reference analogue: none — xgboost_ray has no dedup; this is the
     north-star pipeline addition.
     """
@@ -180,14 +180,14 @@ def minhash_signatures(docs: DataFrame, k: int = N_HASHES) -> DataFrame:
         % MERSENNE_P
     )
     sh = sh.select("doc_id", x.alias("x"))
-    # SQL text, ONE parse for all k families (x < P and a < P, so
+    # SQL text, ONE parse for all families (x < P and a < P, so
     # x*a < 2^62 — bigint-exact in both the Column form and this one):
-    # k separate F.expr().alias() calls still cost ~3 py4j round-trips
+    # separate F.expr().alias() calls still cost ~3 py4j round-trips
     # each; a single struct of aggregates is one. Catalyst extracts the
     # MINs into the same partial-agg shape either way.
     fields = ", ".join(
         f"MIN((x * {a} + {b}) % {MERSENNE_P}) AS h{i}"
-        for i, (a, b) in enumerate(_hash_family_constants(k))
+        for i, (a, b) in enumerate(_hash_family_constants())
     )
     return (
         sh.groupBy("doc_id")
@@ -409,7 +409,7 @@ SIMHASH_BITS = 16
 _HEX = "0123456789abcdef"
 
 
-def simhash(docs: DataFrame, bits: int = SIMHASH_BITS) -> DataFrame:
+def simhash(docs: DataFrame) -> DataFrame:
     """16-bit SimHash over word tokens.
 
     bit_j(token) = bit j of the first 4 hex chars of md5(token); the doc
@@ -417,7 +417,7 @@ def simhash(docs: DataFrame, bits: int = SIMHASH_BITS) -> DataFrame:
     Pure built-ins (explode + conditional sums); one shuffle on doc_id.
     """
     tok = fan_out(docs).select("doc_id", F.explode(F.split("text", " ")).alias("w"))
-    tok = tok.withColumn("h4", F.substring(F.md5("w"), 1, bits // 4))
+    tok = tok.withColumn("h4", F.substring(F.md5("w"), 1, SIMHASH_BITS // 4))
     # SQL text, one F.expr parse per aggregate: the Column-composed form
     # of these generated per-bit expressions cost ~2.2k py4j round-trips
     # (~0.4 s driver-side) per build. Integer-only arithmetic — parses to
@@ -428,29 +428,31 @@ def simhash(docs: DataFrame, bits: int = SIMHASH_BITS) -> DataFrame:
             f"substring(h4, {1 + j // 4}, 1)) - 1, {3 - j % 4})"
             f" % 2) * 2 - 1)"
         ).alias(f"v{j}")
-        for j in range(bits)
+        for j in range(SIMHASH_BITS)
     ]
     votes = tok.groupBy("doc_id").agg(*aggs)
     fp = " + ".join(
-        f"(CASE WHEN v{j} > 0 THEN {2 ** j} ELSE 0 END)" for j in range(bits)
+        f"(CASE WHEN v{j} > 0 THEN {2 ** j} ELSE 0 END)"
+        for j in range(SIMHASH_BITS)
     )
     return votes.select(
         "doc_id", F.expr(f"CAST(({fp}) AS BIGINT)").alias("simhash")
     )
 
 
-def _simhash_oracle(bits: int = SIMHASH_BITS) -> str:
+def _simhash_oracle() -> str:
     votes = ",\n        ".join(
         f"SUM(((strpos('{_HEX}', substring(h4, {1 + j // 4}, 1)) - 1)"
         f" >> {3 - j % 4}) % 2 * 2 - 1) AS v{j}"
-        for j in range(bits)
+        for j in range(SIMHASH_BITS)
     )
     fp = " + ".join(
-        f"CASE WHEN v{j} > 0 THEN {2**j} ELSE 0 END" for j in range(bits)
+        f"CASE WHEN v{j} > 0 THEN {2**j} ELSE 0 END"
+        for j in range(SIMHASH_BITS)
     )
     return f"""
     WITH tok AS (
-      SELECT doc_id, substring(md5(unnest(regexp_split_to_array(text, ' '))), 1, {bits // 4}) AS h4
+      SELECT doc_id, substring(md5(unnest(regexp_split_to_array(text, ' '))), 1, {SIMHASH_BITS // 4}) AS h4
       FROM documents
     ), votes AS (
       SELECT doc_id,
@@ -519,11 +521,18 @@ def simhash_hamming_pairs(
     only on a dropped block are lost on both sides identically — the cap
     trades bounded recall loss in degenerate buckets for a bounded task.
 
-    At 100 TB: pass 64-bit ``fingerprints`` with ``bits=64`` — 3 blocks
-    of ~21 bits key the shuffle on 2M+ values, and the same cap bounds the
-    residual skew.
+    ``simhash`` builds ``SIMHASH_BITS``-bit fingerprints; any other width
+    needs the caller's own ``fingerprints`` frame, and asking for one
+    without it raises ``ValueError`` before any job runs. At 100 TB: pass
+    64-bit ``fingerprints`` with ``bits=64`` — 3 blocks of ~21 bits key
+    the shuffle on 2M+ values, and the same cap bounds the residual skew.
     """
-    fp = fingerprints if fingerprints is not None else simhash(docs, bits)
+    if fingerprints is None and bits != SIMHASH_BITS:
+        raise ValueError(
+            f"simhash builds {SIMHASH_BITS}-bit fingerprints; pass "
+            f"fingerprints to pair {bits}-bit ones"
+        )
+    fp = fingerprints if fingerprints is not None else simhash(docs)
     mask = lambda shift, width: F.shiftrightunsigned("simhash", shift).bitwiseAND(
         F.lit((1 << width) - 1)
     )
@@ -603,8 +612,9 @@ def _hamming_oracle() -> str:
     doc=f"SimHash Hamming-neighbor pairs (distance <= {HAMMING_MAX}): "
         "multi-index blocks — pigeonhole guarantees recall, bucket-grouped "
         f"pair generation capped at {HAMMING_MAX_BUCKET} docs/bucket with "
-        "observe() drop metrics; identical cap in the oracle. 64-bit "
-        "fingerprints (bits=64) are the corpus-scale path.",
+        "observe() drop metrics; identical cap in the oracle. The "
+        "corpus-scale path pairs 64-bit fingerprints, which the caller "
+        "must pass as fingerprints (bits=64).",
     tags=("dedup", "similarity"),
 )
 def s26e_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -959,14 +969,12 @@ BOILER_NGRAM = 5
 BOILER_MIN_DOCS = 3  # fixture-calibrated; production uses a corpus-share threshold
 
 
-def boilerplate_phrases(
-    docs: DataFrame, n: int = BOILER_NGRAM, min_docs: int = BOILER_MIN_DOCS
-) -> DataFrame:
-    """Word-n-gram phrases appearing in >= min_docs distinct documents —
-    the C4 pipeline's repeated-boilerplate removal signal (navigation
-    chrome, license headers, templated spans), detected across the corpus
-    rather than per document (contrast s28g, which scores repetition
-    WITHIN a doc).
+def boilerplate_phrases(docs: DataFrame) -> DataFrame:
+    """Word-``BOILER_NGRAM``-gram phrases appearing in at least
+    ``BOILER_MIN_DOCS`` distinct documents — the C4 pipeline's
+    repeated-boilerplate removal signal (navigation chrome, license
+    headers, templated spans), detected across the corpus rather than per
+    document (contrast s28g, which scores repetition WITHIN a doc).
 
     Per-doc distinct grams (array_distinct before explode — set semantics,
     no shuffle) -> one groupBy on the phrase. The phrase count per doc is
@@ -975,13 +983,12 @@ def boilerplate_phrases(
     fixed-width shuffle key and keep one example phrase per hash via
     max(); here the phrase itself stays the key for oracle parity.
     """
-    per_doc = fan_out(docs).select(
-        "doc_id", F.explode(F.array_distinct(_gram_expr(n))).alias("phrase")
-    )
+    grams = F.array_distinct(_gram_expr(BOILER_NGRAM))
+    per_doc = fan_out(docs).select("doc_id", F.explode(grams).alias("phrase"))
     return (
         per_doc.groupBy("phrase")
         .agg(F.count("*").alias("n_docs"))
-        .filter(F.col("n_docs") >= min_docs)
+        .filter(F.col("n_docs") >= BOILER_MIN_DOCS)
     )
 
 

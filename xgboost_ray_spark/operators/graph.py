@@ -42,7 +42,7 @@ PR_BASE = PR_SCALE * (100 - PR_DAMP_PCT) // 100  # (1-d) teleport mass
 PR_ITERS = 3
 
 
-def pagerank(edges: DataFrame, iters: int = PR_ITERS) -> DataFrame:
+def pagerank(edges: DataFrame) -> DataFrame:
     """Fixed-point PageRank over a directed edge list (``src``, ``dst``).
 
     Every node must appear as a ``src`` (callers with dangling nodes add
@@ -52,15 +52,12 @@ def pagerank(edges: DataFrame, iters: int = PR_ITERS) -> DataFrame:
     """
     # Out-degrees ride along with the edges: computed once, persisted once,
     # so each iteration's join carries (src, dst, od) and never revisits
-    # the degree aggregate. The persist is LAZY (r15): an eager count()
-    # here would pay one extra full action over the edge-build subtree
-    # purely to warm the cache — the checkpoint job's first stage over
-    # esrc materializes the same blocks as a side effect (measured -0.5 s
-    # of the sf0.1 wall, one fewer full pass at any scale; same-session
-    # A/B in OPTIMIZATION_r15.md). Nothing unpersists before the loop's
-    # single eager action, so laziness cannot recompute the subtree
-    # across actions — at worst two concurrent first-use stages race to
-    # fill the same cache blocks within that one job.
+    # the degree aggregate. The persist stays LAZY: the checkpoint job's
+    # first stage over esrc fills the cache, so an eager count() here would
+    # only add a full action over the edge-build subtree. Nothing
+    # unpersists before the loop's single eager action, so laziness cannot
+    # recompute the subtree across actions — at worst two concurrent
+    # first-use stages race to fill the same cache blocks within that job.
     out = edges.groupBy("src").agg(F.count("*").alias("od"))
     esrc = edges.join(out, "src").persist()
     nodes = esrc.select(F.col("src").alias("node")).distinct().persist()
@@ -73,22 +70,10 @@ def pagerank(edges: DataFrame, iters: int = PR_ITERS) -> DataFrame:
     # checkpoint (3 joins + 3 aggregates total, zero intermediate cache
     # writes or count jobs).  An open-ended tolerance loop would need the
     # per-round persist + convergence-metric + lineage-checkpoint idiom —
-    # that pattern lives in s26g (dedup.dup_clusters).
-    # Round shape note (r15): a union-zero-leg spelling that folds the
-    # nodes⟕inc re-attach join into the aggregate was measured here. The
-    # naive version (contributions ∪ one zero row per node, one sum) won
-    # −13% locally but is WRONG on dangling-dst graphs: the left join's
-    # other job, invisible until the pure-python mirror property test
-    # caught it, is restricting the result to the src-node set. The
-    # corrected version (an `own` membership flag riding the aggregate +
-    # a filter) measured a WASH over 8 order-alternating interleaved
-    # pairs (medians 3.93 vs 3.89 s, old holding the floor) — the
-    # removed broadcast join costs about what the wider union rows +
-    # max/filter add at bench scale. Kept as the r14 two-join spelling;
-    # at cluster scale (ranks beyond broadcast size) the flag spelling
-    # removes a real per-round shuffle and is the right deployment
-    # variant (OPTIMIZATION_r15.md "not yet optimized").
-    for _ in range(iters):
+    # that pattern lives in s26g (dedup.dup_clusters). The nodes⟕inc
+    # re-attach join also restricts the result to the src-node set, so a
+    # dangling dst never gets a rank row.
+    for _ in range(PR_ITERS):
         inc = (
             esrc.join(ranks, esrc["src"] == ranks["node"])
             # Integral share: each neighbor receives floor(rank / od).

@@ -117,7 +117,7 @@ RESIZE_SCHEMA = (
 )
 
 
-def resize_images(decoded: DataFrame, max_dim: int = RESIZE_MAX_DIM) -> DataFrame:
+def resize_images(decoded: DataFrame) -> DataFrame:
     """Aspect-preserving resize over decoded metadata (real resize stubbed;
     the integer dimension math is the testable part — pure int arithmetic so
     both engines floor identically)."""
@@ -135,8 +135,12 @@ def resize_images(decoded: DataFrame, max_dim: int = RESIZE_MAX_DIM) -> DataFram
                     "doc_id": b["doc_id"],
                     "width": b["width"],
                     "height": b["height"],
-                    "out_w": (b["width"] * max_dim // long_side).astype("Int32"),
-                    "out_h": (b["height"] * max_dim // long_side).astype("Int32"),
+                    "out_w": (
+                        b["width"] * RESIZE_MAX_DIM // long_side
+                    ).astype("Int32"),
+                    "out_h": (
+                        b["height"] * RESIZE_MAX_DIM // long_side
+                    ).astype("Int32"),
                 }
             )
 
@@ -172,7 +176,7 @@ FRAME_STRIDE = 7
 FRAME_SCHEMA = "doc_id bigint, frame_idx int, frame_hash string"
 
 
-def sample_frames(frames: DataFrame, stride: int = FRAME_STRIDE) -> DataFrame:
+def sample_frames(frames: DataFrame) -> DataFrame:
     """Frame sampling for video-like payloads: n_frames derives from the
     payload bytes (deterministic fake; real demuxer stubbed), one output row
     per sampled frame — mapInPandas doing row EXPANSION, the shape a real
@@ -192,10 +196,10 @@ def sample_frames(frames: DataFrame, stride: int = FRAME_STRIDE) -> DataFrame:
             # also pay per frame) runs in the O(frames) loop.
             digests = [bytes(p).hex() for p in b["payload"]]
             n_frames = np.array([int(d[8:10], 16) + 1 for d in digests])
-            counts = (n_frames + stride - 1) // stride
+            counts = (n_frames + FRAME_STRIDE - 1) // FRAME_STRIDE
             doc_rep = np.repeat(b["doc_id"].to_numpy(), counts)
             frame_idx = np.concatenate(
-                [np.arange(0, n, stride) for n in n_frames]
+                [np.arange(0, n, FRAME_STRIDE) for n in n_frames]
             ).astype("int32")
             digest_rep = np.repeat(np.array(digests, dtype=object), counts)
             frame_hash = [

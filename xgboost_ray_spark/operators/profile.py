@@ -377,13 +377,12 @@ def s32d_outlier_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def exact_outlier_flags(
-    df: DataFrame, group_col: str, cents_col: str, k: int = SIGMA_K
-) -> DataFrame:
-    """Append ``is_outlier``: |x - mean| > k*stddev per ``group_col``,
-    decided by the cross-multiplied INTEGER predicate over a fixed-point
-    bigint value column — (n*x-S1)^2*(n-1) > k^2*n*(n*S2-S1^2) — so the
-    flag is bit-reproducible (no sqrt, no float accumulation). Reusable
+def exact_outlier_flags(df: DataFrame, group_col: str, cents_col: str) -> DataFrame:
+    """Append ``is_outlier``: |x - mean| > K*stddev per ``group_col``
+    (K = ``SIGMA_K``), decided by the cross-multiplied INTEGER predicate
+    over a fixed-point bigint value column —
+    (n*x-S1)^2*(n-1) > K^2*n*(n*S2-S1^2) — so the flag is
+    bit-reproducible (no sqrt, no float accumulation). Reusable
     anomaly-mask kernel; s32d is its registered events spelling.
     """
     from pyspark.sql import Window as W
@@ -407,16 +406,14 @@ def exact_outlier_flags(
         }
     )
     return st.withColumn(
-        "is_outlier", outlier_flag("_n", "_s1", "_s2", cents_col, k)
+        "is_outlier", outlier_flag("_n", "_s1", "_s2", cents_col)
     ).drop("_n", "_s1", "_s2")
 
 
-def outlier_flag(
-    n_col: str, s1_col: str, s2_col: str, value_col: str, k: int = SIGMA_K
-) -> F.Column:
-    """The exact integer k-sigma flag of ``value_col`` against its group's
-    non-null count ``n_col``, DECIMAL(38,0) sum ``s1_col`` and sum of
-    squares ``s2_col``: (n*x-S1)^2*(n-1) > k^2*n*(n*S2-S1^2). One
+def outlier_flag(n_col: str, s1_col: str, s2_col: str, value_col: str) -> F.Column:
+    """The exact integer ``SIGMA_K``-sigma flag of ``value_col`` against
+    its group's non-null count ``n_col``, DECIMAL(38,0) sum ``s1_col`` and
+    sum of squares ``s2_col``: (n*x-S1)^2*(n-1) > K^2*n*(n*S2-S1^2). One
     spelling for the window kernel (:func:`exact_outlier_flags`) and the
     streaming guard's broadcast stats (s25l)."""
     DEC38 = "decimal(38,0)"
@@ -425,7 +422,7 @@ def outlier_flag(
     dev = n * v - F.col(s1_col)
     lhs = dev * dev * (n - 1)
     rhs = (
-        F.lit(k * k).cast(DEC38)
+        F.lit(SIGMA_K * SIGMA_K).cast(DEC38)
         * n
         * (n * F.col(s2_col) - F.col(s1_col) * F.col(s1_col))
     )
@@ -443,7 +440,7 @@ def outlier_flag(
         F.raise_error(
             F.lit(
                 f"outlier_flag: DECIMAL(38,0) overflow in the integer "
-                f"{k}-sigma predicate (group too large or values too hot "
+                f"{SIGMA_K}-sigma predicate (group too large or values too hot "
                 "for the fixed-point scale); rescale the cents column "
                 "down a digit"
             )

@@ -324,9 +324,7 @@ def s01h_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_orderkey", "l_linenumber", "l_partkey", "l_suppkey", "l_quantity"
     )
     out = scratch_path("lineitem_zorder")
-    write_zordered(
-        li, out, ["l_partkey", "l_suppkey"], ZORDER_FILES, mode="errorifexists"
-    )
+    write_zordered(li, out, ["l_partkey", "l_suppkey"], ZORDER_FILES)
     return spark.read.parquet(out).filter(F.col("l_partkey") < 50)
 
 

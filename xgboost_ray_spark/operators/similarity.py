@@ -131,7 +131,7 @@ def s27_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # LSH random-hyperplane bucketing
 # ---------------------------------------------------------------------------
-def plane_sign_values(dim: int, n_planes: int = N_PLANES) -> list[list[int]]:
+def plane_sign_values(dim: int) -> list[list[int]]:
     """±1 hyperplane signs derived from md5 — computed at plan-build time.
 
     sign(p, i) = +1 iff the first hex nibble of md5(f"{p}_{i}") >= 8;
@@ -145,11 +145,11 @@ def plane_sign_values(dim: int, n_planes: int = N_PLANES) -> list[list[int]]:
             1 if int(hashlib.md5(f"{p}_{i}".encode()).hexdigest()[0], 16) >= 8 else -1
             for i in range(dim)
         ]
-        for p in range(n_planes)
+        for p in range(N_PLANES)
     ]
 
 
-def lsh_bucket_expr(dim: int, n_planes: int = N_PLANES, col: str = "embedding") -> F.Column:
+def lsh_bucket_expr(dim: int) -> F.Column:
     """Per-row bucket id as a single JVM expression — no explode, no shuffle.
 
     Each plane's projection is a sequential-double dot product of the vector
@@ -160,39 +160,38 @@ def lsh_bucket_expr(dim: int, n_planes: int = N_PLANES, col: str = "embedding") 
     At 100 TB this is the difference between a narrow map stage and a
     2.5M-row-per-5k-vectors explode + two shuffles.
     """
-    cached = _BUCKET_EXPR_CACHE.get((dim, n_planes, col))
+    cached = _BUCKET_EXPR_CACHE.get(dim)
     if cached is not None:
         return cached
-    signs = plane_sign_values(dim, n_planes)
+    signs = plane_sign_values(dim)
     # One SQL string, one F.expr parse: the CASE WHEN chain parses to the
     # same plan as the previous F.when composition, but the whole
-    # n_planes x dim expression crosses py4j once instead of ~2.5k times
+    # N_PLANES x dim expression crosses py4j once instead of ~2.5k times
     # (profiled: 1.0 s of driver-side build per call at dim=64).
     terms = []
-    for p in range(n_planes):
+    for p in range(N_PLANES):
         arr = "array(" + ",".join(f"{s:.1f}D" for s in signs[p]) + ")"
-        terms.append(
-            f"(CASE WHEN {_dot_sql(col, arr)} >= 0 THEN {2 ** p} ELSE 0 END)"
-        )
+        dot = _dot_sql("embedding", arr)
+        terms.append(f"(CASE WHEN {dot} >= 0 THEN {2 ** p} ELSE 0 END)")
     expr = F.expr("CAST((" + " + ".join(terms) + ") AS INT)")
-    _BUCKET_EXPR_CACHE[(dim, n_planes, col)] = expr
+    _BUCKET_EXPR_CACHE[dim] = expr
     return expr
 
 
-# The bucket expression is a pure function of (dim, n_planes, col) — the
-# planes are md5-derived constants — and every LSH query builds it twice
-# (query side + corpus side), so the parse of the ~25 KB literal string is
-# memoized. A Column is an immutable unresolved AST; reusing one across
-# plans is safe (resolution builds new trees).
-_BUCKET_EXPR_CACHE: dict[tuple[int, int, str], F.Column] = {}
+# The bucket expression is a pure function of dim — the planes are
+# md5-derived constants — and every LSH query builds it twice (query side
+# + corpus side), so the parse of the ~25 KB literal string is memoized.
+# A Column is an immutable unresolved AST; reusing one across plans is
+# safe (resolution builds new trees).
+_BUCKET_EXPR_CACHE: dict[int, F.Column] = {}
 
 
-def embedding_dim(vectors: DataFrame, col: str = "embedding") -> int:
+def embedding_dim(vectors: DataFrame) -> int:
     """Probe the corpus width from the first row (one tiny driver job).
     Hardcoding a width is a silent-corruption hazard: zip_with null-pads
     a mismatched literal array, the aggregate folds to null, and every
     plane term falls to 0 — ALL vectors land in bucket 0."""
-    first = vectors.select(F.size(col).alias("d")).first()
+    first = vectors.select(F.size("embedding").alias("d")).first()
     if first is None:
         raise ValueError("embedding_dim: empty corpus")
     return first.d
@@ -261,13 +260,13 @@ def lsh_cosine_topk(
     return _top_k(cand, _cosine("qe", "ce", "qn", "cn"), k)
 
 
-def _bucket_terms_sql(dim: int = 64) -> str:
+def _bucket_terms_sql() -> str:
     """SQL spelling of lsh_bucket_expr — ONE generator shared by every
     LSH oracle (s27b, s27g), so the sign derivation and float formatting
     can never drift between them. Each projection is a sequential-double
     list_dot_product, bit-identical to Spark's aggregate(zip_with) fold;
     the fixture dim is 64 (oracles run on the fixture only)."""
-    signs = plane_sign_values(dim, N_PLANES)
+    signs = plane_sign_values(64)
     return " + ".join(
         "(CASE WHEN list_dot_product(embedding::DOUBLE[], ["
         + ", ".join(f"{s:.1f}" for s in signs[p])
@@ -679,7 +678,7 @@ def s27g_lsh_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 Q_LEVELS = 255  # int8 levels (0..255 stored in a byte per dimension)
 
 
-def quantize_embeddings(emb: DataFrame, dim: int | None = None) -> DataFrame:
+def quantize_embeddings(emb: DataFrame, dim: int) -> DataFrame:
     """Per-dimension affine int8 quantization of the embedding column.
 
     Stats pass: one aggregate computes per-dimension min/max as two
@@ -708,7 +707,7 @@ def quantize_embeddings(emb: DataFrame, dim: int | None = None) -> DataFrame:
         f"aggregate({deq_err}, cast(0.0 as double), (acc, v) -> acc + v)"
         f" / size(q)"
     )
-    return quantized_vectors(emb, stats, keep=("embedding", "mn", "mx")).select(
+    return quantized_vectors(emb, stats).select(
         "vec_id",
         F.expr("aggregate(q, 0L, (acc, v) -> acc + v)").alias("q_sum"),
         F.array_min("q").alias("q_min"),
@@ -717,14 +716,12 @@ def quantize_embeddings(emb: DataFrame, dim: int | None = None) -> DataFrame:
     )
 
 
-def embedding_stats(emb: DataFrame, dim: int | None = None) -> DataFrame:
+def embedding_stats(emb: DataFrame, dim: int) -> DataFrame:
     """Single-row (mn, mx) per-dimension stats arrays — one
     partial-aggregated scan emitting 2*dim doubles. A fixed-width corpus
-    is assumed; ``dim`` defaults to :func:`embedding_dim`'s first-row
-    probe (one tiny driver job) rather than hard-coding a width that
-    would silently null-pad any other corpus."""
-    if dim is None:
-        dim = embedding_dim(emb)
+    of width ``dim`` is assumed; callers pass the probed width
+    (:func:`table_embedding_dim`) rather than hard-coding one that would
+    silently null-pad any other corpus."""
     # SQL text parsed once per array, not 2*dim aggregate Columns — the
     # per-element composition measured ~1.4k py4j round-trips per build
     # at dim=64 (the vector.dot_sql rationale; s27h's total is pinned in
@@ -737,12 +734,10 @@ def embedding_stats(emb: DataFrame, dim: int | None = None) -> DataFrame:
     )
 
 
-def quantized_vectors(
-    emb: DataFrame, stats: DataFrame, keep: tuple[str, ...] = ()
-) -> DataFrame:
-    """(vec_id, q bigint-array [, keep...]) — the stats row broadcasts,
-    quantization is a narrow per-row transform, the corpus never
-    shuffles."""
+def quantized_vectors(emb: DataFrame, stats: DataFrame) -> DataFrame:
+    """(vec_id, q bigint-array, embedding, mn, mx) — the stats row
+    broadcasts, quantization is a narrow per-row transform, the corpus
+    never shuffles."""
     z = "arrays_zip(embedding, mn, mx)"
     q_expr = (
         f"transform({z}, s -> CASE WHEN s.mx = s.mn THEN 0 ELSE "
@@ -753,7 +748,7 @@ def quantized_vectors(
     return (
         emb.join(F.broadcast(stats))
         .withColumn("q", F.expr(q_expr))
-        .select("vec_id", "q", *keep)
+        .select("vec_id", "q", "embedding", "mn", "mx")
     )
 
 

@@ -10,11 +10,12 @@ Both are deterministic (the salt is a hash of a carried column, not
 rand()), so results — and the DuckDB oracles — are exactly reproducible.
 
   salted_agg : two-phase aggregation — groupBy(key, salt) partial, then
-               groupBy(key) final. The hot key fans out over ``buckets``
-               tasks in phase 1; phase 2 only merges ``buckets`` rows/key.
+               groupBy(key) final. The hot key fans out over
+               ``SALT_BUCKETS`` tasks in phase 1; phase 2 only merges
+               ``SALT_BUCKETS`` rows/key.
   salted_join: fact side salted by a deterministic hash, dimension side
-               replicated ``buckets`` times — the hot join key's rows
-               spread over ``buckets`` tasks instead of one.
+               replicated ``SALT_BUCKETS`` times — the hot join key's rows
+               spread over ``SALT_BUCKETS`` tasks instead of one.
 """
 
 from __future__ import annotations
@@ -23,18 +24,17 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def _salt(col: Column, buckets: int) -> Column:
-    """Deterministic salt in [0, buckets): xxhash64 of a carried column."""
-    return F.pmod(F.xxhash64(col), F.lit(buckets)).cast("int")
+SALT_BUCKETS = 16
+
+
+def _salt(col: Column) -> Column:
+    """Deterministic salt in [0, SALT_BUCKETS): xxhash64 of a carried
+    column."""
+    return F.pmod(F.xxhash64(col), F.lit(SALT_BUCKETS)).cast("int")
 
 
 def salted_agg(
-    df: DataFrame,
-    key: str,
-    aggs: list[tuple[str, str, str]],
-    *,
-    salt_col: str,
-    buckets: int = 16,
+    df: DataFrame, key: str, aggs: list[tuple[str, str, str]], *, salt_col: str
 ) -> DataFrame:
     """Two-phase skew-safe aggregation.
 
@@ -44,7 +44,7 @@ def salted_agg(
     for COUNT(*) semantics; a named column gives SQL COUNT(col), which
     skips nulls — the two differ whenever the column is nullable.
     """
-    salted = df.withColumn("__salt", _salt(F.col(salt_col), buckets))
+    salted = df.withColumn("__salt", _salt(F.col(salt_col)))
     partial_exprs = []
     final_exprs = []
     for fn, col, alias in aggs:
@@ -72,17 +72,16 @@ def salted_join(
     on: str,
     *,
     salt_col: str,
-    buckets: int = 16,
     how: str = "inner",
 ) -> DataFrame:
     """Skew-safe equi-join: fact rows salt deterministically; the dimension
     replicates once per salt value (dim must be the small side — its size
-    multiplies by ``buckets``).
+    multiplies by ``SALT_BUCKETS``).
 
     Only fact-side-preserving joins are legal: the dim side is replicated
-    ``buckets`` times, so any ``how`` that emits unmatched DIM rows
+    ``SALT_BUCKETS`` times, so any ``how`` that emits unmatched DIM rows
     (right/full outer) would surface each unmatched replica as its own
-    spurious output row — up to ``buckets`` duplicates per dim key. The
+    spurious output row — up to ``SALT_BUCKETS`` duplicates per dim key. The
     guard raises rather than silently corrupting the result.
     """
     allowed = {"inner", "left", "left_outer", "leftouter", "left_semi",
@@ -93,9 +92,9 @@ def salted_join(
             "unmatched dim keys (dim is exploded once per salt bucket); "
             f"only fact-preserving joins are salt-safe: {sorted(allowed)}"
         )
-    f = fact.withColumn("__salt", _salt(F.col(salt_col), buckets))
+    f = fact.withColumn("__salt", _salt(F.col(salt_col)))
     d = dim.withColumn(
-        "__salt", F.explode(F.sequence(F.lit(0), F.lit(buckets - 1)))
+        "__salt", F.explode(F.sequence(F.lit(0), F.lit(SALT_BUCKETS - 1)))
     )
     joined = f.join(d, [on, "__salt"], how)
     return joined.drop("__salt")
@@ -122,8 +121,8 @@ from xgboost_ray_spark.registry import register, sql_dsum  # noqa: E402
     GROUP BY event_type
     """,
     doc="Skew-safe two-phase aggregation: groupBy(event_type, salt) partial "
-        "then groupBy(event_type) final — a hot key fans out over 16 tasks "
-        "in phase 1 instead of landing on one. Deterministic salt "
+        "then groupBy(event_type) final — a hot key fans out over "
+        f"{SALT_BUCKETS} tasks in phase 1 instead of landing on one. Deterministic salt "
         "(xxhash64 of event_id), so the answer — and the oracle — is the "
         "plain GROUP BY.",
     tags=("agg", "skew"),
@@ -143,7 +142,6 @@ def s09c_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             ("max", "value", "max_value"),
         ],
         salt_col="event_id",
-        buckets=16,
     )
     return out.select(
         "event_type",
@@ -163,8 +161,9 @@ def s09c_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN customer ON user_id = c_custkey
     GROUP BY c_mktsegment
     """,
-    doc="Skew-safe fact-dim join: events salt on event_id (16 buckets), "
-        "customer replicates 16x — a hot user_id spreads over 16 tasks. "
+    doc=f"Skew-safe fact-dim join: events salt on event_id ({SALT_BUCKETS} "
+        f"buckets), customer replicates {SALT_BUCKETS}x — a hot user_id "
+        f"spreads over {SALT_BUCKETS} tasks. "
         "Used when the dim is broadcast-ineligible and AQE's sort-merge "
         "skew split cannot apply. Answer identical to the plain join.",
     tags=("join", "skew"),
@@ -176,7 +175,7 @@ def s05b_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from xgboost_ray_spark.registry import dsum
 
-    joined = salted_join(ev, cust, "user_id", salt_col="event_id", buckets=16)
+    joined = salted_join(ev, cust, "user_id", salt_col="event_id")
     return joined.groupBy("c_mktsegment").agg(
         F.count("*").alias("n_events"),
         dsum(F.col("value"), "sum_value"),

@@ -281,9 +281,9 @@ def s29i_map_in_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
 # S29j — Unicode NFC normalization (pandas UDF; no JVM builtin exists)
 # ---------------------------------------------------------------------------
 
-def nfc_normalize(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def nfc_normalize(docs: DataFrame) -> DataFrame:
     """(doc_id, norm_hash, bytes_before, bytes_after, changed) — Unicode
-    NFC canonical composition of the text column.
+    NFC canonical composition of ``text``.
 
     Real corpora mix precomposed and combining-mark encodings of the
     same glyphs ("e" + U+0301 vs "é"); exact dedup, shingle hashing and
@@ -302,7 +302,7 @@ def nfc_normalize(docs: DataFrame, text_col: str = "text") -> DataFrame:
             lambda t: None if t is None else unicodedata.normalize("NFC", t)
         )
 
-    raw = F.col(text_col)
+    raw = F.col("text")
     norm = _nfc(raw)
     return docs.select(
         "doc_id",

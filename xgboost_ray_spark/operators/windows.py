@@ -170,18 +170,16 @@ def top_k_per_group(
     group_cols: list[str],
     order_cols: list,
     k: int,
-    rank_col: str | None = None,
+    rank_col: str,
 ) -> DataFrame:
     """Generic top-k per group via row_number ≤ k.
 
     One shuffle on the group key; at scale Spark evaluates the rank with a
     partial sort (WindowGroupLimit pushes the k-bound below the shuffle),
     and AQE handles group-key skew.  ``order_cols`` must be a total order
-    for deterministic output.  Pass ``rank_col`` to keep the 1-based rank
-    in the output (dropped otherwise).
+    for deterministic output.  The 1-based rank is kept in ``rank_col``.
     """
-    keep = rank_col is not None
-    if keep and rank_col in df.columns:
+    if rank_col in df.columns:
         # withColumn would silently REPLACE the data column with the
         # 1-based rank — right rows, corrupted values. Fail loud instead
         # (the repo-wide generic-helper policy).
@@ -189,14 +187,10 @@ def top_k_per_group(
             f"top_k_per_group: rank_col {rank_col!r} already exists in the "
             f"input; pick a name not in {sorted(df.columns)}"
         )
-    rc = rank_col or "__rn"
-    while not keep and rc in df.columns:
-        rc += "x"
     w = W.partitionBy(*group_cols).orderBy(*order_cols)
-    out = df.withColumn(rc, F.row_number().over(w).cast("bigint")).filter(
-        F.col(rc) <= k
-    )
-    return out if keep else out.drop(rc)
+    return df.withColumn(
+        rank_col, F.row_number().over(w).cast("bigint")
+    ).filter(F.col(rank_col) <= k)
 
 
 @register(

@@ -35,10 +35,10 @@ from pyspark.sql import functions as F
 Z_BITS = 8  # bits per dimension; 2 cols x 8 bits = 16-bit z-values
 
 
-def _scaled_code(col: str, mn: Column, mx: Column, bits: int) -> Column:
-    """Affine-scale a numeric column into [0, 2^bits) as a bigint.
+def _scaled_code(col: str, mn: Column, mx: Column) -> Column:
+    """Affine-scale a numeric column into [0, 2^Z_BITS) as a bigint.
     Constant columns map to 0 (divide-by-zero guard)."""
-    top = (1 << bits) - 1
+    top = (1 << Z_BITS) - 1
     spread = mx.cast("double") - mn.cast("double")
     scaled = F.floor(
         (F.col(col).cast("double") - mn.cast("double")) / spread * top
@@ -76,9 +76,7 @@ def zorder_value(codes: Sequence[Column], bits: int = Z_BITS) -> Column:
     return z
 
 
-def zorder_cluster(
-    df: DataFrame, cols: Sequence[str], num_files: int, bits: int = Z_BITS
-) -> DataFrame:
+def zorder_cluster(df: DataFrame, cols: Sequence[str], num_files: int) -> DataFrame:
     """Return ``df`` range-clustered by the z-order of ``cols``, ready to
     write with ``num_files`` output tasks. One stats pass (broadcast single
     row) + one range shuffle; no Python in the row path."""
@@ -87,11 +85,8 @@ def zorder_cluster(
         *[F.max(c).alias(f"_mx_{c}") for c in cols],
     )
     with_stats = df.join(F.broadcast(stats))
-    codes = [
-        _scaled_code(c, F.col(f"_mn_{c}"), F.col(f"_mx_{c}"), bits)
-        for c in cols
-    ]
-    z = zorder_value(codes, bits)
+    codes = [_scaled_code(c, F.col(f"_mn_{c}"), F.col(f"_mx_{c}")) for c in cols]
+    z = zorder_value(codes)
     return (
         with_stats.withColumn("_z", z)
         .repartitionByRange(num_files, "_z")
@@ -101,12 +96,9 @@ def zorder_cluster(
 
 
 def write_zordered(
-    df: DataFrame,
-    path: str,
-    cols: Sequence[str],
-    num_files: int,
-    bits: int = Z_BITS,
-    mode: str = "overwrite",
+    df: DataFrame, path: str, cols: Sequence[str], num_files: int
 ) -> None:
-    """Write ``df`` as a z-order-clustered parquet table."""
-    zorder_cluster(df, cols, num_files, bits).write.mode(mode).parquet(path)
+    """Write ``df`` as a z-order-clustered parquet table at a fresh
+    ``path``; an existing path fails the write (error-if-exists mode)
+    instead of being replaced."""
+    zorder_cluster(df, cols, num_files).write.parquet(path)

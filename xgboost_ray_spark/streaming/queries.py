@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from xgboost_ray_spark.operators.profile import OUTLIER_FLAGS_SQL
 from xgboost_ray_spark.registry import dsum, register, sql_dsum
 from xgboost_ray_spark.streaming.windows import (
+    WATERMARK,
     read_events_stream,
     read_table_stream,
     run_stream_to_memory,
@@ -39,7 +40,7 @@ from xgboost_ray_spark.streaming.windows import (
     tags=("streaming",),
 )
 def s25_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    agg = windowed_counts(read_events_stream(spark, sf_dir), "1 hour")
+    agg = windowed_counts(read_events_stream(spark, sf_dir))
     return run_stream_to_memory(agg, spark)
 
 
@@ -61,9 +62,7 @@ def s25_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming",),
 )
 def s25b_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    agg = windowed_counts(
-        read_events_stream(spark, sf_dir), "1 hour", slide="30 minutes"
-    )
+    agg = windowed_counts(read_events_stream(spark, sf_dir), slide="30 minutes")
     return run_stream_to_memory(agg, spark)
 
 
@@ -77,9 +76,7 @@ def s25b_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming",),
 )
 def s25c_stream_watermark_append(spark: SparkSession, sf_dir: str) -> DataFrame:
-    agg = windowed_counts(
-        read_events_stream(spark, sf_dir), "1 hour", watermark="10 minutes"
-    )
+    agg = windowed_counts(read_events_stream(spark, sf_dir), watermark=WATERMARK)
     return run_stream_to_memory(agg, spark, output_mode="append")
 
 
@@ -528,7 +525,7 @@ def s25j_stream_trending(spark: SparkSession, sf_dir: str) -> DataFrame:
 def s25k_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
-    ev = read_events_stream(spark, sf_dir).withWatermark("ts", "10 minutes")
+    ev = read_events_stream(spark, sf_dir).withWatermark("ts", WATERMARK)
     agg = (
         ev.groupBy(
             F.session_window("ts", "30 minutes").alias("sw"), "user_id"

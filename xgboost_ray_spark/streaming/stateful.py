@@ -36,6 +36,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
+from xgboost_ray_spark.streaming.windows import WATERMARK
+
 GAP_US = 30 * 60 * 1_000_000
 _Q6 = Decimal("0.000001")
 
@@ -222,12 +224,12 @@ def close_user_sessions(
         )
 
 
-def sessionize_stream(events: DataFrame, watermark: str = "10 minutes") -> DataFrame:
+def sessionize_stream(events: DataFrame) -> DataFrame:
     """Stateful sessionization over a streaming events frame."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", WATERMARK)
         .select("user_id", "ts", "event_id", "value")
         .groupBy("user_id")
         .applyInPandasWithState(

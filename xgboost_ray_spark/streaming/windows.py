@@ -61,15 +61,19 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return read_table_stream(spark, sf_dir, "events")
 
 
+WINDOW = "1 hour"  # event-time window length of every windowed entry
+# Event-time watermark delay of every watermarked entry (s25c, s25d,
+# s25k); the s25d and s25k oracles spell it as 600000 ms.
+WATERMARK = "10 minutes"
+
+
 def windowed_counts(
-    events: DataFrame,
-    window: str = "1 hour",
-    slide: str | None = None,
-    watermark: str | None = None,
+    events: DataFrame, slide: str | None = None, watermark: str | None = None
 ) -> DataFrame:
-    """Tumbling (or sliding, if ``slide``) event-time window aggregation."""
+    """Tumbling (or sliding, if ``slide``) ``WINDOW`` event-time
+    aggregation."""
     src = events.withWatermark("ts", watermark) if watermark else events
-    win = F.window("ts", window, slide) if slide else F.window("ts", window)
+    win = F.window("ts", WINDOW, slide) if slide else F.window("ts", WINDOW)
     return (
         src.groupBy(win.alias("w"), "event_type")
         .agg(
