@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 from xgboost_ray_spark.catalog import load_table, scratch_path
 from xgboost_ray_spark.session import get_spark
 from xgboost_ray_spark.streaming.windows import (
-    read_events_stream,
+    read_table_stream,
     run_stream_to_files,
 )
 
@@ -45,7 +45,7 @@ def main(sf_dir: str = "/root/testdata/sf0.001") -> dict:
     spark = get_spark(app_name="example-streaming-ingest")
 
     etl = (
-        read_events_stream(spark, sf_dir)
+        read_table_stream(spark, sf_dir, "events")
         .filter(F.col("event_type") == "purchase")
         .withWatermark("ts", "1 hour")
         # dropDuplicatesWithinWatermark, NOT plain dropDuplicates: without

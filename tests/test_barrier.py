@@ -322,45 +322,12 @@ def test_prepare_shards_rejects_null_qids(spark):
     assert prepared.count() == 2
 
 
-def test_version_band_padding():
-    """parse_version_band pads to two components: a one-part '3' must
-    compare as (3, 0) — bare (3,) sorts below (3, 0) under tuple-prefix
-    ordering, so the < (3, 0) ceiling would silently pass and the
-    out-of-range warning for a 3.x build would be skipped."""
-    from xgboost_ray_spark.ml.stopping import parse_version_band
-
-    assert parse_version_band("1.7.6") == (1, 7)
-    assert parse_version_band("2.1.0rc1") == (2, 1)
-    assert parse_version_band("3.0.0") == (3, 0)
-    assert parse_version_band("3") == (3, 0)
-    # first digit RUN only: joining ALL digits would read 1.6rc9 as
-    # (1, 69) and wave a below-band build past the (1, 7) floor, while
-    # a start-anchored match would read v1.7.6 as (0, 7) and warn
-    # spuriously on an in-band install
-    assert parse_version_band("1.6rc9") == (1, 6)
-    assert parse_version_band("2.0rc1") == (2, 0)
-    assert parse_version_band("v1.7.6") == (1, 7)
-    # PEP 440 epoch prefix is stripped, not read as the major: without
-    # the strip, '1!2.0' would parse as (1, 0) and an in-band
-    # epoch-tagged build would warn spuriously
-    assert parse_version_band("1!2.0") == (2, 0)
-    assert parse_version_band("1!1.6rc9") == (1, 6)
-    # the strip composes with the v-prefix the function already supports
-    assert parse_version_band("v1!2.0") == (2, 0)
-    # the guard that motivated the pad: "3" is OUT of the verified band
-    band = lambda v: (1, 7) <= parse_version_band(v) < (3, 0)  # noqa: E731
-    assert band("1.7.6") and band("2.1.4")
-    assert not band("3") and not band("3.0.0") and not band("1.6.2")
-    assert not band("1.6rc9")
-
-
 def test_prepare_shards_shuffles_exactly_once(spark):
     """prepare_shards must repartition the tagged UNION once — not each
-    input frame. MatrixSpec.prepare used to insert a per-frame qid
-    repartition+sort whose output ordering the union shuffle then threw
-    away: with k eval sets that is k+1 wasted full shuffles of the
-    training data at cluster scale. The optimized plan may carry exactly
-    ONE repartition node."""
+    input frame. A per-frame qid repartition+sort would have its output
+    ordering thrown away by the union shuffle: with k eval sets that is
+    k+1 wasted full shuffles of the training data at cluster scale. The
+    optimized plan may carry exactly ONE repartition node."""
     from xgboost_ray_spark.matrix import MatrixSpec
     from xgboost_ray_spark.ml.barrier import prepare_shards
 
@@ -373,11 +340,38 @@ def test_prepare_shards_shuffles_exactly_once(spark):
     )
     plan = prepared._jdf.queryExecution().optimizedPlan().toString()
     assert plan.count("RepartitionByExpression") == 1, plan
-    # cluster=False must be a pure projection — no shuffle of its own.
-    flat = spec.prepare(df, cluster=False)
+    # MatrixSpec.prepare is a pure projection — no shuffle of its own.
+    flat = spec.prepare(df)
     flat_plan = flat._jdf.queryExecution().optimizedPlan().toString()
     assert "Repartition" not in flat_plan, flat_plan
-    # cluster=True (the standalone single-frame path) still clusters.
-    clustered = spec.prepare(df)
-    cl_plan = clustered._jdf.queryExecution().optimizedPlan().toString()
-    assert "RepartitionByExpression" in cl_plan, cl_plan
+
+
+def test_prepare_shards_and_mllib_training_carry_the_same_columns(spark):
+    """Both training paths carry one column list, in one order: the
+    features, then MatrixSpec.roles() (labels, weight, base_margin, qid,
+    label bounds). A role dropped or reordered on one path only would
+    train the two backends on different inputs."""
+    from xgboost_ray_spark.matrix import MatrixSpec
+    from xgboost_ray_spark.ml.barrier import prepare_shards
+    from xgboost_ray_spark.ml.train import FEATURES_COL, assemble_features
+
+    roles = ["y", "w", "m", "q", "lo", "hi"]
+    df = spark.createDataFrame(
+        [(1.0, 2.0, 0.0, 1.0, 1.0, 0.0, 1, 0.5, 1.5, 9.0)],
+        ["f0", "f1", "extra", "y", "w", "m", "q", "lo", "hi", "junk"],
+    )
+    spec = MatrixSpec(
+        label_cols=("y",),
+        weight_col="w",
+        base_margin_col="m",
+        qid_col="q",
+        label_lower_bound_col="lo",
+        label_upper_bound_col="hi",
+        ignore=("junk", "extra"),
+    )
+    assert list(spec.roles()) == roles
+    want = ["f0", "f1", *roles]
+    assembled = assemble_features(df, spec)
+    assert [c for c in assembled.columns if c != FEATURES_COL] == want
+    _, cols, *_ = prepare_shards(df, spec, num_workers=2)
+    assert cols == want

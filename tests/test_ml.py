@@ -381,27 +381,6 @@ def test_role_cols_union(spark):
     assert spec.role_cols() == {"y", "w", "q", "i"}
 
 
-def test_qid_groups_land_whole_per_partition(spark):
-    """qid clustering — the reference's sort-by-qid invariant
-    (matrix.py:70-102): every query group contiguous in one shard."""
-    rows = [(i % 10, float(i)) for i in range(200)]
-    df = spark.createDataFrame(rows, ["qid", "f"])
-    spec = MatrixSpec(qid_col="qid")
-    prepared = spec.prepare(df)
-
-    def check(it):
-        import pandas as pd
-
-        for pdf in it:
-            if len(pdf):
-                # sorted within partition
-                assert (pdf["qid"].values == np.sort(pdf["qid"].values)).all()
-                yield pd.DataFrame({"qid": pdf["qid"].unique()})
-
-    seen = prepared.mapInPandas(check, "qid int").groupBy("qid").count()
-    assert seen.filter(F.col("count") > 1).count() == 0  # no group split
-
-
 # ---------------------------------------------------------------------------
 # Fault tolerance (reference tests/test_fault_tolerance.py: kill an actor
 # mid-run, training must still complete with correct results)
@@ -602,18 +581,6 @@ def test_survival_and_margin_roles_accepted(spark):
     assert spec.features_of(df) == ["f0", "f1"]
 
 
-def test_train_rejects_unknown_backend(spark):
-    """A backend typo ('xgboost' for 'xgb') must raise, not silently fall
-    through to the MLlib branch and report success under the wrong
-    engine."""
-    df = spark.createDataFrame(
-        [(1.0, 2.0, 0)], "f1 double, f2 double, label int"
-    )
-    spec = MatrixSpec(label_cols=("label",), feature_cols=("f1", "f2"))
-    with pytest.raises(ValueError, match="unknown backend"):
-        train({}, df, spec, num_boost_round=1, backend="xgboost")
-
-
 @pytest.mark.parametrize("max_restarts", [0, 1])
 def test_mllib_fit_failure_restarts_then_propagates(spark, monkeypatch, max_restarts):
     """The MLlib backend shares the xgb backend's restart loop: a fit that
@@ -641,7 +608,6 @@ def test_mllib_fit_failure_restarts_then_propagates(spark, monkeypatch, max_rest
             spec,
             num_boost_round=2,
             gbt_params=GBTParams(num_workers=2, max_restarts=max_restarts),
-            backend="mllib",
         )
 
     if max_restarts:
@@ -651,6 +617,38 @@ def test_mllib_fit_failure_restarts_then_propagates(spark, monkeypatch, max_rest
         with pytest.raises(RuntimeError, match="^injected fit failure$"):
             run()
         assert len(calls) == 1
+
+
+def test_mllib_ranker_fit_input_is_not_clustered_by_qid(spark, monkeypatch):
+    """The MLlib ranker is a pointwise GBTRegressor that never reads qid,
+    so the frame train() hands it carries no qid hash exchange: query
+    groups are clustered only where DMatrix(qid=...) reads them
+    (prepare_shards)."""
+    from pyspark.ml.regression import GBTRegressor
+
+    from xgboost_ray_spark.plans.explain import formatted_plan
+
+    real_fit = GBTRegressor._fit
+    plans = []
+
+    def capturing_fit(self, dataset):
+        plans.append(formatted_plan(dataset))
+        return real_fit(self, dataset)
+
+    monkeypatch.setattr(GBTRegressor, "_fit", capturing_fit)
+    rows = [
+        (float(q + i), float(i % 2), q, i % 2) for q in range(8) for i in range(4)
+    ]
+    df = spark.createDataFrame(rows, "f0 double, f1 double, qid int, rel int")
+    spec = MatrixSpec(
+        label_cols=("rel",), feature_cols=("f0", "f1"), qid_col="qid"
+    )
+    train(
+        {"objective": "rank:pairwise", "max_depth": 2},
+        df, spec, num_boost_round=2,
+    )
+    assert len(plans) == 1
+    assert "hashpartitioning(qid" not in plans[0], plans[0]
 
 
 def test_predict_dispatches_transformless_model_to_barrier(spark, monkeypatch):

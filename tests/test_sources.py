@@ -128,9 +128,9 @@ def _load_events(spark, sf_dir):
 
 
 def _stream_events(spark, sf_dir):
-    from xgboost_ray_spark.streaming.windows import read_events_stream
+    from xgboost_ray_spark.streaming.windows import read_table_stream
 
-    return read_events_stream(spark, sf_dir)
+    return read_table_stream(spark, sf_dir, "events")
 
 
 @pytest.mark.parametrize("reader", [_load_events, _stream_events])

@@ -27,7 +27,7 @@ insists on a local numpy array in input order — provided here for API parity.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from enum import Enum
 
 import numpy as np
@@ -82,18 +82,24 @@ class MatrixSpec:
                 f"got {self.matrix_type!r}"
             )
 
+    def roles(self) -> tuple[str, ...]:
+        """The set role columns in one fixed order: labels, weight,
+        base_margin, qid, label bounds."""
+        return tuple(self.label_cols) + tuple(
+            c
+            for c in (
+                self.weight_col,
+                self.base_margin_col,
+                self.qid_col,
+                self.label_lower_bound_col,
+                self.label_upper_bound_col,
+            )
+            if c
+        )
+
     def role_cols(self) -> set[str]:
-        roles = set(self.label_cols) | set(self.ignore)
-        for c in (
-            self.weight_col,
-            self.base_margin_col,
-            self.qid_col,
-            self.label_lower_bound_col,
-            self.label_upper_bound_col,
-        ):
-            if c:
-                roles.add(c)
-        return roles
+        """Every column that is never a feature: the roles and ``ignore``."""
+        return set(self.roles()) | set(self.ignore)
 
     def features_of(self, df: DataFrame) -> list[str]:
         """Feature columns, input order preserved (matrix.py:345-347).
@@ -107,25 +113,22 @@ class MatrixSpec:
         roles = self.role_cols() | {SHARD_COL, ROW_ID_COL}
         return [c for c in df.columns if c not in roles]
 
-    def prepare(self, df: DataFrame, *, cluster: bool = True) -> DataFrame:
-        """Apply ``ignore`` projection and qid clustering.
+    def training_cols(self, df: DataFrame) -> list[str]:
+        """The columns both training paths carry (reference
+        _split_dataframe, matrix.py:283-358): the features, then
+        ``roles()``, each once."""
+        return list(dict.fromkeys([*self.features_of(df), *self.roles()]))
 
-        The reference sorts each shard by qid before DMatrix construction
-        (ensure_sorted_by_qid, matrix.py:70-102).  Spark equivalent: hash
-        the frame by qid then sort within partitions — every query group
-        lands whole and contiguous in one partition, no global sort.
+    def prepare(self, df: DataFrame) -> DataFrame:
+        """Apply the ``ignore`` projection — a plan-time column drop.
 
-        ``cluster=False`` skips the qid repartition+sort and applies only
-        the projection — for callers that do their own qid clustering on
-        a downstream union (``prepare_shards``), where the per-frame
-        shuffle+sort would be executed and immediately discarded.
-        """
-        out = df.drop(*[c for c in self.ignore if c in df.columns])
-        if cluster and self.qid_col:
-            out = out.repartition(F.col(self.qid_col)).sortWithinPartitions(
-                self.qid_col
-            )
-        return out
+        Query groups are not clustered here: the reference sorts rows by
+        qid only because ``DMatrix(qid=...)`` needs it
+        (ensure_sorted_by_qid, matrix.py:70-102), so the one qid
+        repartition + sort lives in ``ml.barrier.prepare_shards``, where
+        the DMatrix is built. The MLlib ranker is pointwise and never
+        reads qid."""
+        return df.drop(*[c for c in self.ignore if c in df.columns])
 
 
 def _with_contiguous_index(df: DataFrame, idx_col: str) -> DataFrame:

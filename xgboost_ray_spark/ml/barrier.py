@@ -123,26 +123,13 @@ def prepare_shards(
     stay whole and sorted) are unit-testable in environments without
     xgboost (tests/test_barrier.py pattern).
     """
-    feats = spec.features_of(spec.prepare(dtrain, cluster=False))
+    train = spec.prepare(dtrain)
+    feats = spec.features_of(train)
     label_col = spec.label_cols[0]
-    # Every role column rides the shard (reference _split_dataframe,
-    # matrix.py:283-358): weight, base_margin, survival label bounds, qid.
-    extra_roles = [
-        c
-        for c in (
-            spec.weight_col,
-            spec.base_margin_col,
-            spec.label_lower_bound_col,
-            spec.label_upper_bound_col,
-            spec.qid_col,
-        )
-        if c
-    ]
-    cols = list(feats) + [label_col] + extra_roles
-    # cluster=False: the union below gets ONE qid repartition+sort across
-    # all sets; per-frame clustering here would be a full shuffle+sort of
-    # every frame whose output ordering the union shuffle then discards.
-    tagged = spec.prepare(dtrain, cluster=False).select(*cols).withColumn(
+    # Every role column rides the shard, in assemble_features' order.
+    cols = spec.training_cols(train)
+    # The union below gets the ONE qid repartition+sort across all sets.
+    tagged = train.select(*cols).withColumn(
         "__set__", F.lit("train")
     )
     eval_names: list[str] = []
@@ -151,7 +138,7 @@ def prepare_shards(
             raise ValueError("eval set name 'train' is reserved")
         eval_names.append(eval_name)
         tagged = tagged.unionByName(
-            spec.prepare(eval_df, cluster=False).select(*cols).withColumn(
+            spec.prepare(eval_df).select(*cols).withColumn(
                 "__set__", F.lit(eval_name)
             )
         )
@@ -202,10 +189,7 @@ def train_barrier(
     import xgboost as xgb
     from xgboost.tracker import RabitTracker
 
-    from xgboost_ray_spark.ml.callback import (
-        DistributedCallbackContainer,
-        WorkerContext,
-    )
+    from xgboost_ray_spark.ml.callback import WorkerContext, fire_hook
     from xgboost_ray_spark.ml.train import TrainResult
 
     num_workers = gbt.num_workers
@@ -259,12 +243,11 @@ def train_barrier(
             ctx = BarrierTaskContext.get()
             rank = ctx.partitionId()
             # Per-worker lifecycle hooks with true rank (callback.py:14-58).
-            container = DistributedCallbackContainer(callbacks)
             cb_ctx = WorkerContext(rank=rank, num_workers=num_workers)
-            container.on_init(cb_ctx)
+            fire_hook(callbacks, "on_init", cb_ctx)
             if cpus:
                 os.environ["OMP_NUM_THREADS"] = str(cpus)  # main.py:355-362
-            container.before_data_loading(cb_ctx)
+            fire_hook(callbacks, "before_data_loading", cb_ctx)
             parts = list(batches)
             if parts:
                 pdf = pd.concat(parts, ignore_index=True)
@@ -277,9 +260,9 @@ def train_barrier(
                     {c: pd.Series(dtype="float64") for c in cols}
                     | {"__set__": pd.Series(dtype=object)}
                 )
-            container.after_data_loading(cb_ctx)
+            fire_hook(callbacks, "after_data_loading", cb_ctx)
             ctx.barrier()
-            container.before_train(cb_ctx)
+            fire_hook(callbacks, "before_train", cb_ctx)
 
             # Rank-0 periodic checkpoint (reference _save_checkpoint_callback,
             # main.py:612-626): a worker death mid-training resumes from the
@@ -297,8 +280,8 @@ def train_barrier(
                 train_callbacks.append(_Checkpoint())
 
             if gbt.stop_flag_path:
-                # Cooperative stop (R22): every worker polls the shared
-                # flag once per iteration; the allreduce keeps ranks in
+                # Cooperative stop: every worker polls the shared flag
+                # once per iteration; the allreduce keeps ranks in
                 # lockstep so they all end on the same round.
                 from xgboost_ray_spark.ml.stopping import (
                     StopFlag,
@@ -337,7 +320,7 @@ def train_barrier(
                         # qid-clustered and -sorted from the shard prep.
                         kwargs["qid"] = frame[spec.qid_col]
                     if spec.matrix_type == "quantile":
-                        # R17 quantile path (reference matrix.py:977,
+                        # Quantile path (reference matrix.py:977,
                         # main.py:379-445): bins are computed once at
                         # construction; eval sets MUST bin against the
                         # train matrix (ref=) or their histograms disagree.
@@ -365,7 +348,7 @@ def train_barrier(
                     if prev_model_bytes
                     else None,
                 )
-            container.after_train(cb_ctx, result=None)
+            fire_hook(callbacks, "after_train", cb_ctx, result=None)
             # EVERY rank ships its put_queue'd items (the reference's
             # session.put_queue delivers from all actors, main.py:902-922)
             # — rank 0 alone carrying them would silently drop the other
@@ -418,7 +401,6 @@ def train_barrier(
         evals_result=evals_result,
         train_time_s=elapsed,
         backend="xgb",
-        num_workers=num_workers,
         queued=queued,
     )
 
@@ -435,7 +417,7 @@ def predict_barrier(booster_bytes: bytes, data: DataFrame, spec: MatrixSpec,
 
     spark = data.sparkSession
     bc = spark.sparkContext.broadcast(booster_bytes)
-    feats = spec.features_of(spec.prepare(data, cluster=False))
+    feats = spec.features_of(spec.prepare(data))
     # COPY the schema before extending it: DataFrame.schema is a cached
     # property returning one shared StructType, and StructType.add
     # mutates it in place — extending it directly would corrupt the
@@ -472,7 +454,7 @@ def predict_proba_barrier(
     class (reference sklearn.py:851-865)."""
     spark = data.sparkSession
     bc = spark.sparkContext.broadcast(booster_bytes)
-    feats = spec.features_of(spec.prepare(data, cluster=False))
+    feats = spec.features_of(spec.prepare(data))
     # Copy-then-extend, same reason as predict_barrier: schema.add
     # mutates the frame's cached StructType in place. Explicit ArrayType:
     # add()'s string form parses only simple type names, not array<...>.

@@ -1,7 +1,7 @@
 """Distributed lifecycle callbacks + worker session API.
 
 Parity with the reference's ``DistributedCallback``
-(xgboost_ray/callback.py:14-58, container :62-102) and the worker session
+(xgboost_ray/callback.py:14-58, fan-out :62-102) and the worker session
 helpers (xgboost_ray/session.py:8-81):
 
   reference                              here
@@ -45,7 +45,7 @@ class DistributedCallback:
     def before_train(self, ctx: "WorkerContext", **kwargs: Any) -> None:
         pass
 
-    def after_train(self, ctx: "WorkerContext", result: Any = None, **kwargs: Any) -> None:
+    def after_train(self, ctx: "WorkerContext", result: Any, **kwargs: Any) -> None:
         pass
 
 
@@ -64,30 +64,16 @@ class WorkerContext:
         self.queued.append(item)
 
 
-class DistributedCallbackContainer:
-    """Fan-out invoker — parity: callback.py:62-102."""
-
-    def __init__(self, callbacks: Sequence[DistributedCallback] | None):
-        self.callbacks = list(callbacks or [])
-
-    def _invoke(self, hook: str, ctx: WorkerContext, **kwargs: Any) -> None:
-        for cb in self.callbacks:
-            getattr(cb, hook)(ctx, **kwargs)
-
-    def on_init(self, ctx, **kw):
-        self._invoke("on_init", ctx, **kw)
-
-    def before_data_loading(self, ctx, **kw):
-        self._invoke("before_data_loading", ctx, **kw)
-
-    def after_data_loading(self, ctx, **kw):
-        self._invoke("after_data_loading", ctx, **kw)
-
-    def before_train(self, ctx, **kw):
-        self._invoke("before_train", ctx, **kw)
-
-    def after_train(self, ctx, **kw):
-        self._invoke("after_train", ctx, **kw)
+def fire_hook(
+    callbacks: Sequence[DistributedCallback] | None,
+    hook: str,
+    ctx: WorkerContext,
+    **kwargs: Any,
+) -> None:
+    """Run ``hook`` on every callback in list order — the reference's
+    container fan-out (callback.py:62-102)."""
+    for cb in callbacks or ():
+        getattr(cb, hook)(ctx, **kwargs)
 
 
 def get_worker_rank() -> int:

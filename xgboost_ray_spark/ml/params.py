@@ -38,7 +38,7 @@ class GBTParams:
     checkpoint_frequency: int = 5
     checkpoint_path: str | None = None
     seed: int = 42
-    # Cooperative-stop flag path (reference R22 Event actor; see
+    # Cooperative-stop flag path (the reference's stop Event actor; see
     # ml/stopping.py). When set, both backends honor a stop request
     # between restart attempts, and the xgboost backend additionally
     # polls it each boosting iteration.

@@ -1,4 +1,5 @@
-"""Registry entries for the ML surface (S30, R18/R20/R31).
+"""Registry entries for the ML surface (S30): GBT train/predict, the
+ranker, and the closed-form linear track.
 
 GBT training is seeded but not SQL-expressible, so these entries omit the
 oracle (the driver records rows-only checks). The real correctness gate for
@@ -81,11 +82,13 @@ def s30_gbt_train_predict(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "s30b_ltr_rank",
     oracle=None,  # ML: rows-only here; monotonicity asserted in tests/test_ml.py
-    doc="Learning-to-rank (R31 ranker / R15 qid clustering): orders grouped "
-        "by customer as query groups, binary relevance = price above "
-        "200k; trains the ranker and returns per-relevance row counts "
-        "and mean score (monotonicity — avg_score(rel=1) > "
-        "avg_score(rel=0) — asserted in tests/test_ml.py). "
+    doc="Learning-to-rank: orders grouped by customer as query groups, "
+        "binary relevance = price above 200k; trains the ranker and "
+        "returns per-relevance row counts and mean score (monotonicity — "
+        "avg_score(rel=1) > avg_score(rel=0) — asserted in "
+        "tests/test_ml.py). The MLlib ranker is a pointwise regressor "
+        "over unclustered rows; only the xgboost path's prepare_shards "
+        "sorts query groups, for DMatrix(qid=...). "
         "Parity: sklearn.py:921-1083.",
     tags=("ml", "ranking"),
 )

@@ -1,4 +1,4 @@
-"""Cooperative stop for distributed training (reference R22).
+"""Cooperative stop for distributed training.
 
 The reference stops all workers mid-training through a Ray Event actor
 polled once per boosting iteration (`main.py:628-652`, Event
@@ -24,7 +24,6 @@ are xgboost-free and unit-tested.
 from __future__ import annotations
 
 import os
-import re
 
 
 class StopFlag:
@@ -54,29 +53,6 @@ class StopFlag:
             pass
 
 
-def parse_version_band(version: str) -> tuple[int, int]:
-    """First two numeric components of an xgboost ``__version__``,
-    padded to exactly two. The pad matters: a one-part version like
-    ``"3"`` must compare as ``(3, 0)`` — the bare ``(3,)`` sorts BELOW
-    ``(3, 0)`` under tuple-prefix ordering, so ``(3,) < (3, 0)`` is True
-    and a 3.x build reporting a one-part version would silently pass the
-    ``< (3, 0)`` ceiling and skip the out-of-range warning. A component's
-    FIRST digit run is the number — joining all digits would read
-    ``1.6rc9`` as (1, 69) and wave a below-band build past the (1, 7)
-    floor, while anchoring at the start would read a ``v1.7.6``-style
-    prefixed version as (0, 7) and warn spuriously on an in-band
-    install. A PEP 440 epoch prefix (``1!2.0``) is stripped before the
-    digit-run scan — without the strip the epoch digit would read as
-    the major and an in-band epoch-tagged build would warn spuriously
-    (xgboost has never published one; handled for the same defensive
-    reason as the ``v``-prefix case)."""
-    ver = tuple(
-        int(m.group()) if (m := re.search(r"\d+", part)) else 0
-        for part in re.sub(r"^[vV]?\d+!", "", version).split(".")[:2]
-    )
-    return (ver + (0, 0))[:2]
-
-
 def make_stop_callback(flag: StopFlag):
     """xgboost ``TrainingCallback`` that ends training when the flag is
     set — the reference's per-iteration Event poll (`main.py:745-752`
@@ -91,23 +67,17 @@ def make_stop_callback(flag: StopFlag):
     allreduce and hangs waiting for a departed peer. xgboost's own
     allreduces synchronize metric VALUES, not callback return values,
     so the agreement must be explicit. Import-gated: only call when
-    xgboost is present (>=1.7 for the collective module).
+    xgboost is present.
 
     The callback depends on a specific xgboost Python collective surface
     (``collective.is_distributed``, ``collective.allreduce(np.int32
-    array, Op.MAX)``) that has shifted across xgboost majors and cannot
-    be exercised in this container (xgboost not installable) — so the
-    supported range is asserted HERE, at construction, where the failure
-    is a clear error at the API boundary instead of a worker crash deep
-    inside a barrier stage."""
+    array, Op.MAX)``) that has shifted across xgboost majors — so that
+    surface is probed HERE, at construction, where a missing piece is a
+    clear error at the API boundary instead of a worker crash deep
+    inside a barrier stage. The probe is the one check: a build that has
+    the surface is accepted whatever its version number."""
     import xgboost as xgb
 
-    # Feature-probe the exact collective surface the callback calls —
-    # raise only when it is actually MISSING (a construction-time error
-    # naming the requirement beats a worker crash mid-training), and
-    # merely warn outside the verified [1.7, 3.0) range so a 3.x that
-    # kept the API still works. A hard version wall would turn every
-    # future-major install into a failure even where nothing moved.
     try:
         from xgboost import collective as _coll
 
@@ -120,17 +90,6 @@ def make_stop_callback(flag: StopFlag):
             "— see the docstring for why unsynchronized polls hang the "
             "ring."
         ) from exc
-    ver = parse_version_band(xgb.__version__)
-    if not ((1, 7) <= ver < (3, 0)):
-        import warnings
-
-        warnings.warn(
-            f"make_stop_callback is verified against xgboost >=1.7,<3.0 "
-            f"(found {xgb.__version__}); the collective API probe passed, "
-            "but re-verify allreduce(np.int32, Op.MAX) semantics before "
-            "trusting a mid-training cooperative stop on this version.",
-            stacklevel=2,
-        )
 
     class _StopOnFlag(xgb.callback.TrainingCallback):
         def after_iteration(self, model, epoch, evals_log) -> bool:

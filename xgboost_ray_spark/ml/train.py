@@ -2,12 +2,12 @@
 
 ``train(params, dtrain, ...)`` mirrors xgboost_ray.train
 (xgboost_ray/main.py:1341): xgboost-style param dict in, trained model +
-evals_result out.  Two backends:
+evals_result out.  The backend follows ``HAS_XGBOOST`` alone:
 
   - ``xgb``   : true distributed XGBoost under Spark barrier execution
-                (ml/barrier.py) — used when the xgboost package is present.
+                (ml/barrier.py) — wherever the xgboost package imports.
   - ``mllib`` : Spark MLlib GBT (the Spark-native gradient-boosted trees) —
-                always available; objective/params are translated.
+                everywhere else; objective/params are translated.
 
 ``predict`` broadcasts the fitted model and scores with ``transform`` /
 ``mapInPandas`` — predictions stay a DataFrame column, so the reference's
@@ -50,40 +50,29 @@ class TrainResult:
     evals_result: dict = field(default_factory=dict)
     train_time_s: float = 0.0
     backend: str = "mllib"
-    num_workers: int = 1
     # Items callbacks put_queue'd — delivered at stage end (the reference's
     # live queue drain, main.py:902-922, becomes stage-end delivery).
     queued: list = field(default_factory=list)
 
 
 def assemble_features(
-    df: DataFrame,
-    spec: MatrixSpec,
-    *,
-    cluster: bool = True,
-    scoring: bool = False,
-) -> tuple[DataFrame, list[str]]:
+    df: DataFrame, spec: MatrixSpec, *, scoring: bool = False
+) -> DataFrame:
     """Project role columns and assemble the MLlib feature vector.
 
     ``scoring=True`` keeps EVERY input column riding the frame (the xgb
     backend's predict path keeps them, and a prediction that drops the
-    caller's id columns cannot be joined back); training keeps only
-    feats + roles so nothing extra rides the fit. ``cluster=False``
-    skips the qid repartition+sort — pointwise scoring does not need
-    the ranking clustering, and the shuffle is pure waste there.
+    caller's id columns cannot be joined back); training keeps
+    ``spec.training_cols`` — the columns ``prepare_shards`` carries —
+    so nothing extra rides the fit. No path clusters query
+    groups here: every MLlib learner is pointwise, and only
+    ``prepare_shards`` sorts by qid, for ``DMatrix(qid=...)``.
     """
-    df = spec.prepare(df, cluster=cluster)
+    df = spec.prepare(df)
     feats = spec.features_of(df)
     if not scoring:
-        keep = list(feats)
-        for c in (spec.label_cols or ()):
-            keep.append(c)
-        for c in (spec.weight_col, spec.qid_col, spec.base_margin_col):
-            if c:
-                keep.append(c)
-        df = df.select(*dict.fromkeys(keep))
-    assembler = VectorAssembler(inputCols=feats, outputCol=FEATURES_COL)
-    return assembler.transform(df), feats
+        df = df.select(*spec.training_cols(df))
+    return VectorAssembler(inputCols=feats, outputCol=FEATURES_COL).transform(df)
 
 
 def _mllib_estimator(params: dict, num_boost_round: int, gbt: GBTParams):
@@ -149,7 +138,8 @@ def _mllib_estimator(params: dict, num_boost_round: int, gbt: GBTParams):
         return GBTRegressor(**common), "regression"
     if objective.startswith("rank:"):
         # Pointwise ranking approximation on MLlib (true LambdaMART needs
-        # the xgboost backend); qid ordering enforced by MatrixSpec.prepare.
+        # the xgboost backend): the regressor never reads qid, so its
+        # input is not clustered by query group.
         from pyspark.ml.regression import GBTRegressor
 
         return GBTRegressor(**common), "ranking"
@@ -164,7 +154,6 @@ def train(
     *,
     evals: list[tuple[DataFrame, str]] | None = None,
     gbt_params: GBTParams | None = None,
-    backend: str | None = None,
     callbacks: list | None = None,
 ) -> TrainResult:
     """Distributed GBT training (parity: xgboost_ray/main.py:1341-1747).
@@ -174,28 +163,21 @@ def train(
     already re-runs failed stages internally, so a retry here corresponds
     to the reference's whole-training restart from checkpoint.
 
+    The backend is the xgboost barrier path wherever xgboost imports
+    (``HAS_XGBOOST``), MLlib everywhere else.
+
     ``callbacks``: DistributedCallback lifecycle hooks (reference
     callback.py:14-58). Under the mllib backend hooks run driver-side
     around load/fit (MLlib workers are opaque); under the xgb backend they
     run inside each barrier task with the true worker rank.
     """
-    from xgboost_ray_spark.ml.callback import (
-        DistributedCallbackContainer,
-        WorkerContext,
-    )
+    from xgboost_ray_spark.ml.callback import WorkerContext, fire_hook
 
     gbt = (gbt_params or GBTParams()).validated()
-    backend = backend or ("xgb" if HAS_XGBOOST else "mllib")
-    if backend not in ("xgb", "mllib"):
-        # A typo like backend='xgboost' must not silently fall through to
-        # the MLlib branch and report success under the wrong engine.
-        raise ValueError(
-            f"unknown backend {backend!r}; expected 'xgb' or 'mllib'"
-        )
     if not spec.label_cols:
         raise ValueError("MatrixSpec.label_cols is required for training")
 
-    if backend == "xgb":
+    if HAS_XGBOOST:
         from xgboost_ray_spark.ml.barrier import train_barrier
 
         return train_barrier(
@@ -203,11 +185,10 @@ def train(
             callbacks=callbacks,
         )
 
-    container = DistributedCallbackContainer(callbacks)
     cb_ctx = WorkerContext(rank=0, num_workers=gbt.num_workers)
-    container.on_init(cb_ctx)
-    container.before_data_loading(cb_ctx)
-    assembled, _ = assemble_features(dtrain, spec)
+    fire_hook(callbacks, "on_init", cb_ctx)
+    fire_hook(callbacks, "before_data_loading", cb_ctx)
+    assembled = assemble_features(dtrain, spec)
     assembled = assembled.withColumn(
         "__label__", F.col(spec.label_cols[0]).cast("double")
     )
@@ -233,8 +214,8 @@ def train(
     if assembled.rdd.getNumPartitions() < target:
         assembled = assembled.repartition(target)
     assembled = assembled.persist(StorageLevel.MEMORY_AND_DISK)
-    container.after_data_loading(cb_ctx)
-    container.before_train(cb_ctx)
+    fire_hook(callbacks, "after_data_loading", cb_ctx)
+    fire_hook(callbacks, "before_train", cb_ctx)
     from xgboost_ray_spark.ml.barrier import run_with_restarts
     from xgboost_ray_spark.ml.stopping import StopFlag
 
@@ -248,7 +229,7 @@ def train(
     finally:
         assembled.unpersist()
     elapsed = time.perf_counter() - start
-    container.after_train(cb_ctx, result=model)
+    fire_hook(callbacks, "after_train", cb_ctx, result=model)
 
     evals_result: dict = {}
     if evals:
@@ -266,9 +247,7 @@ def train(
             n_class > 2 or str(params.get("objective", "")).startswith("multi")
         )
         for eval_df, name in evals:
-            # cluster=False: metric evaluation is pointwise — the qid
-            # repartition+sort would be a wasted full shuffle.
-            ea, _ = assemble_features(eval_df, spec, cluster=False)
+            ea = assemble_features(eval_df, spec)
             ea = ea.withColumn(
                 "__label__", F.col(spec.label_cols[0]).cast("double")
             )
@@ -296,8 +275,6 @@ def train(
         model=model,
         evals_result=evals_result,
         train_time_s=elapsed,
-        backend=backend,
-        num_workers=gbt.num_workers,
         queued=cb_ctx.queued,
     )
 
@@ -330,8 +307,8 @@ def predict(
             pickle.dumps(model), data, spec, output_col=output_col
         )
     # scoring=True keeps passthrough columns (id columns etc.) like the
-    # xgb backend does; cluster=False skips the pointless qid shuffle.
-    assembled, _ = assemble_features(data, spec, cluster=False, scoring=True)
+    # xgb backend does.
+    assembled = assemble_features(data, spec, scoring=True)
     scored = model.transform(assembled)
     drop = [FEATURES_COL, "rawPrediction", "probability"]
     if output_col != "prediction" and "prediction" in scored.columns:
@@ -352,7 +329,7 @@ def predict_proba(model: Any, data: DataFrame, spec: MatrixSpec) -> DataFrame:
         from xgboost_ray_spark.ml.barrier import predict_proba_barrier
 
         return predict_proba_barrier(pickle.dumps(model), data, spec)
-    assembled, _ = assemble_features(data, spec, cluster=False, scoring=True)
+    assembled = assemble_features(data, spec, scoring=True)
     scored = model.transform(assembled)
     return scored.withColumn(
         "probability_arr", vector_to_array("probability")

@@ -73,7 +73,11 @@ def compiler_threads(cpus: int) -> int | None:
     with on ``cpus`` cpus: half of them, never below 2 (tiered HotSpot
     refuses to start with fewer). None where that would not lower the count
     HotSpot picks itself for ``cpus`` (JDK 17 ``CICompilerCountPerCPU``:
-    max(2, 3/2 * log2 n * log2 log2 n)); HotSpot then keeps its own."""
+    max(2, 3/2 * log2 n * log2 log2 n)); HotSpot then keeps its own.
+
+    The rule lowers the count at 4, 5 and 16–23 cpus. It was measured at
+    4 cpus only (2 threads for HotSpot's 3); at 5 and 16–23 cpus it
+    applies unmeasured."""
     log = cpus.bit_length() - 1
     hotspot = max(2, log * (max(log, 1).bit_length() - 1) * 3 // 2)
     count = max(2, cpus // 2)

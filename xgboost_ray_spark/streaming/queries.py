@@ -15,7 +15,6 @@ from xgboost_ray_spark.operators.profile import OUTLIER_FLAGS_SQL
 from xgboost_ray_spark.registry import dsum, register, sql_dsum
 from xgboost_ray_spark.streaming.windows import (
     WATERMARK,
-    read_events_stream,
     read_table_stream,
     run_stream_to_memory,
     stream_state_partitions,
@@ -40,7 +39,7 @@ from xgboost_ray_spark.streaming.windows import (
     tags=("streaming",),
 )
 def s25_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    agg = windowed_counts(read_events_stream(spark, sf_dir))
+    agg = windowed_counts(read_table_stream(spark, sf_dir, "events"))
     return run_stream_to_memory(agg, spark)
 
 
@@ -62,7 +61,9 @@ def s25_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming",),
 )
 def s25b_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    agg = windowed_counts(read_events_stream(spark, sf_dir), slide="30 minutes")
+    agg = windowed_counts(
+        read_table_stream(spark, sf_dir, "events"), slide="30 minutes"
+    )
     return run_stream_to_memory(agg, spark)
 
 
@@ -76,7 +77,9 @@ def s25b_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming",),
 )
 def s25c_stream_watermark_append(spark: SparkSession, sf_dir: str) -> DataFrame:
-    agg = windowed_counts(read_events_stream(spark, sf_dir), watermark=WATERMARK)
+    agg = windowed_counts(
+        read_table_stream(spark, sf_dir, "events"), watermark=WATERMARK
+    )
     return run_stream_to_memory(agg, spark, output_mode="append")
 
 
@@ -129,7 +132,7 @@ def s25f_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from xgboost_ray_spark.catalog import load_table
 
-    events = read_events_stream(spark, sf_dir)
+    events = read_table_stream(spark, sf_dir, "events")
     dim = (
         load_table(spark, sf_dir, "customer")
         .select("c_custkey", "c_nationkey")
@@ -200,7 +203,7 @@ def s25f_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def s25d_stateful_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     from xgboost_ray_spark.streaming.stateful import sessionize_stream
 
-    sessions = sessionize_stream(read_events_stream(spark, sf_dir))
+    sessions = sessionize_stream(read_table_stream(spark, sf_dir, "events"))
     return run_stream_to_memory(sessions, spark, output_mode="append")
 
 
@@ -226,7 +229,7 @@ def s25g_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     views = (
-        read_events_stream(spark, sf_dir)
+        read_table_stream(spark, sf_dir, "events")
         .filter(F.col("event_type") == "view")
         .select(
             F.col("event_id").alias("view_id"),
@@ -236,7 +239,7 @@ def s25g_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("view_ts", "1 hour")
     )
     purchases = (
-        read_events_stream(spark, sf_dir)
+        read_table_stream(spark, sf_dir, "events")
         .filter(F.col("event_type") == "purchase")
         .select(
             F.col("event_id").alias("purchase_id"),
@@ -279,7 +282,7 @@ def s25h_file_sink_etl(spark: SparkSession, sf_dir: str) -> DataFrame:
     from xgboost_ray_spark.streaming.windows import run_stream_to_files
 
     etl = (
-        read_events_stream(spark, sf_dir)
+        read_table_stream(spark, sf_dir, "events")
         .filter(F.col("event_type") == "purchase")
         .select(
             "event_id",
@@ -462,7 +465,7 @@ def s25j_stream_trending(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     agg = (
-        read_events_stream(spark, sf_dir)
+        read_table_stream(spark, sf_dir, "events")
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count("*").alias("n"))
         .select(F.col("w.start").alias("wstart"), "event_type", "n")
@@ -525,7 +528,9 @@ def s25j_stream_trending(spark: SparkSession, sf_dir: str) -> DataFrame:
 def s25k_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
-    ev = read_events_stream(spark, sf_dir).withWatermark("ts", WATERMARK)
+    ev = read_table_stream(spark, sf_dir, "events").withWatermark(
+        "ts", WATERMARK
+    )
     agg = (
         ev.groupBy(
             F.session_window("ts", "30 minutes").alias("sw"), "user_id"
@@ -575,7 +580,7 @@ def s25l_stream_outlier_guard(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("v").cast(DEC38).alias("s1"),
         F.sum(F.col("v").cast(DEC38) * F.col("v").cast(DEC38)).alias("s2"),
     )
-    stream = read_events_stream(spark, sf_dir).select(
+    stream = read_table_stream(spark, sf_dir, "events").select(
         "event_id", "event_type", "value", cents.alias("v")
     )
     flagged = (

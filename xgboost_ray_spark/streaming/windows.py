@@ -56,11 +56,6 @@ def read_table_stream(
     return normalize_event_ts(stream) if table == "events" else stream
 
 
-def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source replay of the events table with the batch schema."""
-    return read_table_stream(spark, sf_dir, "events")
-
-
 WINDOW = "1 hour"  # event-time window length of every windowed entry
 # Event-time watermark delay of every watermarked entry (s25c, s25d,
 # s25k); the s25d and s25k oracles spell it as 600000 ms.
